@@ -19,14 +19,12 @@ machinery.
 
 from __future__ import annotations
 
-import functools as _functools
 import random as _random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import fan_out, persist_scoped
-from .litutil import jvm_epoch
 from .text import shingles, stable_hash64
 
 # Row cap for the incremental family's BATCH-side broadcast hints (VERDICT
@@ -140,42 +138,17 @@ _PERMS: list[tuple[int, int]] = [
 _MASK32 = (1 << 32) - 1
 
 
-def _perm(h: Column, a: int, b: int) -> Column:
-    """One modular affine permutation of a 32-bit hash value."""
-    return F.pmod(F.lit(a) * h + F.lit(b), F.lit(_MERSENNE_P))
+def _minhash_aggs(k: int) -> list[Column]:
+    """The k MIN(perm(h)) aggregates over column ``h``, as SQL text.
 
-
-def minhash_signature(shingle_set: Column, k: int = 32) -> Column:
-    """k-permutation MinHash signature as an array<long> (expression form).
-
-    Hashes each shingle once (``xxhash64``), then applies k affine
-    permutations as integer arithmetic. For corpus-scale signature jobs
-    prefer :func:`minhash_signatures` (explode + hash-agg formulation).
-    """
-    hashes = F.transform(shingle_set, lambda s: F.xxhash64(s).bitwiseAND(F.lit(_MASK32)))
-    return F.array(
-        *[
-            F.coalesce(
-                F.array_min(F.transform(hashes, lambda h: _perm(h, a, b))),
-                F.lit(2**63 - 1),
-            )
-            for (a, b) in _PERMS[:k]
-        ]
-    )
-
-
-@_functools.lru_cache(maxsize=8)
-def _minhash_aggs(k: int, _epoch: int = -1) -> tuple:
-    """The k MIN(perm(h)) aggregate Columns, built once per process.
-
-    Column objects are unresolved expression trees independent of any
-    DataFrame, so the list is reusable across every signature plan; building
-    it fresh cost ~0.4 s of py4j round-trips per call (measured r16) and the
-    incremental operators construct several signature plans per arrival."""
-    return tuple(
-        F.min(_perm(F.col("h"), a, b)).alias(f"mh{j}")
+    One ``F.expr`` parse per aggregate instead of a py4j round trip per
+    Column node (for k=32 about 40 ms vs 0.2-0.3 s through the Column API
+    on a 4-vCPU host), cheap enough to build fresh for every plan; SQL
+    text holds no JVM references, so nothing outlives the query."""
+    return [
+        F.expr(f"min(pmod({a} * h + {b}, {_MERSENNE_P})) AS mh{j}")
         for j, (a, b) in enumerate(_PERMS[:k])
-    )
+    ]
 
 
 def minhash_signatures(
@@ -193,7 +166,7 @@ def minhash_signatures(
     hashes = sets_.select(
         F.col(id_col), F.explode("shingle_set").alias("shingle")
     ).select(id_col, F.xxhash64("shingle").bitwiseAND(F.lit(_MASK32)).alias("h"))
-    return hashes.groupBy(id_col).agg(*_minhash_aggs(k, _epoch=jvm_epoch()))
+    return hashes.groupBy(id_col).agg(*_minhash_aggs(k))
 
 
 def minhash_lsh_candidates(
@@ -209,7 +182,7 @@ def minhash_lsh_candidates(
     band pattern) automatically.
     """
     banded = sigs.select(
-        F.col(id_col), F.explode(_band_bucket_array(k, bands, _epoch=jvm_epoch())).alias("bucket")
+        F.col(id_col), F.explode(_band_bucket_array(k, bands)).alias("bucket")
     ).select(id_col, "bucket.band", "bucket.band_hash")
     a = banded.alias("a")
     b = banded.alias("b")
@@ -284,26 +257,18 @@ def minhash_near_duplicates(
 # --- cross-shard incremental dedup -------------------------------------------
 
 
-@_functools.lru_cache(maxsize=8)
-def _band_bucket_array(k: int, bands: int, _epoch: int = -1) -> Column:
-    """The banded (band, band_hash) struct-array Column over ``mh*``
-    signature columns, built once per process (same py4j-construction
-    amortization as :func:`_minhash_aggs`)."""
+def _band_bucket_array(k: int, bands: int) -> Column:
+    """The banded (band, band_hash) struct-array over the ``mh*``
+    signature columns, built as one SQL expression (see
+    :func:`_minhash_aggs`)."""
     rows_per_band = k // bands
-    return F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(
-                    *[
-                        F.col(f"mh{bi * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ]
-                ).alias("band_hash"),
-            )
-            for bi in range(bands)
-        ]
+    structs = ", ".join(
+        f"named_struct('band', {bi}, 'band_hash', xxhash64("
+        + ", ".join(f"mh{bi * rows_per_band + r}" for r in range(rows_per_band))
+        + "))"
+        for bi in range(bands)
     )
+    return F.expr(f"array({structs})")
 
 
 def band_buckets(sigs: DataFrame, id_col: str, k: int = 32, bands: int = 8) -> DataFrame:
@@ -313,7 +278,7 @@ def band_buckets(sigs: DataFrame, id_col: str, k: int = 32, bands: int = 8) -> D
     re-derive from signatures with two integer ops, so the store holds
     ONLY signatures and stays layout-free."""
     return sigs.select(
-        F.col(id_col), F.explode(_band_bucket_array(k, bands, _epoch=jvm_epoch())).alias("bucket")
+        F.col(id_col), F.explode(_band_bucket_array(k, bands)).alias("bucket")
     ).select(id_col, "bucket.band", "bucket.band_hash")
 
 
@@ -614,7 +579,7 @@ def incremental_candidates(
     Static vs dynamic pruning (r16 optimization, guide §2.4/§6): the
     r15 shape relied on runtime DPP injected by the broadcast probe,
     which required the batch lineage to stay RAW (Spark's cache
-    substitution swaps any sameResult subtree for an InMemoryRelation
+    substitution swaps any plan-equivalent subtree for an InMemoryRelation
     and the DPP rule then drops the pruning subquery — measured r15).
     Raw lineage re-ran the batch's shingle+minhash pass once per plan
     branch (~4x per arrival). The touched-partition list is tiny by
@@ -1342,39 +1307,32 @@ def near_duplicate_clusters(
 _LANE_MASK = 0x0001_0001_0001_0001
 
 
-@_functools.lru_cache(maxsize=4)
-def _simhash_lane_sums(_epoch: int = -1) -> tuple:
-    """The 16 SIMD-lane vote aggregates over column ``h`` — plan-independent
-    unresolved Columns, built once per process (the :func:`_minhash_aggs`
-    py4j-construction amortization; ~16 round-trips each)."""
-    return tuple(
-        F.sum(
-            F.shiftrightunsigned(F.col("h"), b).bitwiseAND(F.lit(_LANE_MASK))
-        ).alias(f"s{b}")
+def _simhash_lane_sums() -> list[Column]:
+    """The 16 SIMD-lane vote aggregates over column ``h``, as SQL text
+    (see :func:`_minhash_aggs`)."""
+    return [
+        F.expr(f"sum(shiftrightunsigned(h, {b}) & {_LANE_MASK}) AS s{b}")
         for b in range(16)
-    )
+    ]
 
 
-@_functools.lru_cache(maxsize=8)
-def _simhash_packed(n_bits: int, lanes: int, _epoch: int = -1) -> Column:
-    """The bit-vote repack expression over ``s0..s15``/``n`` — ~300 nested
-    Column ops per build, a pure function of (n_bits, lanes), cached once
-    per process."""
-    packed = F.lit(0).cast("long")
+def _simhash_packed(n_bits: int, lanes: int) -> Column:
+    """The bit-vote repack over ``s0..s15``/``n``: OR of one CASE per
+    signature bit, parsed from one SQL string (about 1 ms on a 4-vCPU
+    host) instead of ~300 py4j-built Column ops (0.5-1 s)."""
+    terms = ["0L"]
     for b in range(16):
         for k in range(lanes):
             bit = b + 16 * k
             if bit >= n_bits:
                 continue
-            s = F.shiftrightunsigned(F.col(f"s{b}"), 16 * k).bitwiseAND(F.lit(0xFFFF))
             # Bit 63 is the sign bit: its set-value is MIN_LONG, not 1<<63.
             bit_val = (1 << bit) if bit < 63 else -(1 << 63)
-            packed = packed.bitwiseOR(
-                F.when(2 * s > F.col("n"), F.lit(bit_val).cast("long")).otherwise(
-                    F.lit(0).cast("long")
-                )
+            terms.append(
+                f"CASE WHEN (shiftrightunsigned(s{b}, {16 * k}) & 65535) * 2 > n "
+                f"THEN {bit_val}L ELSE 0L END"
             )
-    return packed
+    return F.expr(" | ".join(terms))
 
 
 def simhash(
@@ -1416,10 +1374,10 @@ def simhash(
         ).alias("token"),
     ).withColumn("h", hash_fn(F.col("token")))
     votes = toks.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n"), *_simhash_lane_sums(jvm_epoch())
+        F.count(F.lit(1)).alias("n"), *_simhash_lane_sums()
     )
     return votes.select(
-        F.col(id_col), _simhash_packed(n_bits, lanes, _epoch=jvm_epoch()).alias("simhash")
+        F.col(id_col), _simhash_packed(n_bits, lanes).alias("simhash")
     )
 
 

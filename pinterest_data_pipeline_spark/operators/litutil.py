@@ -21,7 +21,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _render(v) -> str:
+def array_sql(v) -> str:
+    """SQL text of a (nested) int/float array literal, for embedding in a
+    larger ``F.expr`` string."""
     if isinstance(v, bool):
         raise TypeError("fast_array_literal: booleans unsupported")
     if isinstance(v, int):
@@ -29,7 +31,7 @@ def _render(v) -> str:
     if isinstance(v, float):
         return repr(v) + "D"
     if isinstance(v, (list, tuple)):
-        return "array(" + ",".join(_render(x) for x in v) + ")"
+        return "array(" + ",".join(array_sql(x) for x in v) + ")"
     raise TypeError(f"fast_array_literal: unsupported element {type(v)}")
 
 
@@ -37,37 +39,5 @@ def fast_array_literal(nested: list) -> Column:
     """One-call (nested) array literal of ints (-> bigint) / floats
     (-> double), bit-identical to ``F.lit(nested)`` but ~300x cheaper to
     construct for thousand-element arrays."""
-    return F.expr(_render(nested))
+    return F.expr(array_sql(nested))
 
-
-def jvm_epoch() -> int:
-    """Identity token of the live SparkContext, for Column-cache keys.
-
-    The expression-list ``lru_cache``s (MinHash aggs, SimHash lanes,
-    multi-table LSH keys) hold JVM-bound Column objects; after a
-    SparkContext stop/restart in the same process a cached entry holds
-    stale py4j references and every later call with the same
-    configuration fails (ADVICE r16). Passing this token as a cache-key
-    argument makes a restarted context miss the old entries instead.
-    Tokens come from a never-reused counter keyed weakly on the context
-    object (``id()`` alone can be recycled after GC). Returns -1 when no
-    context is alive (the entry built next binds whatever context the
-    first call creates).
-    """
-    from pyspark import SparkContext
-
-    sc = SparkContext._active_spark_context
-    if sc is None:
-        return -1
-    tok = _JVM_EPOCHS.get(sc)
-    if tok is None:
-        tok = next(_JVM_EPOCH_COUNTER)
-        _JVM_EPOCHS[sc] = tok
-    return tok
-
-
-import itertools as _itertools
-import weakref as _weakref
-
-_JVM_EPOCHS: "_weakref.WeakKeyDictionary" = _weakref.WeakKeyDictionary()
-_JVM_EPOCH_COUNTER = _itertools.count()

@@ -2,7 +2,7 @@
 
 Media travel as opaque ``binary`` columns plus a typed metadata struct —
 content-addressed by sha256 so exact dedup, caching, and lineage work on
-byte identity without decoding. Decode / feature-extraction / resize /
+byte identity without decoding. Decode / feature-extraction /
 frame-sampling run as Arrow-batched ``mapInPandas`` operators: one Python
 worker per partition processes whole record batches (never row-at-a-time),
 and the output schema is declared up front so Catalyst can plan around the
@@ -54,14 +54,6 @@ def content_address(df: DataFrame, binary_col: str = "content") -> DataFrame:
     return df.withColumn("content_id", F.sha2(F.col(binary_col), 256))
 
 
-def real_image_decoder(data: bytes) -> dict[str, Any]:
-    """Placeholder for a PIL-backed decoder — not available in this env."""
-    raise NotImplementedError(
-        "Image codecs (PIL/opencv) are not installed in this environment; "
-        "pass fake_image_decoder or provide a real decoder callable."
-    )
-
-
 def fake_image_decoder(data: bytes) -> dict[str, Any]:
     """Deterministic stand-in decoder: features derived from the bytes."""
     h = hashlib.sha256(data).digest()
@@ -108,14 +100,6 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def real_audio_decoder(data: bytes) -> dict[str, Any]:
-    """Placeholder for a librosa/soundfile-backed decoder — not in this env."""
-    raise NotImplementedError(
-        "Audio codecs (librosa/soundfile) are not installed in this "
-        "environment; pass fake_audio_decoder or a real decoder callable."
-    )
-
-
 def fake_audio_decoder(data: bytes) -> dict[str, Any]:
     """Deterministic stand-in decoder: features derived from the bytes."""
     h = hashlib.sha256(data).digest()
@@ -158,14 +142,6 @@ VIDEO_METADATA_SCHEMA = T.StructType(
         T.StructField("height", T.IntegerType()),
     ]
 )
-
-
-def real_video_decoder(data: bytes) -> dict[str, Any]:
-    """Placeholder for an ffmpeg/pyav-backed prober — not in this env."""
-    raise NotImplementedError(
-        "Video codecs (ffmpeg/pyav) are not installed in this environment; "
-        "pass fake_video_decoder or a real decoder callable."
-    )
 
 
 def fake_video_decoder(data: bytes) -> dict[str, Any]:
@@ -221,15 +197,3 @@ def sample_video_frames(
         ).alias("frame_ts_ms"),
     )
 
-
-def resize_plan(
-    df: DataFrame, target_w: int, target_h: int, binary_col: str = "content"
-) -> DataFrame:
-    """Resize stub: records the target geometry next to the payload.
-
-    A real implementation swaps the identity transfer for a decoder call
-    inside the same mapInPandas shape as ``extract_image_features``.
-    """
-    return df.withColumn("target_width", F.lit(target_w)).withColumn(
-        "target_height", F.lit(target_h)
-    )

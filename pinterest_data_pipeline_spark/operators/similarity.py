@@ -19,14 +19,13 @@ literal arrays — every run and every engine sees identical planes.
 
 from __future__ import annotations
 
-import functools as _functools
 import random
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .litutil import fast_array_literal, jvm_epoch
+from .litutil import array_sql, fast_array_literal
 
 
 def _stack_vectors(series: pd.Series, dim: int | None, ctx: str):
@@ -380,7 +379,7 @@ def lsh_topk_multitable(
     registered query), and at 100 TB it is the difference between one
     corpus pass and sixteen. No all-pairs stage anywhere.
     """
-    keys = _multitable_keys(n_planes, dim, n_tables, seed, vec_col, _epoch=jvm_epoch())
+    keys = _multitable_keys(n_planes, dim, n_tables, seed, vec_col)
     bucketed = corpus.select(
         F.col(id_col), F.explode(keys).alias("tb")
     ).select(id_col, F.col("tb.tbl").alias("tbl"), F.col("tb.bucket").alias("bucket"))
@@ -418,16 +417,11 @@ def _hyperplanes(n_planes: int, dim: int, seed: int = 1234) -> list[list[float]]
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-@_functools.lru_cache(maxsize=64)
 def _multitable_keys(
-    n_planes: int, dim: int, n_tables: int, seed: int, vec_col: str, _epoch: int = -1
+    n_planes: int, dim: int, n_tables: int, seed: int, vec_col: str
 ) -> Column:
-    """Cached (tbl, bucket)-keys expression for the multi-table LSH scan —
-    a pure function of its scalar parameters over the fixed ``vec_col``
-    name, so one unresolved Column tree serves every corpus/query frame
-    and every repeat call (the r16 MinHash/SimHash expression-caching
-    discipline: Columns are plan-independent expression trees; sharing
-    one cannot change any result — plans are byte-identical).
+    """The (tbl, bucket)-keys expression for the multi-table LSH scan,
+    built as ONE SQL string and parsed JVM-side in one call.
 
     ALL planes ship as ONE nested literal (array<array<array<double>>>,
     a single Literal node) and the per-table buckets are computed inside
@@ -435,34 +429,24 @@ def _multitable_keys(
     subtrees instead of n_tables * n_planes — at 16x3 that cut first-run
     analysis/compile from ~4 s to well under a second on the registered
     query with BIT-IDENTICAL results (same dot fold order, same plane
-    doubles, same bucket strings; the certification floor and oracle are
-    untouched). fast_array_literal: F.lit on this 16x3x64 nested list
-    costs ~3 s of py4j round trips (it WAS the query's warm build cost);
-    the SQL-text construction lands on the bit-identical Literal in
-    ~10 ms. Building the transform lambda itself still costs ~0.4 s of
-    py4j (_create_lambda round-trips), paid twice per build before this
-    cache (r16 measurement) — now once per configuration per process.
+    doubles, same bucket strings). Built through the Column API the
+    lambda cost one py4j round trip per node; the SQL text costs one
+    parse. The dot fold starts from ``0.0D``, a double like
+    :func:`dot`'s ``F.lit(0.0)`` (SQL ``0.0`` is a decimal).
     """
     all_planes = [
         _hyperplanes(n_planes, dim, seed + 1000 * t) for t in range(n_tables)
     ]
-    planes_lit = fast_array_literal(
-        [[list(map(float, p)) for p in tbl] for tbl in all_planes]
+    planes = array_sql([[list(map(float, p)) for p in tbl] for tbl in all_planes])
+    vec = f"transform(`{vec_col}`, e -> CAST(e AS DOUBLE))"
+    bits = ", ".join(
+        f"CASE WHEN aggregate(zip_with({vec}, tp[{p}], (x, y) -> x * y), 0.0D, "
+        "(acc, v) -> acc + v) >= 0 THEN '1' ELSE '0' END"
+        for p in range(n_planes)
     )
-    vec = as_double(F.col(vec_col))
-    return F.transform(
-        planes_lit,
-        lambda tbl_planes, t: F.struct(
-            t.alias("tbl"),
-            F.concat(
-                *[
-                    F.when(dot(vec, tbl_planes[p]) >= 0, F.lit("1")).otherwise(
-                        F.lit("0")
-                    )
-                    for p in range(n_planes)
-                ]
-            ).alias("bucket"),
-        ),
+    return F.expr(
+        f"transform({planes}, (tp, t) -> "
+        f"named_struct('tbl', t, 'bucket', concat({bits})))"
     )
 
 

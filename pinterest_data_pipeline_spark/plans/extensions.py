@@ -3893,32 +3893,17 @@ def events_ab_chisquare(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   mann-whitney  tie term sum(t^3 - t) <= n^3 (fully-tied sample) -> ~2.09e6
 # (quality_ks_two_sample is exempt by construction: its CDFs divide each
 # cumulative count FIRST, so it never forms an integer product.)
-# The guard counts the base table ONCE (parquet metadata count, memoized
-# per directory) and promotes the moment arithmetic to decimal(38,0) —
-# exact to 1e38, covering n up to ~3e9 even for the quartic Spearman
-# terms — or raises when SPARK_GRAFT_STAT_OVERFLOW=raise (for clusters
-# that prefer failing fast over the decimal aggregation cost).
+# The guard counts the base table on every call (a parquet metadata
+# count) and promotes the moment arithmetic to decimal(38,0) — exact to
+# 1e38, covering n up to ~3e9 even for the quartic Spearman terms.
 
-_STAT_OVERFLOW_ENV = "SPARK_GRAFT_STAT_OVERFLOW"  # "promote" (default) | "raise"
-_STAT_FORCE_PROMOTE_ENV = "SPARK_GRAFT_STAT_FORCE_PROMOTE"  # tests: "1"
 _STAT_CEILING_SPEARMAN = 50_000
 _STAT_CEILING_KENDALL = 3_000_000_000
 _STAT_CEILING_MANN_WHITNEY = 2_000_000
-_ROWCOUNT_MEMO: dict[tuple[str, str, str], int] = {}
-# Bound on distinct (sf_dir, table, fingerprint) keys (VERDICT r16 item 7):
-# same-table regenerations already evict their older fingerprints below,
-# but a long-lived session visiting many DIRECTORIES (a sweep over
-# per-tenant datasets) would otherwise grow the memo without limit.
-# FIFO eviction — dict preserves insertion order, each entry is one int.
-_ROWCOUNT_MEMO_CAP = 64
 
 
 def _stat_sum_type(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    ceiling: int,
-    query_name: str,
+    spark: SparkSession, sf_dir: str, table: str, ceiling: int
 ) -> str:
     """Return the SQL type for a pair-statistic's exact integer sums.
 
@@ -3929,38 +3914,8 @@ def _stat_sum_type(
     count) so the decision never needs a data scan; promotion a little
     early is exactness at a small cost, never an error.
     """
-    # the memo key carries the parquet's size/mtime fingerprint (ADVICE
-    # r14): a table regenerated or grown within a live session re-counts
-    # instead of serving a stale 'long' verdict past the real ceiling
-    key = (
-        sf_dir,
-        table,
-        _dir_fingerprint(os.path.join(sf_dir, table + ".parquet")),
-    )
-    n = _ROWCOUNT_MEMO.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, table).count()
-        # a regenerated table supersedes its older fingerprints — evict
-        # them so a long-lived session that rewrites tables doesn't
-        # accumulate stale (sf_dir, table, fp) rows (ADVICE r15)
-        for stale in [
-            k for k in _ROWCOUNT_MEMO if k[:2] == key[:2] and k != key
-        ]:
-            del _ROWCOUNT_MEMO[stale]
-        _ROWCOUNT_MEMO[key] = n
-        while len(_ROWCOUNT_MEMO) > _ROWCOUNT_MEMO_CAP:
-            del _ROWCOUNT_MEMO[next(iter(_ROWCOUNT_MEMO))]
-    if os.environ.get(_STAT_FORCE_PROMOTE_ENV) == "1":
-        return "decimal(38,0)"
-    if n <= ceiling:
+    if load_table(spark, sf_dir, table).count() <= ceiling:
         return "long"
-    if os.environ.get(_STAT_OVERFLOW_ENV, "promote") == "raise":
-        raise ArithmeticError(
-            f"{query_name}: base table {table!r} has {n} rows, above the "
-            f"int64 worst-case ceiling of {ceiling} for this statistic's "
-            f"exact integer sums; unset {_STAT_OVERFLOW_ENV}=raise to "
-            "promote the moment arithmetic to decimal(38,0) instead"
-        )
     return "decimal(38,0)"
 
 
@@ -5139,9 +5094,7 @@ def quality_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows crashes unguarded). t == "long" below the ceiling keeps the
     # plan identical (redundant casts elided); above it every moment sum
     # runs in decimal(38,0), exact to n ~ 3e9 even for the quartic terms.
-    t = _stat_sum_type(
-        spark, sf_dir, "part", _STAT_CEILING_SPEARMAN, "quality_spearman_corr"
-    )
+    t = _stat_sum_type(spark, sf_dir, "part", _STAT_CEILING_SPEARMAN)
     m = ranked.agg(
         F.count(F.lit(1)).cast(t).alias("n"),
         F.sum(F.col("r2_x").cast(t)).alias("sx"),
@@ -5498,13 +5451,7 @@ def quality_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n^3 on a fully-tied sample — ANSI long arithmetic throws past
     # ~2.09e6 rows in that worst case; above the (conservative,
     # unfiltered-table) ceiling the tie/rank sums run in decimal(38,0)
-    t = _stat_sum_type(
-        spark,
-        sf_dir,
-        "orders",
-        _STAT_CEILING_MANN_WHITNEY,
-        "quality_mann_whitney_u",
-    )
+    t = _stat_sum_type(spark, sf_dir, "orders", _STAT_CEILING_MANN_WHITNEY)
     cnt_t = F.col("cnt").cast(t)
     tie = rank_tab.agg(
         F.sum(cnt_t * cnt_t * cnt_t - cnt_t).cast(t).alias("tie_sum")
@@ -7695,19 +7642,9 @@ def dedup_linkage_fs_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fs_linkage_weights(spark, sf_dir)
 
 
-# auto-strategy memo: (sf_dir, data fingerprint, threshold) -> "coarse"
-# | "fine". Planner statistics, not results — a stale choice is
-# correctness-safe (coarse is exact, fine is guarded) but slower, so the
-# key carries a cheap mtime/size fingerprint of part.parquet (ADVICE
-# r12, mirroring check_parity's cache discipline): rewriting the data at
-# a path re-probes instead of reusing the old plan choice.
-_FS_PLANNER_CACHE: dict[tuple[str, str, float], str] = {}
-
-
 def _dir_fingerprint(p: str) -> str:
-    """mtime/size fingerprint of a parquet file or directory — the cheap
-    cache-key discipline shared by the FS planner memo and the
-    incremental-dedup store (rewriting the data re-probes/rebuilds)."""
+    """mtime/size fingerprint of a parquet file or directory — the
+    incremental-dedup store's cache key (rewriting the data rebuilds)."""
     import os as _os
 
     try:
@@ -7721,11 +7658,6 @@ def _dir_fingerprint(p: str) -> str:
         return f"{st.st_size}:{st.st_mtime_ns}"
     except OSError:
         return "absent"
-
-
-def _part_fingerprint(sf_dir: str) -> str:
-    """mtime/size fingerprint of part.parquet (file or directory)."""
-    return _dir_fingerprint(os.path.join(sf_dir, "part.parquet"))
 
 
 def _cached_store(
@@ -7845,27 +7777,19 @@ def fs_linkage_weights(
     if strategy not in ("auto", "coarse", "fine"):
         raise ValueError(f"unknown blocking strategy: {strategy!r}")
     if strategy == "auto":
-        cache_key = (sf_dir, _part_fingerprint(sf_dir), fine_block_threshold)
-        strategy = _FS_PLANNER_CACHE.get(cache_key)
-        if strategy is None:
-            # Planner probe: ONE bounded 1-row collect (repo collect
-            # discipline) — row count plus approximate block count over
-            # two dictionary-encoded columns. At 100 TB this is a
-            # column-pruned linear scan run once per INPUT (memoized per
-            # table path, the statistics-cache discipline of any CBO),
-            # the price of not enumerating B^2 pairs with the wrong
-            # plan. Measured ~0.5 s of job overhead per probe at sf0.1.
-            probe = parts.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct(
-                    F.concat_ws("\x1f", "p_brand", "p_size")
-                ).alias("blocks"),
-            ).first()
-            avg_block = probe["n"] / max(probe["blocks"], 1)
-            strategy = (
-                "fine" if avg_block > fine_block_threshold else "coarse"
-            )
-            _FS_PLANNER_CACHE[cache_key] = strategy
+        # Planner probe: ONE bounded 1-row collect (repo collect
+        # discipline) — row count plus approximate block count over two
+        # dictionary-encoded columns. At 100 TB this is a column-pruned
+        # linear scan per call, the price of not enumerating B^2 pairs
+        # with the wrong plan. Measured ~0.14 s per probe at sf0.1.
+        probe = parts.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.approx_count_distinct(
+                F.concat_ws("\x1f", "p_brand", "p_size")
+            ).alias("blocks"),
+        ).first()
+        avg_block = probe["n"] / max(probe["blocks"], 1)
+        strategy = "fine" if avg_block > fine_block_threshold else "coarse"
 
     a = parts.alias("a")
     b = parts.alias("b")
@@ -8628,9 +8552,7 @@ def quality_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past ~3.03e9 rows; above the ceiling all pair/tie arithmetic runs
     # in decimal(38,0) (the grid is ~650 cells, so the decimal tax is
     # confined to a broadcast-sized frame)
-    t = _stat_sum_type(
-        spark, sf_dir, "part", _STAT_CEILING_KENDALL, "quality_kendall_tau"
-    )
+    t = _stat_sum_type(spark, sf_dir, "part", _STAT_CEILING_KENDALL)
     # ONE data pass: everything downstream (pair sums, marginal ties,
     # the total) derives from the persisted bounded grid — without the
     # persist each consumer branch re-plans the full part scan

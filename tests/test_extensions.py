@@ -208,22 +208,6 @@ def test_cluster_pairs_reliable_checkpoint(spark, tmp_path):
     assert any(ckpt.rglob("*")), "no checkpoint files written"
 
 
-def test_column_caches_keyed_on_context_epoch(spark):
-    """ADVICE r16 (low): the lru_cached Column builders hold JVM-bound
-    objects; a SparkContext restart in-process must MISS the old entries
-    (stale py4j refs) instead of returning them. The epoch token is a
-    cache-key argument: same epoch -> same cached tree, different epoch
-    -> a fresh build; and the live token is stable for a live context."""
-    from pinterest_data_pipeline_spark.operators import similarity
-    from pinterest_data_pipeline_spark.operators.litutil import jvm_epoch
-
-    a = similarity._multitable_keys(3, 4, 2, 7, "vec", _epoch=101)
-    again = similarity._multitable_keys(3, 4, 2, 7, "vec", _epoch=101)
-    fresh = similarity._multitable_keys(3, 4, 2, 7, "vec", _epoch=102)
-    assert a is again and a is not fresh
-    assert jvm_epoch() == jvm_epoch() != -1
-
-
 def test_near_duplicate_clusters_keep_decision(docs):
     out = {r.doc_id: (r.cluster_id, r.keep) for r in
            dedup.near_duplicate_clusters(docs, "text", "doc_id", threshold=0.5).collect()}

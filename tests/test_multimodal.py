@@ -40,12 +40,6 @@ def test_extract_image_features_schema_and_determinism(media):
         assert 64 <= r.width < 256 and r.n_channels in (1, 3)
 
 
-def test_real_decoder_raises_clearly(media):
-    with pytest.raises(Exception) as e:
-        multimodal.extract_image_features(media, decoder=multimodal.real_image_decoder).collect()
-    assert "not installed" in str(e.value) or "NotImplementedError" in str(e.value)
-
-
 def test_extract_audio_features_schema_and_determinism(media):
     feats = multimodal.extract_audio_features(media)
     assert [f.name for f in feats.schema.fields] == [

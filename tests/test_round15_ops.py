@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.operators import dedup
 from pinterest_data_pipeline_spark.plans.extensions import load_documents
-from pinterest_data_pipeline_spark.session import release_scoped
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -144,10 +143,6 @@ def test_incremental_cluster_update_broadcast_guard_both_sides(spark):
     plan_under = under._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastExchange" in plan_under
 
-    # drop the under-cap run's scoped caches: persist_scoped would hand the
-    # over-cap run the SAME cached frames (hints don't change sameResult)
-    # and their printed lineage still contains the old broadcast plan
-    release_scoped()
     with _no_auto_broadcast(spark):
         over = dedup.incremental_cluster_update(
             clusters, new_pairs, driver_cc_cap=0, batch_broadcast_cap=0
@@ -472,7 +467,6 @@ def test_pruned_bucket_store_decisions_match_sig_store(spark, tmp_path):
         threshold=0.3,
     )
     rows_sig = _rows(d_sig)
-    release_scoped()  # distinct lineage: don't reuse the sig-store cands
     d_bkt, _ = dedup.incremental_minhash_dedup(
         batch, None, store_docs, "text", "doc_id", threshold=0.3,
         store_buckets=spark.read.parquet(bkt_path),

@@ -494,33 +494,6 @@ def test_bucket_store_meta_sidecar(spark, tmp_path):
         dedup.open_bucket_store(spark, path)
 
 
-def test_rowcount_memo_evicts_superseded_fingerprints(spark):
-    """ADVICE r15: when a table's fingerprint changes (regenerated data),
-    inserting the fresh count evicts the superseded (sf_dir, table, fp)
-    entries — a long-lived session that rewrites tables doesn't leak memo
-    rows. Other tables' entries are untouched."""
-    from pinterest_data_pipeline_spark.plans import extensions
-
-    key = (
-        SF001,
-        "part",
-        extensions._dir_fingerprint(os.path.join(SF001, "part.parquet")),
-    )
-    extensions._ROWCOUNT_MEMO.clear()
-    extensions._ROWCOUNT_MEMO[(SF001, "part", "stale-fp-1")] = 1
-    extensions._ROWCOUNT_MEMO[(SF001, "part", "stale-fp-2")] = 2
-    other = (SF001, "orders", "some-fp")
-    extensions._ROWCOUNT_MEMO[other] = 3
-    extensions._stat_sum_type(
-        spark, SF001, "part", extensions._STAT_CEILING_SPEARMAN, "t"
-    )
-    assert key in extensions._ROWCOUNT_MEMO
-    assert (SF001, "part", "stale-fp-1") not in extensions._ROWCOUNT_MEMO
-    assert (SF001, "part", "stale-fp-2") not in extensions._ROWCOUNT_MEMO
-    assert extensions._ROWCOUNT_MEMO[other] == 3
-    extensions._ROWCOUNT_MEMO.clear()
-
-
 # --- streaming arrival paths: IVF upsert + KMV merge (r15 item 2) ------------
 
 

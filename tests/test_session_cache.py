@@ -1,7 +1,6 @@
-"""persist_scoped semantics: warm reuse on identical plans, eviction only on
-plan change, eager release. Guards the r3 regression where every call evicted
-the previous generation and repeat runs (bench min-of-N) recomputed the full
-lineage cold."""
+"""Session-level state: persist_scoped generations, eager release, view
+registration, load_table's per-session plan memo, and the input-sized
+shuffle partition count."""
 
 from __future__ import annotations
 
@@ -12,15 +11,6 @@ from pinterest_data_pipeline_spark import session as S
 
 def _frame(spark, n):
     return spark.range(n).withColumn("x", F.col("id") * 2)
-
-
-def test_identical_plan_reuses_cached_generation(spark):
-    a = S.persist_scoped(_frame(spark, 10), "t_reuse")
-    assert a.is_cached
-    b = S.persist_scoped(_frame(spark, 10), "t_reuse")
-    assert b is a, "canonically identical plan must return the live cache"
-    assert a.is_cached
-    S.release_scoped("t_reuse")
 
 
 def test_changed_plan_evicts_previous_generation(spark):
@@ -40,12 +30,9 @@ def test_release_all_scopes(spark):
     assert not a.is_cached and not b.is_cached
 
 
-def test_register_views_memoizes_and_reswitches_dirs(spark):
-    """register_views is a no-op when the session already has THIS dir's
-    views (16 SQL-path queries call it per build; the 10 schema reads cost
-    ~1.4 s per call), but switching directories re-registers and switching
-    BACK re-registers again — the memo must never leave views pointing at
-    the previously registered directory."""
+def test_register_views_switches_dirs(spark):
+    """Switching directories re-registers and switching BACK re-registers
+    again: the views always point at the last directory registered."""
     S.register_views(spark, "/root/testdata/sf0.001")
     n_small = spark.table("orders").count()
     S.register_views(spark, "/root/testdata/sf0.01")
@@ -53,11 +40,6 @@ def test_register_views_memoizes_and_reswitches_dirs(spark):
     assert n_big > n_small
     S.register_views(spark, "/root/testdata/sf0.001")
     assert spark.table("orders").count() == n_small
-    # a fresh catalog (newSession shares the appId but not temp views)
-    # registers from scratch rather than trusting the parent's memo entry
-    ns = spark.newSession()
-    S.register_views(ns, "/root/testdata/sf0.001")
-    assert ns.table("orders").count() == n_small
 
 
 def test_load_table_memoizes_lazy_plan_per_session_and_dir(spark):
@@ -77,23 +59,12 @@ def test_load_table_memoizes_lazy_plan_per_session_and_dir(spark):
     assert d.count() == a.count()
 
 
-def test_rowcount_memo_bounded(spark):
-    """VERDICT r16 item 7: the row-count memo must not grow without bound
-    in a long-lived session sweeping many directories — FIFO eviction
-    keeps it at the cap while the fresh entry stays resident."""
-    from pinterest_data_pipeline_spark.plans import extensions as ext
-
-    saved = dict(ext._ROWCOUNT_MEMO)
-    try:
-        ext._ROWCOUNT_MEMO.clear()
-        for i in range(ext._ROWCOUNT_MEMO_CAP):
-            ext._ROWCOUNT_MEMO[(f"/fake/dir{i}", "t", f"fp{i}")] = i
-        ext._stat_sum_type(
-            spark, "/root/testdata/sf0.001", "orders", 10**12, "memo_probe"
-        )
-        assert len(ext._ROWCOUNT_MEMO) <= ext._ROWCOUNT_MEMO_CAP
-        assert any(k[0] == "/root/testdata/sf0.001" for k in ext._ROWCOUNT_MEMO)
-        assert ("/fake/dir0", "t", "fp0") not in ext._ROWCOUNT_MEMO  # FIFO victim
-    finally:
-        ext._ROWCOUNT_MEMO.clear()
-        ext._ROWCOUNT_MEMO.update(saved)
+def test_derived_shuffle_partitions_sizes_from_input(monkeypatch, tmp_path):
+    """No input bytes -> the cores floor; a small input -> one partition
+    per MIN_TASK_BYTES (2 MiB), rounded up, whatever the core count."""
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", str(tmp_path))
+    assert S.derived_shuffle_partitions(32) == 32
+    size = 5 * 1024**2 + 1
+    with open(tmp_path / "t.parquet", "wb") as fh:
+        fh.truncate(size)
+    assert S.derived_shuffle_partitions(32) == -(-size // (2 * 1024**2)) == 3

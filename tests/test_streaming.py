@@ -312,58 +312,6 @@ def test_checkpoint_makes_restart_idempotent(spark, tmp_path):
     assert spark.read.parquet(f"{out}/pin").count() == n_distinct
 
 
-def test_transform_with_state_matches_v1_semantics(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas twin: same running totals as the
-    applyInPandasWithState operator, accumulated across two drains.
-
-    The transformWithState Python state server speaks protobuf; this
-    container has no google.protobuf, so the test self-skips here and runs
-    wherever the dependency exists (it ships with real Spark clusters)."""
-    pytest.importorskip("google.protobuf")
-    from pinterest_data_pipeline_spark.streaming.stateful_v2 import (
-        ROCKSDB_PROVIDER_CONF,
-        running_user_totals_v2,
-    )
-
-    for k, v in ROCKSDB_PROVIDER_CONF.items():
-        spark.conf.set(k, v)
-    try:
-        src = str(tmp_path / "src")
-        ckpt = str(tmp_path / "ckpt")
-        out = str(tmp_path / "out")
-        schema = "user_id long, value double"
-
-        def run_batch(rows, run_tag):
-            spark.createDataFrame(rows, schema).write.mode("append").parquet(src)
-            q = (
-                running_user_totals_v2(spark.readStream.schema(schema).parquet(src))
-                .withColumn("run_tag", F.lit(run_tag))
-                .writeStream.foreachBatch(
-                    lambda batch, _id: batch.write.mode("append").parquet(out)
-                )
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            return {
-                r.user_id: (r.n_events, r.total_value)
-                for r in spark.read.parquet(out)
-                .filter(F.col("run_tag") == run_tag)
-                .collect()
-            }
-
-        first = run_batch([(1, 2.0), (1, 3.0), (2, 10.0)], 1)
-        assert first[1] == (2, 5.0) and first[2] == (1, 10.0)
-        second = run_batch([(1, 1.0), (3, 7.0)], 2)
-        assert second[1] == (3, 6.0)  # state survived the restart
-        assert second[3] == (1, 7.0)
-        assert 2 not in second  # untouched key not re-emitted in update mode
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     """Stream-stream attribution join (two file-source streams) must emit
     exactly the batch dual's rows once both watermarks pass."""
