@@ -7,7 +7,7 @@ where built-ins cannot express the semantics (similarity kernels, multimodal
 decode). See SURVEY.md for the operator inventory this package implements.
 
 Layout:
-    session    - SparkSession builder tuned for local[32] tests / cluster scale
+    session    - SparkSession builder: local[<affinity cores>] by default / cluster scale
     schemas    - explicit StructTypes (no schema inference on the hot path)
     operators/ - cleaning, dedup, similarity, text, multimodal operator library
     sources/   - batch landing-dir readers + synthetic raw-entity generators

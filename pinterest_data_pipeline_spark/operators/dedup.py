@@ -451,6 +451,10 @@ def bucket_store_compact(
     n_leaves_rewritten)``; the compacted store answers IDENTICAL
     decisions (driver-checked via the exhaustive dual — layout never
     changes answers).
+
+    ``store_path`` must be on a local POSIX filesystem: the leaf listing
+    and the per-leaf row counts (parquet footers) go through local
+    ``glob`` paths, and the swap relies on POSIX renames.
     """
     import glob as _glob
     import math as _math
@@ -1064,9 +1068,18 @@ def cluster_pairs(
             eager=False
         )
 
+    # both directions from ONE scan of the pair lineage (a two-arm union
+    # would run the LSH join + verify behind `pairs` once per arm)
     edges = persist_scoped(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+                    F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
         .distinct(),
         "cluster_edges",
     )

@@ -24,9 +24,10 @@ its arguments and session on every call:
 * ``plans.extensions._cached_store`` work directories: on disk, rebuilt when
   the source parquet's size/mtime fingerprint or the build parameters change.
 
-Environment variables read: ``SPARK_GRAFT_CPUS`` (local core count, default
-32), ``SPARK_GRAFT_SF_DIR`` (input directory that sizes the shuffle
-partitions) and ``SPARK_GRAFT_DRIVER_MEM`` (driver heap, default 8g).
+Environment variables read: ``SPARK_GRAFT_SF_DIR`` (input directory that
+sizes the shuffle partitions) and ``SPARK_GRAFT_DRIVER_MEM`` (driver heap,
+default 8g). The local core count is the process's CPU affinity count unless
+``get_spark(cpus=...)`` says otherwise.
 """
 
 from __future__ import annotations
@@ -35,7 +36,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # sizing constants of derived_shuffle_partitions (see its docstring)
 MIN_TASK_BYTES = 2 * 1024**2
 TARGET_PARTITION_BYTES = 128 * 1024**2
@@ -82,8 +82,7 @@ def derived_shuffle_partitions(cpus: int) -> int:
       count grows as bytes/target (e.g. 100 TB -> ~800k partitions), the
       textbook cluster posture.
     * Small data (sf0.1: 17.5 MB -> 9 partitions) gets the same count at
-      ANY core count, so the driver's 8-core scaling run measures core
-      scaling, not a partitioning constant tuned to one master.
+      ANY core count.
 
     Deployments that know their shuffle volume set
     ``spark.sql.shuffle.partitions`` through ``get_spark(extra_conf=...)``;
@@ -110,8 +109,15 @@ def get_spark(
     In local mode the driver is the whole cluster, so ``spark.driver.memory``
     is the only memory knob. On a real cluster the same conf names apply;
     nothing here is local-mode-specific except the master URL.
+
+    ``cpus`` defaults to the CPUs this process may run on
+    (``os.sched_getaffinity``). ``spark.sql.shuffle.partitions`` comes from
+    :func:`derived_shuffle_partitions`, which sizes every shuffle from the
+    directory in ``SPARK_GRAFT_SF_DIR`` at session build, not from the
+    directory a query is later given; a session that queries other data
+    keeps that count unless ``extra_conf`` sets it.
     """
-    n = cpus or DEFAULT_CPUS
+    n = cpus or len(os.sched_getaffinity(0))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{n}]")
@@ -256,14 +262,14 @@ def persist_scoped(df, scope: str):
     Operators persist small intermediate frames (LSH candidate pairs, SimHash
     chunk signatures) that are consumed lazily by the DataFrame they return,
     so they cannot unpersist before returning. A bare ``persist()`` there
-    leaks one cached frame per call for the session lifetime — the 50-query
-    driver plus bench runs accumulate executor storage. This helper
+    leaks one cached frame per call for the session lifetime — a long
+    query battery accumulates executor storage. This helper
     unpersists the PREVIOUS frame registered under the same scope before
     persisting the new one, capping storage at one generation per call site.
 
     Unpersisting never breaks correctness: a still-held older result simply
     recomputes its lineage. ``release_scoped`` drops a scope eagerly once a
-    caller has fully materialized the result (bench.py calls it between
+    caller has fully materialized the result (perfbench calls it between
     queries; the pytest session fixture calls it at teardown).
     """
     release_scoped(scope)

@@ -195,6 +195,39 @@ def test_cluster_pairs_null_ids_match_distributed(spark):
     assert (None, None) in frows and (2, 1) in frows and (8, 7) in frows
 
 
+def test_cluster_pairs_over_cap_reads_pairs_once(spark):
+    """Over ``driver_cc_cap`` the distributed branch builds its two-way
+    edge table from ONE scan of the pair lineage (at scale that lineage
+    is the LSH join + verify). A counting UDF in ``pairs`` counts, over
+    the whole call, what the cap probe alone counts plus one full scan;
+    the labels (null endpoints included) equal the distributed result."""
+    rows = [(i, i + 1) for i in range(20)] + [
+        (100, 101), (101, None), (None, 7), (None, None),
+    ]
+    base = spark.createDataFrame(rows, "id_a long, id_b long").coalesce(1)
+    reads = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        reads.add(1)
+        return x
+
+    pairs = base.withColumn("id_a", F.udf(tap, "long")("id_a"))
+    pairs.select("id_a", "id_b").limit(2).toArrow()  # the cap probe alone
+    probe_reads = reads.value
+    reads.value = 0
+    over_cap = {
+        (r.member_id, r.cluster_id)
+        for r in dedup.cluster_pairs(pairs, driver_cc_cap=1).collect()
+    }
+    assert reads.value == probe_reads + len(rows)
+    expected = {
+        (r.member_id, r.cluster_id)
+        for r in dedup.cluster_pairs(base, driver_cc_cap=0).collect()
+    }
+    assert over_cap == expected
+    assert (None, None) in over_cap and (20, 0) in over_cap
+
+
 def test_cluster_pairs_reliable_checkpoint(spark, tmp_path):
     """reliable=True writes fault-tolerant checkpoints (survives executor
     loss, unlike localCheckpoint's block storage) and converges to the

@@ -1,9 +1,10 @@
 """Session-level state: persist_scoped generations, eager release, view
-registration, load_table's per-session plan memo, and the input-sized
-shuffle partition count."""
+registration, load_table's per-session plan memo, the input-sized
+shuffle partition count and the default core count."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark import session as S
@@ -68,3 +69,22 @@ def test_derived_shuffle_partitions_sizes_from_input(monkeypatch, tmp_path):
     with open(tmp_path / "t.parquet", "wb") as fh:
         fh.truncate(size)
     assert S.derived_shuffle_partitions(32) == -(-size // (2 * 1024**2)) == 3
+
+
+def test_get_spark_defaults_to_affinity_cores(monkeypatch):
+    """With no ``cpus``, the local core count is the process's CPU
+    affinity count (stopped before any session is built)."""
+    seen = []
+
+    class Built(Exception):
+        pass
+
+    def record(cpus):
+        seen.append(cpus)
+        raise Built
+
+    monkeypatch.setattr(S.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.setattr(S, "derived_shuffle_partitions", record)
+    with pytest.raises(Built):
+        S.get_spark("affinity-default")
+    assert seen == [3]
