@@ -24,7 +24,8 @@ import random as _random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import fan_out, persist_scoped
+from ..session import persist_scoped
+from ..sources import layout
 from .text import shingles, stable_hash64
 
 # Row cap for the incremental family's BATCH-side broadcast hints (VERDICT
@@ -161,8 +162,11 @@ def minhash_signatures(
     map-side partial aggregation: each shingle string is hashed exactly once,
     every permutation is two integer ops, and at 100 TB the shuffle carries
     one partially aggregated row per (partition, doc) — never the shingles.
+
+    ``df`` is used as given: fan a narrow source scan out first
+    (:func:`~..session.fan_out`), as ``load_documents`` does.
     """
-    sets_ = shingle_sets(fan_out(df), text_col, id_col, shingle_n)
+    sets_ = shingle_sets(df, text_col, id_col, shingle_n)
     hashes = sets_.select(
         F.col(id_col), F.explode("shingle_set").alias("shingle")
     ).select(id_col, F.xxhash64("shingle").bitwiseAND(F.lit(_MASK32)).alias("h"))
@@ -370,179 +374,9 @@ def open_bucket_store(
             "sidecar — rebuild it with write_bucket_store; probing with "
             "a guessed n_parts silently drops candidates on mismatch"
         ) from e
-    bucket_store_recover(store_path)
-    if refresh:
-        # the store may have been rebuilt/copied OUT-OF-BAND (shutil)
-        # since a prior read in this session — Spark's shared file-listing
-        # cache then serves deleted files (FAILED_READ_FILE.FILE_NOT_EXIST,
-        # caught by the r16 bench's second same-session run)
-        spark.catalog.refreshByPath(store_path)
-    return spark.read.parquet(store_path), meta
-
-
-def bucket_store_recover(store_path: str) -> int:
-    """Crash-recovery sweep for a ``(band, bh_part)``-partitioned bucket
-    store — the two-level twin of ``similarity.ivf_recover_index``. A
-    compaction that died mid-swap leaves ``band=B/_old_bh_part=P``
-    asides; until swept, Spark's partition inference sees a conflicting
-    partition column and every plain reader fails loudly (measured on
-    the IVF index, round 16). If the live twin is missing the aside IS
-    the leaf (rename back); if both exist the aside is a stale pre-swap
-    copy (sweep it). Idempotent; single-writer contract. Returns the
-    number of asides resolved."""
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    resolved = 0
-    for old_dir in _glob.glob(
-        _os.path.join(store_path, "band=*", "_old_bh_part=*")
-    ):
-        live = _os.path.join(
-            _os.path.dirname(old_dir),
-            _os.path.basename(old_dir).removeprefix("_old_"),
-        )
-        if _os.path.exists(live):
-            _shutil.rmtree(old_dir, ignore_errors=True)
-        else:
-            _os.rename(old_dir, live)
-        resolved += 1
-    return resolved
-
-
-def bucket_store_open(spark, store_path: str) -> DataFrame:
-    """Open a ``(band, bh_part)``-partitioned bucket store for READING,
-    running the crash-recovery sweep first — the read-path twin of the
-    sweep :func:`bucket_store_compact` runs before writing."""
-    bucket_store_recover(store_path)
-    spark.catalog.refreshByPath(store_path)
-    return spark.read.parquet(store_path)
-
-
-def bucket_store_compact(
-    spark,
-    store_path: str,
-    id_col: str = "doc_id",
-    target_rows_per_file: int = 65536,
-) -> tuple[DataFrame, int, int, int]:
-    """Compact a ``(band, bh_part)``-partitioned signature bucket store
-    in place — the OPTIMIZE step after :func:`incremental_minhash_dedup`
-    ``store_delta`` appends (each arrival lands one fragment per touched
-    leaf directory; over N arrivals the DPP probe's O(touched dirs)
-    arrival scan degrades to O(touched dirs x N fragments) — the
-    reference's ``flush.size=1`` landing pathology,
-    implementation_details.md:71, replayed on the bucket store; cured on
-    the IVF cell index by ``similarity.ivf_compact_index`` in r15, same
-    discipline here).
-
-    Only FRAGMENTED leaves pay: a ``(band, bh_part)`` directory already
-    at or under ``ceil(rows / target_rows_per_file)`` files is left
-    untouched (file mtimes preserved), so the job is O(touched
-    partitions) at 100 TB, never O(store). Per-leaf row counts come from
-    one bounded aggregate (bands x n_parts rows); the rewrite's only
-    shuffle is a ``repartition(band, bh_part, slot)`` over the touched
-    leaves' rows, with ``slot = pmod(xxhash64(id), files_for_leaf)``.
-    Rewritten leaves swap in via the crash-recoverable aside-and-swap
-    (see ``similarity._swap_cell_dirs`` for the POSIX contract and the
-    object-store / Delta ``OPTIMIZE`` commit mapping — identical
-    protocol, two-level directory names).
-
-    Returns ``(compacted_store_df, n_files_before, n_files_after,
-    n_leaves_rewritten)``; the compacted store answers IDENTICAL
-    decisions (driver-checked via the exhaustive dual — layout never
-    changes answers).
-
-    ``store_path`` must be on a local POSIX filesystem: the leaf listing
-    and the per-leaf row counts (parquet footers) go through local
-    ``glob`` paths, and the swap relies on POSIX renames.
-    """
-    import glob as _glob
-    import math as _math
-    import os as _os
-    import shutil as _shutil
-
-    def _leaf_files(root: str) -> dict[tuple[int, int], list[str]]:
-        out: dict[tuple[int, int], list[str]] = {}
-        for d in _glob.glob(_os.path.join(root, "band=*", "bh_part=*")):
-            part = int(_os.path.basename(d).split("=", 1)[1])
-            band = int(_os.path.basename(_os.path.dirname(d)).split("=", 1)[1])
-            out[(band, part)] = sorted(_glob.glob(_os.path.join(d, "part-*")))
-        return out
-
-    bucket_store_recover(store_path)
-    # out-of-band mutations (sweep, a caller's copytree) invalidate the
-    # session's shared file-listing cache for this path — refresh or the
-    # rewrite below can plan against deleted files
-    spark.catalog.refreshByPath(store_path)
-    before = _leaf_files(store_path)
-    n_before = sum(len(v) for v in before.values())
-    store = spark.read.parquet(store_path)
-    # Per-leaf row counts from the parquet FOOTERS, driver-side (r17,
-    # guide §1.4 job-count discipline): the planner only needs row counts
-    # per (band, bh_part) leaf, which every footer already carries — the
-    # same metadata a Spark count aggregate would read, minus the job.
-    # O(files) bounded metadata reads over the file list `before` already
-    # holds (a compaction planner is O(files) driver work by nature —
-    # the Delta/Iceberg OPTIMIZE shape reads sizes from the manifest).
-    # The old per-leaf count JOB scanned the whole store through the
-    # scheduler: 0.79-0.85 s warm at sf0.1 vs 0.004 s for the footer
-    # reads (interleaved same-session A/B, identical per-leaf counts).
-    import pyarrow.parquet as _pq
-
-    counts = {
-        key: sum(_pq.read_metadata(f).num_rows for f in files)
-        for key, files in before.items()
-    }
-    targets = {
-        key: max(1, _math.ceil(n / target_rows_per_file))
-        for key, n in counts.items()
-    }
-    touched = sorted(
-        key for key in counts if len(before.get(key, ())) > targets[key]
-    )
-    if touched:
-        # map key = band * 2^20 + bh_part (bh_part < 2^20 by construction)
-        combo = (F.col("band").cast("long") * (1 << 20)) + F.col("bh_part")
-        slot_map = F.create_map(
-            *[
-                F.lit(x)
-                for (b, p) in touched
-                for x in ((b << 20) + p, targets[(b, p)])
-            ]
-        )
-        frag = store.filter(
-            combo.isin([(b << 20) + p for (b, p) in touched])
-        )
-        rewritten = frag.withColumn(
-            "_slot", F.pmod(F.xxhash64(id_col), slot_map[combo])
-        )
-        aside = store_path + "__compacting"
-        _shutil.rmtree(aside, ignore_errors=True)
-        (
-            rewritten.repartition(
-                sum(targets[key] for key in touched),
-                F.col("band"), F.col("bh_part"), F.col("_slot"),
-            )
-            .drop("_slot")
-            .write.mode("overwrite")
-            .partitionBy("band", "bh_part")
-            .parquet(aside)
-        )
-        for b, p in touched:
-            rel = _os.path.join(f"band={b}", f"bh_part={p}")
-            dst = _os.path.join(store_path, rel)
-            src = _os.path.join(aside, rel)
-            old = _os.path.join(store_path, f"band={b}", f"_old_bh_part={p}")
-            _shutil.rmtree(old, ignore_errors=True)
-            if _os.path.exists(dst):
-                _os.rename(dst, old)
-            _os.rename(src, dst)
-            _shutil.rmtree(old, ignore_errors=True)
-        _shutil.rmtree(aside, ignore_errors=True)
-        # the swap replaced files behind the listing cache's back
-        spark.catalog.refreshByPath(store_path)
-    n_after = sum(len(v) for v in _leaf_files(store_path).values())
-    return spark.read.parquet(store_path), n_before, n_after, len(touched)
+    return layout.open_partitions(
+        spark, store_path, ["band", "bh_part"], refresh=refresh
+    ), meta
 
 
 def incremental_candidates(
@@ -1375,12 +1209,15 @@ def simhash(
     and each 16-bit lane far from saturation. SimHashing a 32k-token
     prefix of a pathological document is standard practice and leaves
     near-dup semantics unchanged.
+
+    ``df`` is used as given: fan a narrow source scan out first
+    (:func:`~..session.fan_out`), as ``load_documents`` does.
     """
     if n_bits > 64:  # explicit raise: survives `python -O` (ADVICE r10 class)
         raise ValueError("simhash packs into a single 64-bit long")
     lanes = (n_bits + 15) // 16  # 16-bit-spaced bit groups needed
     hash_fn = hash_fn or (lambda c: F.xxhash64(c))
-    toks = fan_out(df).select(
+    toks = df.select(
         F.col(id_col),
         F.explode(
             F.slice(F.split(F.col(text_col), " "), 1, 32000)

@@ -45,6 +45,12 @@ def pack_sequences(
     bin boundary; ``bin_id`` is where it starts). The result is independent
     of ``n_blocks`` — blocks only parallelize the prefix sum — so size it to
     the cluster, not the data.
+
+    The min/max and the per-block offsets stay driver collects (two small
+    eager jobs) on purpose. A lazy variant — a broadcast 1-row min/max
+    and a broadcast offsets window — returned identical rows with 0
+    eager jobs but cost more CPU: a median of 1.85 s against 1.63 s over
+    10 alternating runs on a 4-vCPU host.
     """
     lo, hi = df.agg(F.min(order_col), F.max(order_col)).first()
     span = max(int(hi) - int(lo) + 1, 1)

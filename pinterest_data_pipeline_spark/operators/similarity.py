@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources import layout
 from .litutil import array_sql, fast_array_literal
 
 
@@ -660,186 +661,6 @@ def ivf_search_index(
     )
 
 
-def ivf_recover_index(index_path: str) -> int:
-    """Crash-recovery sweep for a cell-partitioned index directory.
-
-    A compaction/migration run that died mid-swap leaves ``_old_cell=N``
-    asides. Between the crash and the next maintenance run every plain
-    reader of the index is DOWN (measured on Spark 4: partition inference
-    sees ``_old_cell`` as a conflicting second partition column and the
-    read fails with CONFLICTING_PARTITION_COLUMN_NAMES — loud, not the
-    silent partial index ADVICE r15 hypothesized, but broken until
-    someone sweeps). The sweep restores the
-    invariant at any time, not just at the next maintenance run: if the
-    live twin is missing, the aside IS the cell (rename it back); if both
-    exist the aside is a stale pre-swap copy (sweep it). Idempotent;
-    single-writer contract (never run concurrently with a maintenance
-    job on the same index). Returns the number of asides resolved.
-    """
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    resolved = 0
-    for old_dir in _glob.glob(_os.path.join(index_path, "_old_cell=*")):
-        live = _os.path.join(
-            index_path, _os.path.basename(old_dir).removeprefix("_old_")
-        )
-        if _os.path.exists(live):
-            _shutil.rmtree(old_dir, ignore_errors=True)
-        else:
-            _os.rename(old_dir, live)
-        resolved += 1
-    return resolved
-
-
-def ivf_open_index(spark, index_path: str) -> DataFrame:
-    """Open a cell-partitioned IVF parquet index for READING, running the
-    crash-recovery sweep first (ADVICE r15: a mid-swap crash otherwise
-    hides a cell from every reader until the next compaction happens to
-    run). This is the read-path twin of the sweep
-    :func:`ivf_compact_index` / :func:`ivf_retrain_migrate` run before
-    writing."""
-    ivf_recover_index(index_path)
-    # out-of-band mutations (sweep, a caller's copytree) invalidate the
-    # session's shared file-listing cache for this path (the r16 bucket
-    # store lesson) — refresh before reading
-    spark.catalog.refreshByPath(index_path)
-    return spark.read.parquet(index_path)
-
-
-def _swap_cell_dirs(index_path: str, aside: str, cells: list[int]) -> None:
-    """Move ``cell=N`` directories from ``aside`` over the live index via
-    the crash-recoverable aside-and-swap (single-writer contract;
-    concurrent readers may briefly miss a mid-swap cell): the live dir
-    renames to ``_old_cell=N`` before the new one moves in, so a crash at
-    any instant leaves the cell's data on disk — as the live dir, the
-    hidden aside, or both — and :func:`ivf_recover_index` restores the
-    invariant. A cell with no live twin (migration created it) just moves
-    in.
-
-    OBJECT-STORE MAPPING (the 100 TB commit protocol — POSIX rename is a
-    test-scaffold stand-in, not the design): on S3/GCS this sequence is a
-    table-format transaction, not directory renames. Delta Lake's
-    ``OPTIMIZE`` / Iceberg's rewrite_data_files express exactly this
-    operator: write new files alongside old ones, then commit ONE
-    manifest/log entry that atomically swaps which files are live —
-    readers see wholly-old or wholly-new (snapshot isolation), crash
-    recovery is "uncommitted files are invisible" (no sweep needed), and
-    concurrent-reader gaps disappear. When the environment grows Delta
-    (``sources.formats.delta_available()``), the swap body becomes a
-    single ``OPTIMIZE ... WHERE cell IN (...)`` / ``REPLACE WHERE``
-    commit; the touched-cells planning above it is unchanged.
-    """
-    import os as _os
-    import shutil as _shutil
-
-    for c in cells:
-        dst = _os.path.join(index_path, f"cell={c}")
-        src = _os.path.join(aside, f"cell={c}")
-        old = _os.path.join(index_path, f"_old_cell={c}")
-        _shutil.rmtree(old, ignore_errors=True)
-        if _os.path.exists(dst):
-            _os.rename(dst, old)
-        _os.rename(src, dst)
-        _shutil.rmtree(old, ignore_errors=True)
-
-
-def ivf_compact_index(
-    spark,
-    index_path: str,
-    target_rows_per_file: int = 4096,
-) -> tuple[DataFrame, int, int, int]:
-    """Compact a cell-partitioned IVF parquet index in place — the
-    OPTIMIZE lifecycle step after :func:`ivf_assign_cells` upserts
-    (FAISS ``IVF.add`` semantics leave the delta as per-batch file
-    fragments; the reference's ``flush.size=1`` landing pathology,
-    implementation_details.md:71, is the same disease on row tables —
-    cured there by ``sources/layout.compact_small_files``).
-
-    Delta-to-base merge with cell REBALANCE: each cell is rewritten into
-    AT MOST ``ceil(rows / target_rows_per_file)`` files (hash slotting —
-    slot collisions within a task can merge target files, so individual
-    files may exceed the target by small factors; the guarantee is the
-    fragment-count ceiling, not an exact per-file row count), so
-    probe-side scan cost returns to O(data), not O(fragments). Only FRAGMENTED cells pay —
-    a cell already at or under its target file count is left untouched
-    (file mtimes preserved), which is what makes the job O(touched
-    partitions) at 100 TB, never O(index): a daily upsert touches a few
-    cells; compaction rewrites exactly those.
-
-    Per-cell row counts come from one bounded aggregate (n_cells rows);
-    the rewrite's only shuffle is ``repartition(cell, slot)`` where
-    ``slot = pmod(xxhash64(id), files_for_cell)`` — deterministic,
-    data-independent slotting within each cell. Rewritten cells replace
-    their directories via a crash-recoverable aside-and-swap
-    (single-writer contract; a crash leaves a state the next run's
-    recovery sweep restores).
-
-    Returns ``(compacted_index_df, n_files_before, n_files_after,
-    n_cells_rewritten)``.
-    """
-    import glob as _glob
-    import math as _math
-    import os as _os
-    import shutil as _shutil
-
-    def _cell_files(root: str) -> dict[int, list[str]]:
-        out: dict[int, list[str]] = {}
-        for d in _glob.glob(_os.path.join(root, "cell=*")):
-            cell = int(_os.path.basename(d).split("=", 1)[1])
-            out[cell] = sorted(_glob.glob(_os.path.join(d, "part-*")))
-        return out
-
-    # crash RECOVERY before anything else (shared sweep — also invoked on
-    # the read path by ivf_open_index): makes every compaction run a
-    # recovery point, not just the cells it happens to touch.
-    ivf_recover_index(index_path)
-    spark.catalog.refreshByPath(index_path)
-
-    before = _cell_files(index_path)
-    n_before = sum(len(v) for v in before.values())
-    idx = spark.read.parquet(index_path)
-    # bounded: one row per cell
-    counts = {
-        r["cell"]: r["n"]
-        for r in idx.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    targets = {
-        c: max(1, _math.ceil(n / target_rows_per_file)) for c, n in counts.items()
-    }
-    touched = sorted(
-        c for c in counts if len(before.get(c, ())) > targets[c]
-    )
-    if touched:
-        slot_map = F.create_map(
-            *[F.lit(x) for c in touched for x in (c, targets[c])]
-        )
-        frag = idx.filter(F.col("cell").isin(touched))
-        rewritten = frag.withColumn(
-            "_slot", F.pmod(F.xxhash64("vec_id"), slot_map[F.col("cell")])
-        )
-        aside = index_path + "__compacting"
-        _shutil.rmtree(aside, ignore_errors=True)
-        (
-            rewritten.repartition(
-                sum(targets[c] for c in touched), F.col("cell"), F.col("_slot")
-            )
-            .drop("_slot")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(aside)
-        )
-        # crash-recoverable per-cell swap; see _swap_cell_dirs for the
-        # POSIX contract and the object-store (Delta OPTIMIZE) mapping
-        _swap_cell_dirs(index_path, aside, touched)
-        _shutil.rmtree(aside, ignore_errors=True)
-        # the swap replaced files behind the listing cache's back
-        spark.catalog.refreshByPath(index_path)
-    n_after = sum(len(v) for v in _cell_files(index_path).values())
-    return spark.read.parquet(index_path), n_before, n_after, len(touched)
-
-
 def align_centroids(
     old: list[list[float]], new: list[list[float]]
 ) -> list[list[float]]:
@@ -910,7 +731,8 @@ def ivf_retrain_migrate(
        stayers in untouched cells never rewrite, their files keep mtimes).
        The rewrite shuffles O(touched-cells' rows), never O(index), and
        swaps in via the shared crash-recoverable aside-and-swap
-       (:func:`_swap_cell_dirs`; Delta ``OPTIMIZE``-commit mapping there).
+       (:func:`~..sources.layout.swap_partitions`; Delta
+       ``OPTIMIZE``-commit mapping at :func:`~..sources.layout.swap_dir`).
 
     Pass ``new_centroids`` through :func:`align_centroids` first (the
     certification queries do) — unaligned retrained centroids renumber
@@ -921,12 +743,9 @@ def ivf_retrain_migrate(
     ``ivf_assign_cells(corpus, new_centroids)`` rebuild — pytest-pinned;
     searches against it must use ``new_centroids``.
     """
-    import os as _os
     import shutil as _shutil
 
-    ivf_recover_index(index_path)
-    spark.catalog.refreshByPath(index_path)
-    idx = spark.read.parquet(index_path)
+    idx = layout.open_partitions(spark, index_path, ["cell"])
     assign1 = nearest_cells_pandas(new_centroids, 1)
     # Persisted for the life of this call: the moves aggregate AND the
     # touched-cell rewrite both need every vector's new_cell, and without
@@ -975,22 +794,8 @@ def ivf_retrain_migrate(
             .parquet(aside)
         )
         # a touched cell can end up EMPTY (everyone left, nobody arrived):
-        # the writer emits no directory for it — rename-aside then delete,
-        # so a crash at any instant leaves the rows recoverable and a
-        # re-run converges
-        empty = [
-            c
-            for c in touched
-            if not _os.path.exists(_os.path.join(aside, f"cell={c}"))
-        ]
-        _swap_cell_dirs(index_path, aside, [c for c in touched if c not in empty])
-        for c in empty:
-            live = _os.path.join(index_path, f"cell={c}")
-            old = _os.path.join(index_path, f"_old_cell={c}")
-            if _os.path.exists(live):
-                _shutil.rmtree(old, ignore_errors=True)
-                _os.rename(live, old)
-                _shutil.rmtree(old, ignore_errors=True)
+        # the writer emits no directory for it, and the swap deletes it
+        layout.swap_partitions(index_path, aside, ["cell"], [(c,) for c in touched])
         _shutil.rmtree(aside, ignore_errors=True)
         spark.catalog.refreshByPath(index_path)
     reassigned.unpersist()

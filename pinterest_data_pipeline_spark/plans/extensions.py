@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup, multimodal, sampling, similarity, text
 from ..session import fan_out, load_table, persist_scoped
+from ..sources import layout
 from .analytics import query
 
 
@@ -1228,7 +1229,6 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     any dropped, duplicated, or corrupted row moves some bucket's digest.
     """
     from pyspark.sql.types import LongType, StringType, StructField, StructType
-    from ..sources import layout
 
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     schema = StructType(
@@ -9113,8 +9113,8 @@ def ann_ivf_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch file fragments (the reference's ``flush.size=1`` landing
     pathology, implementation_details.md:71, replayed on the vector
     index), and probe cost then scales with fragments, not data.
-    :func:`~..operators.similarity.ivf_compact_index` merges delta to
-    base with cell rebalance, rewriting ONLY fragmented cells.
+    :func:`~..sources.layout.compact_partitions` merges delta to base
+    with cell rebalance, rewriting ONLY fragmented cells.
 
     Per run: the fingerprint-cached base index is file-copied to a work
     dir (scaffolding — production compacts in place), the batch delta is
@@ -9158,7 +9158,9 @@ def ann_ivf_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         delta.repartition(8)
         .write.mode("append").partitionBy("cell").parquet(work)
     )
-    compacted, n_before, n_after, _ = similarity.ivf_compact_index(spark, work)
+    compacted, n_before, n_after, _ = layout.compact_partitions(
+        spark, work, ["cell"], "vec_id", 4096
+    )
 
     def digest(df: DataFrame) -> DataFrame:
         return df.agg(
@@ -9707,7 +9709,7 @@ def ann_ivf_centroid_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`~..operators.similarity.ivf_retrain_migrate` rewrites exactly
     the cells whose membership changed (O(touched), crash-recoverable
     aside-and-swap; Delta ``OPTIMIZE``-commit mapping in
-    ``_swap_cell_dirs``). Certification:
+    :func:`~..sources.layout.swap_dir`). Certification:
 
     * ``migration_lossless`` — (count, vec_id-digest) of the migrated
       index equals the full corpus: no vector dropped or duplicated by
@@ -9869,7 +9871,7 @@ def dedup_bucket_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
     ``doc_id % 10 NOT IN (0, 9)``) is file-copied to a work dir, the
     ``% 10 == 9`` shard's bucket rows append DELIBERATELY fragmented
     (8-way round-robin — every leaf gains small files), and
-    :func:`~..operators.dedup.bucket_store_compact` rewrites only the
+    :func:`~..sources.layout.compact_partitions` rewrites only the
     fragmented leaves. The compacted store then holds exactly the
     ``% 10 != 0`` corpus's buckets, so batch decisions against it must
     be IDENTICAL to ``dedup_incremental_batch``'s — the same exhaustive
@@ -9925,7 +9927,9 @@ def dedup_bucket_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
     delta.repartition(4).write.mode("append").partitionBy(
         "band", "bh_part"
     ).parquet(work)
-    compacted, n_before, n_after, _ = dedup.bucket_store_compact(spark, work)
+    compacted, n_before, n_after, _ = layout.compact_partitions(
+        spark, work, ["band", "bh_part"], "doc_id", 65536
+    )
 
     def digest(df: DataFrame) -> DataFrame:
         return df.agg(
@@ -10193,7 +10197,7 @@ def ann_ivf_drift_gated_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             expect = old_centroids
         match = (
-            digest(similarity.ivf_open_index(spark, work))
+            digest(layout.open_partitions(spark, work, ["cell"]))
             .crossJoin(digest(similarity.ivf_assign_cells(emb, expect), True))
             .select(
                 ((F.col("n") == F.col("n2")) & (F.col("d") == F.col("d2")))

@@ -297,6 +297,10 @@ def fan_out(df, partitions: int | None = None):
     core no matter how many the cluster has. When the scan already has >=
     target partitions — the normal case on a real cluster reading many
     files — this is a no-op, so big inputs never pay a gratuitous shuffle.
+
+    Call it on a source scan. The partition-count probe plans the frame,
+    and under AQE that runs every Exchange already in it as an eager job,
+    so a frame that was fanned (or shuffled) once must not be fanned again.
     """
     target = partitions or df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

@@ -27,9 +27,28 @@ interleaved bits. Real lakehouse z-ordering (Delta OPTIMIZE ZORDER BY)
 uses sampled *quantile* boundaries instead, which additionally absorbs
 value skew; equal-width is the transparent version and exact for
 uniform-ish key domains.
+
+The module also owns every in-place rewrite of a partitioned parquet
+store: small-file compaction, the incremental z-order merge, and the
+crash-safe directory commit the engine's stores share (the IVF cell
+index, the ``(band, bh_part)`` bucket store and the streaming upsert
+table). That commit is :func:`swap_dir`, an aside-and-swap of ONE
+directory, with :func:`recover_dir` / :func:`recover_partitions` as its
+recovery and :func:`compact_partitions` as its main user. It commits
+each leaf on its own, which is enough for a layout-only rewrite: every
+leaf holds the same rows before and after, so a crash between two leaf
+swaps leaves a store that answers the same. The z-order merge
+(:func:`compact_zorder_incremental`) keeps its own two-phase transaction
+instead, because it merges NEW rows in: a retry of the same delta must
+see all touched partitions old or all new, never a mix, or it would
+merge the delta twice.
 """
 
 from __future__ import annotations
+
+import glob
+import os
+import shutil
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -117,8 +136,6 @@ def files_overlapping(path: str, col: str, lo: int, hi: int) -> tuple[int, int]:
     Uses pyarrow footer metadata directly: this is the same statistic the
     reader's pruning consults, measured without running a query.
     """
-    import os
-
     import pyarrow.parquet as pq
 
     total = overlapping = 0
@@ -168,10 +185,6 @@ def compact_small_files(
       parquet, landing file count, compacted file count) so callers can
       assert the file-count collapse.
     """
-    import glob
-    import os
-    import shutil
-
     if os.path.exists(work_dir):
         shutil.rmtree(work_dir)
     landing = os.path.join(work_dir, "landing")
@@ -245,7 +258,6 @@ def write_zordered_table(
     what keeps incremental maintenance local.
     """
     import json
-    import os
 
     bounds = df.agg(
         F.min(col1).alias("lo1"),
@@ -312,9 +324,6 @@ def recover_zorder_table(path: str) -> int:
     duplicating rows and flipping the partition column's inferred type to
     string. Returns the number of partitions rolled back or forward.
     """
-    import os
-    import shutil
-
     marker = os.path.join(path, _COMMIT_MARKER)
     committed = os.path.exists(marker)
     changed = 0
@@ -384,8 +393,6 @@ def compact_zorder_incremental(spark, path: str, delta: DataFrame) -> dict:
     (Delta/Iceberg snapshot swap); the stage-swap-commit shape is the same.
     """
     import json
-    import os
-    import shutil
 
     recover_zorder_table(path)
     with open(os.path.join(path, _MANIFEST)) as f:
@@ -438,3 +445,184 @@ def compact_zorder_incremental(spark, path: str, delta: DataFrame) -> dict:
     os.remove(intent)
     shutil.rmtree(tmp)
     return {"touched": len(touched), "total": len(m["cuts"]) + 1}
+
+
+# ===========================================================================
+# Partitioned stores: the aside-and-swap commit, its recovery, compaction.
+#
+# A store is a parquet directory partitioned by ``part_cols`` (one level,
+# ``cell=N``, or two, ``band=B/bh_part=P``); a LEAF is one bottom-level
+# partition directory. A leaf's aside is its sibling ``_old_<leaf name>``
+# (``_old_cell=N``, ``band=B/_old_bh_part=P``). Single-writer contract:
+# never run two maintenance jobs on one store at once.
+# ===========================================================================
+
+
+def swap_dir(staged: str, live: str, aside: str) -> None:
+    """Replace directory ``live`` with ``staged``: the aside-and-swap commit.
+
+    ``live`` is renamed to ``aside`` before ``staged`` moves in, and the
+    aside is deleted only after, so a crash at any instant leaves the
+    data on disk — as ``live``, as ``aside``, or both — and
+    :func:`recover_dir` restores it. A missing ``staged`` means the
+    directory ends empty: ``live`` is set aside and deleted. A concurrent
+    reader may briefly miss ``live``.
+
+    Object-store mapping: POSIX rename is the local stand-in. On S3/GCS
+    the same step is a table-format commit (Delta ``OPTIMIZE`` / ``REPLACE
+    WHERE``, Iceberg rewrite_data_files): new files land beside the old
+    ones and one log entry swaps which are live, so readers see wholly
+    old or wholly new and uncommitted files need no sweep.
+    """
+    shutil.rmtree(aside, ignore_errors=True)
+    if os.path.exists(live):
+        os.rename(live, aside)
+    if os.path.exists(staged):
+        os.rename(staged, live)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def recover_dir(live: str, aside: str) -> None:
+    """Undo an interrupted :func:`swap_dir`. If ``live`` is missing the
+    aside IS the directory (rename it back); if both exist the aside is a
+    stale pre-swap copy (delete it). Idempotent."""
+    if not os.path.exists(aside):
+        return
+    if os.path.exists(live):
+        shutil.rmtree(aside, ignore_errors=True)
+    else:
+        os.rename(aside, live)
+
+
+def _leaf(part_cols: list[str], key: tuple[int, ...]) -> str:
+    return os.path.join(*(f"{c}={v}" for c, v in zip(part_cols, key)))
+
+
+def swap_partitions(
+    path: str, staged: str, part_cols: list[str], keys: list[tuple[int, ...]]
+) -> None:
+    """Commit the leaves ``keys`` from the ``staged`` store into ``path``,
+    one :func:`swap_dir` per leaf. A leaf with no staged copy ends empty;
+    those leaves swap last, so an emptied leaf's rows leave it only after
+    every leaf with a staged copy is committed."""
+    leaves = [_leaf(part_cols, key) for key in keys]
+    for leaf in sorted(leaves, key=lambda lf: not os.path.exists(os.path.join(staged, lf))):
+        head, name = os.path.split(leaf)
+        swap_dir(
+            os.path.join(staged, leaf),
+            os.path.join(path, leaf),
+            os.path.join(path, head, "_old_" + name),
+        )
+
+
+def recover_partitions(path: str, part_cols: list[str]) -> None:
+    """Sweep every leaf aside of the store at ``path`` with
+    :func:`recover_dir`. Until swept, an aside breaks every plain reader:
+    Spark's partition inference sees ``_old_<col>`` as a second partition
+    column and fails with CONFLICTING_PARTITION_COLUMN_NAMES."""
+    *parents, leaf = part_cols
+    for aside in glob.glob(
+        os.path.join(path, *(f"{c}=*" for c in parents), f"_old_{leaf}=*")
+    ):
+        head, name = os.path.split(aside)
+        recover_dir(os.path.join(head, name.removeprefix("_old_")), aside)
+
+
+def open_partitions(
+    spark, path: str, part_cols: list[str], refresh: bool = True
+) -> DataFrame:
+    """Read a partitioned store after the recovery sweep.
+
+    ``refresh`` drops Spark's cached file listing for ``path``: a sweep,
+    a swap or a caller's copytree changes files behind it, and a stale
+    listing fails the read with FAILED_READ_FILE.FILE_NOT_EXIST. Pass
+    ``False`` only for a store changed solely through Spark writes,
+    which invalidate the cache themselves."""
+    recover_partitions(path, part_cols)
+    if refresh:
+        spark.catalog.refreshByPath(path)
+    return spark.read.parquet(path)
+
+
+def _leaf_files(path: str, part_cols: list[str]) -> dict[tuple[int, ...], list[str]]:
+    out = {}
+    for d in glob.glob(os.path.join(path, *(f"{c}=*" for c in part_cols))):
+        names = os.path.relpath(d, path).split(os.sep)
+        key = tuple(int(n.split("=", 1)[1]) for n in names)
+        out[key] = sorted(glob.glob(os.path.join(d, "part-*")))
+    return out
+
+
+def compact_partitions(
+    spark,
+    path: str,
+    part_cols: list[str],
+    id_col: str,
+    target_rows_per_file: int,
+) -> tuple[DataFrame, int, int, int]:
+    """Compact a partitioned store in place — the OPTIMIZE step after
+    appends leave each leaf as per-batch file fragments (the reference's
+    ``flush.size=1`` landing pathology, implementation_details.md:71).
+
+    Each leaf is rewritten into AT MOST ``ceil(rows /
+    target_rows_per_file)`` files; hash-slot collisions can merge target
+    files, so the guarantee is the file-count ceiling, not a per-file
+    row count. Only FRAGMENTED leaves pay: a leaf at or under its
+    ceiling keeps its files and their mtimes, so the job is O(touched
+    leaves), never O(store). Per-leaf row counts come from the parquet
+    footers (no Spark job). The rewrite's only shuffle is
+    ``repartition(Σ ceilings, *part_cols, _slot)`` over the touched
+    leaves' rows, with ``_slot = pmod(xxhash64(id_col), ceiling)``;
+    each rewritten leaf commits by :func:`swap_dir`, after the recovery
+    sweep has run on the whole store.
+
+    Partition values must be ints in ``[0, 2^20)``. ``path`` must be on
+    a local POSIX filesystem: the leaf listing and the footer reads go
+    through local paths, and the commit relies on POSIX renames.
+
+    Returns ``(compacted_store_df, n_files_before, n_files_after,
+    n_leaves_rewritten)``; the store's rowset is unchanged.
+    """
+    import functools
+    import math
+
+    import pyarrow.parquet as pq
+
+    store = open_partitions(spark, path, part_cols)
+    before = _leaf_files(path, part_cols)
+    rows = {key: sum(pq.read_metadata(f).num_rows for f in files) for key, files in before.items()}
+    targets = {key: max(1, math.ceil(n / target_rows_per_file)) for key, n in rows.items()}
+    touched = sorted(key for key, files in before.items() if len(files) > targets[key])
+    if touched:
+        # one long per leaf: each partition value fills a 20-bit field
+        leaf_id = F.col(part_cols[0]).cast("long")
+        for c in part_cols[1:]:
+            leaf_id = leaf_id * (1 << 20) + F.col(c)
+
+        def leaf_num(key: tuple[int, ...]) -> int:
+            return functools.reduce(lambda n, v: (n << 20) + v, key)
+
+        ceiling = F.create_map(
+            *[F.lit(x) for key in touched for x in (leaf_num(key), targets[key])]
+        )
+        staged = path + "__compacting"
+        shutil.rmtree(staged, ignore_errors=True)
+        (
+            store.filter(leaf_id.isin([leaf_num(key) for key in touched]))
+            .withColumn("_slot", F.pmod(F.xxhash64(id_col), ceiling[leaf_id]))
+            .repartition(
+                sum(targets[key] for key in touched),
+                *[F.col(c) for c in part_cols],
+                F.col("_slot"),
+            )
+            .drop("_slot")
+            .write.mode("overwrite")
+            .partitionBy(*part_cols)
+            .parquet(staged)
+        )
+        swap_partitions(path, staged, part_cols, touched)
+        shutil.rmtree(staged, ignore_errors=True)
+        spark.catalog.refreshByPath(path)
+    n_before = sum(len(v) for v in before.values())
+    n_after = sum(len(v) for v in _leaf_files(path, part_cols).values())
+    return spark.read.parquet(path), n_before, n_after, len(touched)

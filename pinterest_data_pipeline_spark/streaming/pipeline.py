@@ -515,31 +515,27 @@ def upsert_sink(
     depends on partition layout — fine when upstream already deduplicates or
     emits one record per key per trigger, arbitrary otherwise.
 
-    Crash safety: the new table is written to ``<dir>.tmp``, the live table
-    is renamed aside to ``<dir>.old``, the tmp renamed into place, and only
-    then is the old copy deleted. Every window in that sequence leaves either
-    the previous table or the ``.old`` copy on disk, and batch start recovers
-    ``.old`` if the live dir is missing — so a crash at any point replays the
-    batch against the previous table rather than an empty one (exactly-once
-    at the table level).
+    Crash safety: the new table is written to ``<dir>.tmp`` and committed
+    by :func:`~..sources.layout.swap_dir` with ``<dir>.old`` as the aside,
+    so every window leaves the previous table or its ``.old`` copy on disk.
+    Batch start runs :func:`~..sources.layout.recover_dir`, so a crash at
+    any point replays the batch against the previous table rather than an
+    empty one (exactly-once at the table level).
 
     A full rewrite per batch is O(table); Delta/Iceberg cut that to
     O(touched files) with min-max pruning — pair with z-order clustering
     (``sources/layout``) and the same pruning logic applies to which
     files a MERGE must rewrite.
     """
-    import os
-    import shutil
-
     from ..operators.merge import merge_into
+    from ..sources import layout
 
     spark = stream.sparkSession
     old_dir = table_dir + ".old"
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        # crash recovery: a previous batch died between its two renames
-        if not os.path.exists(table_dir) and os.path.exists(old_dir):
-            os.rename(old_dir, table_dir)
+        # crash recovery: a previous batch died mid-swap
+        layout.recover_dir(table_dir, old_dir)
         # last-wins within the batch so merge sees unique keys
         from pyspark.sql import Window
 
@@ -559,13 +555,7 @@ def upsert_sink(
             merged = deduped
         tmp = table_dir + ".tmp"
         merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(old_dir):
-            shutil.rmtree(old_dir)
-        if os.path.exists(table_dir):
-            os.rename(table_dir, old_dir)
-        os.rename(tmp, table_dir)
-        if os.path.exists(old_dir):
-            shutil.rmtree(old_dir)
+        layout.swap_dir(tmp, table_dir, old_dir)
 
     writer = (
         stream.writeStream.foreachBatch(apply_batch)
@@ -1218,6 +1208,7 @@ def incremental_dedup_store_sink(
     exactly like the IVF cell index.
     """
     from ..operators import dedup as dedup_ops
+    from ..session import fan_out
 
     spark = stream_docs.sparkSession
     sig_delta_root = os.path.join(work_dir, "sig_delta")
@@ -1232,7 +1223,7 @@ def incremental_dedup_store_sink(
         for p in _committed_batch_dirs(doc_delta_root, batch_id):
             store_docs = store_docs.unionByName(spark.read.parquet(p))
         decisions, sig_delta = dedup_ops.incremental_minhash_dedup(
-            batch, store_sigs, store_docs, text_col, id_col,
+            fan_out(batch), store_sigs, store_docs, text_col, id_col,
             threshold=threshold,
         )
         # three consumers (decision rows, kept sigs, kept docs) hang off

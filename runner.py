@@ -26,6 +26,9 @@ import argparse
 import json
 import os
 
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
 from pinterest_data_pipeline_spark.operators import cleaning
 from pinterest_data_pipeline_spark.plans import reference_queries as rq
 from pinterest_data_pipeline_spark.schemas import (
@@ -112,10 +115,14 @@ def run_batch(spark, landing_dir: str, out_dir: str, approx: bool = False) -> di
             pin, user, approx=approx
         ),
     }
+    # each write reports its own row count: no job re-reads an answer
     counts = {}
     for name, df in answers.items():
-        df.write.mode("overwrite").parquet(os.path.join(out_dir, name))
-        counts[name] = spark.read.parquet(os.path.join(out_dir, name)).count()
+        written = Observation(name)
+        df.observe(written, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(out_dir, name))
+        counts[name] = written.get["rows"]
     return counts
 
 

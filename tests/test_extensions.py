@@ -128,6 +128,30 @@ def test_cluster_pairs_one_action_per_iteration(spark):
     assert len(jobs) == 3, sorted(jobs)
 
 
+def test_near_duplicate_query_plans_launch_no_jobs(spark):
+    """Building the MinHash and SimHash near-duplicate query plans runs no
+    Spark job. ``load_documents`` fans the documents scan out once; the
+    signature operators must not fan it again, because under AQE the
+    second partition-count probe runs the first repartition's Exchange
+    as an eager job."""
+    from pinterest_data_pipeline_spark.plans import extensions
+
+    sf = "/root/testdata/sf0.001"
+    sc = spark.sparkContext
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    # the session's first read of a table infers its parquet schema with
+    # a job; load it before counting
+    extensions.load_documents(spark, sf)
+    group = "near-dup-plan-build-job-accounting"
+    sc.setJobGroup(group, "count jobs launched while plans are built")
+    try:
+        extensions.dedup_minhash_near_duplicates(spark, sf)
+        extensions.dedup_simhash_near_duplicates(spark, sf)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_cluster_pairs_driver_branch_matches_distributed(spark):
     """r16: under ``driver_cc_cap`` PAIRS cluster_pairs solves by driver
     union-find (the incremental family's r14-certified kernel) instead of

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.operators import dedup
 from pinterest_data_pipeline_spark.plans.extensions import load_documents
+from pinterest_data_pipeline_spark.sources import layout
 
 SF001 = "/root/testdata/sf0.001"
 
@@ -240,8 +241,8 @@ def test_ivf_compaction_search_is_bit_for_bit(spark, tmp_path):
     emb, batch, centroids, path = _ivf_fixture(spark, tmp_path)
     delta = similarity.ivf_assign_cells(batch, centroids)
     delta.repartition(6).write.mode("append").partitionBy("cell").parquet(path)
-    compacted, n_before, n_after, n_touched = similarity.ivf_compact_index(
-        spark, path
+    compacted, n_before, n_after, n_touched = layout.compact_partitions(
+        spark, path, ["cell"], "vec_id", 4096
     )
     assert n_after < n_before and n_touched > 0
 
@@ -273,7 +274,7 @@ def test_ivf_compaction_skips_already_compact_cells(spark, tmp_path):
 
     emb, batch, centroids, path = _ivf_fixture(spark, tmp_path)
     # normalize to exactly one file per cell first
-    similarity.ivf_compact_index(spark, path)
+    layout.compact_partitions(spark, path, ["cell"], "vec_id", 4096)
 
     def mtimes():
         return {
@@ -282,7 +283,9 @@ def test_ivf_compaction_skips_already_compact_cells(spark, tmp_path):
         }
 
     before = mtimes()
-    _, n_b, n_a, n_touched = similarity.ivf_compact_index(spark, path)
+    _, n_b, n_a, n_touched = layout.compact_partitions(
+        spark, path, ["cell"], "vec_id", 4096
+    )
     assert n_touched == 0 and n_b == n_a
     assert mtimes() == before, "compact cells must not be rewritten"
 
@@ -293,7 +296,9 @@ def test_ivf_compaction_skips_already_compact_cells(spark, tmp_path):
         "append"
     ).partitionBy("cell").parquet(path)
     pre = mtimes()
-    _, _, _, n_touched = similarity.ivf_compact_index(spark, path)
+    _, _, _, n_touched = layout.compact_partitions(
+        spark, path, ["cell"], "vec_id", 4096
+    )
     assert n_touched == 1
     post = mtimes()
     changed_cells = {
@@ -318,8 +323,8 @@ def test_ivf_compaction_rebalances_big_cells(spark, tmp_path):
     emb, batch, centroids, path = _ivf_fixture(spark, tmp_path, n_cells=2)
     delta = similarity.ivf_assign_cells(batch, centroids)
     delta.repartition(4).write.mode("append").partitionBy("cell").parquet(path)
-    compacted, _, _, _ = similarity.ivf_compact_index(
-        spark, path, target_rows_per_file=64
+    compacted, _, _, _ = layout.compact_partitions(
+        spark, path, ["cell"], "vec_id", 64
     )
     counts = {
         r["cell"]: r["n"]

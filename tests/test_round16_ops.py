@@ -17,6 +17,7 @@ import os
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.operators import similarity
+from pinterest_data_pipeline_spark.sources import layout
 
 # Unit anchors in R^4: dot-product nearest-cell assignment is exact and
 # tie-free for members placed exactly at an anchor.
@@ -167,10 +168,10 @@ def test_align_centroids_recovers_permutation():
         similarity.align_centroids(ANCHORS, perturbed[:3])
 
 
-def test_ivf_open_index_recovers_mid_swap_aside(spark, tmp_path):
+def test_open_partitions_recovers_mid_swap_cell_aside(spark, tmp_path):
     """ADVICE r15: a reader opening an index left mid-swap (live cell dir
     missing, ``_old_cell=N`` aside present) must see the FULL index —
-    ivf_open_index runs the recovery sweep before reading. A plain
+    open_partitions runs the recovery sweep before reading. A plain
     parquet read of the same state is BROKEN until someone sweeps:
     Spark's partition inference sees ``_old_cell`` as a second partition
     column and fails with CONFLICTING_PARTITION_COLUMN_NAMES (measured —
@@ -187,12 +188,12 @@ def test_ivf_open_index_recovers_mid_swap_aside(spark, tmp_path):
     # the hazard: the aside dir breaks partition inference for readers
     with pytest.raises(SparkRuntimeException, match="CONFLICTING_PARTITION"):
         spark.read.parquet(path).collect()
-    recovered = similarity.ivf_open_index(spark, path)
+    recovered = layout.open_partitions(spark, path, ["cell"])
     assert _rowset(recovered) == full
     assert os.path.exists(os.path.join(path, "cell=1"))
     # stale-aside case: both live and aside exist -> aside swept
     os.makedirs(os.path.join(path, "_old_cell=2"), exist_ok=True)
-    similarity.ivf_open_index(spark, path)
+    layout.open_partitions(spark, path, ["cell"])
     assert not os.path.exists(os.path.join(path, "_old_cell=2"))
 
 
@@ -361,8 +362,8 @@ def test_bucket_compact_ceiling_and_lossless(spark, tmp_path):
     unchanged."""
     path = _bucket_store(spark, tmp_path)
     before_rows = {tuple(r) for r in spark.read.parquet(path).collect()}
-    compacted, n_before, n_after, n_touched = dedup.bucket_store_compact(
-        spark, path
+    compacted, n_before, n_after, n_touched = layout.compact_partitions(
+        spark, path, ["band", "bh_part"], "doc_id", 65536
     )
     assert n_after < n_before and n_touched > 0
     stats = _leaf_file_stats(path)
@@ -389,19 +390,21 @@ def test_bucket_compact_untouched_leaves_not_rewritten(spark, tmp_path):
     stats0 = _leaf_file_stats(path)
     untouched0 = {k: v for k, v in stats0.items() if len(v) == 1}
     assert untouched0 is not None
-    dedup.bucket_store_compact(spark, path)
+    layout.compact_partitions(spark, path, ["band", "bh_part"], "doc_id", 65536)
     stats1 = _leaf_file_stats(path)
     for leaf, files in untouched0.items():
         assert stats1[leaf] == files
-    _, n_before2, n_after2, n_touched2 = dedup.bucket_store_compact(spark, path)
+    _, n_before2, n_after2, n_touched2 = layout.compact_partitions(
+        spark, path, ["band", "bh_part"], "doc_id", 65536
+    )
     assert n_touched2 == 0 and n_before2 == n_after2
     assert _leaf_file_stats(path) == stats1
 
 
-def test_bucket_store_recover_sweep(spark, tmp_path):
+def test_open_partitions_sweeps_bucket_store_asides(spark, tmp_path):
     """Both crash states converge: aside-without-live renames back
     (the leaf's data is the aside); aside-with-live sweeps the stale
-    copy. bucket_store_open runs the sweep on the read path."""
+    copy. open_partitions runs the sweep on the read path."""
     import shutil
 
     path = _bucket_store(spark, tmp_path)
@@ -410,11 +413,15 @@ def test_bucket_store_recover_sweep(spark, tmp_path):
     aside = os.path.join(path, "band=0", "_old_bh_part=3")
     # crash state A: live renamed aside, replacement never arrived
     os.rename(live, aside)
-    assert {tuple(r) for r in dedup.bucket_store_open(spark, path).collect()} == all_rows
+    assert {
+        tuple(r) for r in layout.open_partitions(spark, path, ["band", "bh_part"]).collect()
+    } == all_rows
     assert os.path.exists(live) and not os.path.exists(aside)
     # crash state B: both exist — the aside is the stale pre-swap copy
     shutil.copytree(live, aside)
-    assert {tuple(r) for r in dedup.bucket_store_open(spark, path).collect()} == all_rows
+    assert {
+        tuple(r) for r in layout.open_partitions(spark, path, ["band", "bh_part"]).collect()
+    } == all_rows
     assert not os.path.exists(aside)
 
 
@@ -433,7 +440,9 @@ def test_bucket_compact_decisions_identical(spark, tmp_path):
         store_buckets=spark.read.parquet(path),
     )
     frag_rows = _frozen(d_frag)
-    compacted, _, _, _ = dedup.bucket_store_compact(spark, path)
+    compacted, _, _, _ = layout.compact_partitions(
+        spark, path, ["band", "bh_part"], "doc_id", 65536
+    )
     d_comp, _ = dedup.incremental_minhash_dedup(
         batch, None, store_docs, "text", "doc_id", threshold=0.3,
         store_buckets=compacted,
@@ -637,8 +646,8 @@ def test_stream_upsert_compact_retrain_lifecycle(spark, tmp_path):
     delta.select("vec_id", "embedding", "cell").repartition(4).write.mode(
         "append"
     ).partitionBy("cell").parquet(index_path)
-    compacted, n_before, n_after, _ = similarity.ivf_compact_index(
-        spark, index_path
+    compacted, n_before, n_after, _ = layout.compact_partitions(
+        spark, index_path, ["cell"], "vec_id", 4096
     )
     assert n_after < n_before
     assert _rowset(compacted) == _rowset(

@@ -32,6 +32,19 @@ def test_runner_end_to_end_and_idempotent(spark, tmp_path):
     assert set(counts3) == set(counts1)
 
 
+def test_run_batch_counts_equal_written_answers(spark, tmp_path):
+    """run_batch's row counts come from observations on its writes; each
+    must equal a re-read of the parquet answer it wrote."""
+    import os
+
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "answers")
+    runner.land_raw(landing, rows=300, seed=13)
+    counts = runner.run_batch(spark, landing, out)
+    assert counts == {
+        name: spark.read.parquet(os.path.join(out, name)).count() for name in counts
+    }
+
+
 def test_with_retries_recovers_from_transient_failure():
     """DAG-parity retry: one transient failure, successful second attempt."""
     from runner import with_retries
