@@ -51,8 +51,22 @@ def pack_sequences(
     and a broadcast offsets window — returned identical rows with 0
     eager jobs but cost more CPU: a median of 1.85 s against 1.63 s over
     10 alternating runs on a 4-vCPU host.
+
+    A null size counts as 0 tokens in the offsets (its own ``size_col``
+    stays null); an empty input returns an empty frame of the same schema.
     """
+
+    def packed(frame: DataFrame, cum_before) -> DataFrame:
+        return frame.select(
+            order_col,
+            F.col(size_col).cast("long").alias(size_col),
+            F.floor(cum_before / budget).cast("long").alias("bin_id"),
+            (cum_before % budget).cast("long").alias("bin_offset"),
+        )
+
     lo, hi = df.agg(F.min(order_col), F.max(order_col)).first()
+    if lo is None:
+        return packed(df, F.lit(None).cast("long"))
     span = max(int(hi) - int(lo) + 1, 1)
     blk = F.floor(
         (F.col(order_col) - F.lit(int(lo))) * F.lit(n_blocks) / F.lit(span)
@@ -62,7 +76,7 @@ def pack_sequences(
     offsets, running = {}, 0
     for row in sorted(totals, key=lambda r: r["_blk"]):
         offsets[row["_blk"]] = running
-        running += int(row["_tot"])
+        running += int(row["_tot"] or 0)
     off = F.create_map(
         *[F.lit(x) for k in sorted(offsets) for x in (k, offsets[k])]
     )
@@ -74,12 +88,7 @@ def pack_sequences(
     cum_before = (
         F.coalesce(F.sum(size_col).over(w), F.lit(0)) + off[F.col("_blk")]
     ).cast("long")
-    return blocked.select(
-        order_col,
-        F.col(size_col).cast("long").alias(size_col),
-        F.floor(cum_before / budget).cast("long").alias("bin_id"),
-        (cum_before % budget).cast("long").alias("bin_offset"),
-    )
+    return packed(blocked, cum_before)
 
 
 def chunk_sliding(

@@ -547,6 +547,8 @@ def train_ivf_centroids(
     import numpy as np
 
     x = np.array([list(map(float, r[0])) for r in sample])
+    if not len(x):  # empty corpus: no cells, so every probe finds nothing
+        return []
     rng = np.random.RandomState(seed)
     centroids = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
     for _ in range(iters):
@@ -871,6 +873,8 @@ def train_pq_codebooks(
     import numpy as np
 
     x = np.array([list(map(float, r[0])) for r in sample])
+    if not len(x):  # empty corpus: m codebooks of 0 codes
+        return [[] for _ in range(m)]
     dim = x.shape[1]
     if dim % m:
         raise ValueError(f"pq: dim {dim} not divisible by m={m} subspaces")
@@ -902,7 +906,7 @@ def pq_encode_pandas(codebooks: list[list[list[float]]]):
     from pyspark.sql.pandas.functions import pandas_udf
 
     cbs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    sub = cbs[0].shape[1]
+    sub = cbs[0].shape[-1]  # 0 for the empty codebooks of an empty corpus
 
     @pandas_udf("array<int>")
     def kernel(vecs: pd.Series) -> pd.Series:
@@ -943,7 +947,7 @@ def pq_topk(
 
     m = len(codebooks)
     cbs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    sub = cbs[0].shape[1]
+    sub = cbs[0].shape[-1]  # 0 for the empty codebooks of an empty corpus
     qrows = queries.select(F.col(id_col), as_double(F.col(vec_col))).collect()
     lut_rows = []
     for r in qrows:
@@ -1102,7 +1106,7 @@ def ivf_pq_topk(
 
     m = len(codebooks)
     cbs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
-    sub = cbs[0].shape[1]
+    sub = cbs[0].shape[-1]  # 0 for the empty codebooks of an empty corpus
 
     assignp = nearest_cells_pandas(centroids, n_probe)
     if encoded is None:

@@ -23,6 +23,10 @@ its arguments and session on every call:
   by the next call under that scope or dropped by ``release_scoped``.
 * ``plans.extensions._cached_store`` work directories: on disk, rebuilt when
   the source parquet's size/mtime fingerprint or the build parameters change.
+* Generated classes, in Spark's ``CodeGenerator`` cache: one per JVM, so it
+  survives ``spark.stop()`` and a rebuilt session; it evicts in LRU order
+  once it holds ``CODEGEN_CACHE_ENTRIES`` classes. The size is a static
+  conf, so only the first session built in a JVM sets it.
 
 Environment variables read: ``SPARK_GRAFT_SF_DIR`` (input directory that
 sizes the shuffle partitions) and ``SPARK_GRAFT_DRIVER_MEM`` (driver heap,
@@ -39,6 +43,16 @@ from pyspark.sql import SparkSession
 # sizing constants of derived_shuffle_partitions (see its docstring)
 MIN_TASK_BYTES = 2 * 1024**2
 TARGET_PARTITION_BYTES = 128 * 1024**2
+
+# spark.sql.codegen.cache.maxEntries. Spark's default of 100 is smaller than
+# one pass of our own plans (run_batch on 300 rows generates 135 classes, a
+# curation pass 370-407), so at 100 a repeat pass misses the LRU on most
+# classes and re-runs Janino and then C2 on the new bytecode. Counted with
+# CodegenMetrics' compilation-time histogram: a repeat run_batch compiles
+# 64-79 classes at 100 entries and 0 at 4000, and one traced perfbench run
+# (all four workloads in one JVM) compiles 791 distinct classes, so 4000
+# holds about five such runs. Peak RSS did not move at 4000.
+CODEGEN_CACHE_ENTRIES = 4000
 
 
 def _dir_bytes(path: str) -> int:
@@ -130,6 +144,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Disable PySpark's per-call DataFrame debugging context (call-site
         # capture for error messages): every Column/functions API call
         # otherwise pays a conf RPC + Python stack walk + two JVM calls —

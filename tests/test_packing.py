@@ -64,6 +64,43 @@ def test_pack_bin_accounting(spark):
     assert rows[0].bin_id == 0 and rows[0].bin_offset == 0
 
 
+def _python_pack(rows, budget):
+    """Plain-Python reference: an exclusive prefix sum of the sizes in
+    doc_id order, a null size counting as 0 tokens."""
+    out, pos = {}, 0
+    for doc_id, n in sorted(rows):
+        out[doc_id] = (n, pos // budget, pos % budget)
+        pos += n or 0
+    return out
+
+
+def _packed_rows(df, budget, n_blocks=64):
+    got = packing.pack_sequences(df, "n_tokens", "doc_id", budget, n_blocks)
+    return {r.doc_id: (r.n_tokens, r.bin_id, r.bin_offset) for r in got.collect()}
+
+
+def test_pack_empty_input_returns_empty_frame_with_same_schema(spark):
+    empty = _sized(spark, n=0)
+    got = packing.pack_sequences(empty, "n_tokens", "doc_id", budget=64)
+    want = packing.pack_sequences(_sized(spark, n=3), "n_tokens", "doc_id", budget=64)
+    assert got.schema == want.schema
+    assert _packed_rows(empty, 64) == _python_pack([], 64) == {}
+
+
+def test_pack_null_sizes_count_as_zero_tokens(spark):
+    """Blocks whose sizes are all null (doc_ids 10-19 of four blocks) and
+    scattered nulls elsewhere pack like 0-token records; so does a frame
+    whose every size is null."""
+    rows = [
+        (i, None if 10 <= i < 20 or i % 7 == 3 else i % 5 + 1) for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
+    assert _packed_rows(df, 8, n_blocks=4) == _python_pack(rows, 8)
+    all_null = [(i, None) for i in range(12)]
+    df = spark.createDataFrame(all_null, "doc_id long, n_tokens long")
+    assert _packed_rows(df, 8, n_blocks=4) == _python_pack(all_null, 8)
+
+
 def test_chunk_sliding_covers_text_exactly(spark):
     """Chunks tile the document: starts advance by stride, the last chunk
     is the only one allowed to be short, and reconstructing from
