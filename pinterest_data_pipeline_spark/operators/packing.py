@@ -54,6 +54,9 @@ def pack_sequences(
 
     A null size counts as 0 tokens in the offsets (its own ``size_col``
     stays null); an empty input returns an empty frame of the same schema.
+    Rows with a null ``order_col`` pack first, as Spark's ascending
+    ``ORDER BY`` places them: they form block -1, ahead of every other
+    block.
     """
 
     def packed(frame: DataFrame, cum_before) -> DataFrame:
@@ -64,13 +67,18 @@ def pack_sequences(
             (cum_before % budget).cast("long").alias("bin_offset"),
         )
 
-    lo, hi = df.agg(F.min(order_col), F.max(order_col)).first()
-    if lo is None:
+    lo, hi, n = df.agg(F.min(order_col), F.max(order_col), F.count(F.lit(1))).first()
+    if n == 0:
         return packed(df, F.lit(None).cast("long"))
+    if lo is None:  # every order value is null: all rows form block -1
+        lo = hi = 0
     span = max(int(hi) - int(lo) + 1, 1)
-    blk = F.floor(
-        (F.col(order_col) - F.lit(int(lo))) * F.lit(n_blocks) / F.lit(span)
-    ).cast("int")
+    blk = F.coalesce(
+        F.floor(
+            (F.col(order_col) - F.lit(int(lo))) * F.lit(n_blocks) / F.lit(span)
+        ).cast("int"),
+        F.lit(-1),
+    )
     blocked = df.withColumn("_blk", blk)
     totals = blocked.groupBy("_blk").agg(F.sum(size_col).alias("_tot")).collect()
     offsets, running = {}, 0

@@ -987,14 +987,9 @@ def streaming_availablenow_events(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     from ..streaming import pipeline as streaming_pipeline
 
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    work_dir = os.path.join(
-        repo_root,
-        "spark-warehouse",
-        "_streaming_row",
-        sf_dir.strip("/").replace("/", "_"),
+    out = streaming_pipeline.availablenow_events_roundtrip(
+        spark, sf_dir, _work_dir(sf_dir, "_streaming_row")
     )
-    out = streaming_pipeline.availablenow_events_roundtrip(spark, sf_dir, work_dir)
     return out.select(
         "event_id",
         "user_id",

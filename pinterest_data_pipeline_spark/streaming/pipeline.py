@@ -23,13 +23,25 @@ path (``pintrest_stream_data_transformation.py``, STREAM for short):
 
 Three independent queries (one per entity), mirroring STREAM:224-232 — no
 cross-stream coordination, each with its own checkpoint and failure domain.
+
+The ``availablenow_*`` functions are bounded drives: each certifies an
+operator or sink against a batch dual. A drive wipes its ``work_dir``,
+lands its input in chunks and, after landing chunk k, drains the file
+source with an ``availableNow`` query before landing chunk k+1, so state
+and checkpoints carry from one chunk to the next as they would between a
+live stream's triggers. Exactly-once output rests on three parts: a
+replayable file source, the checkpoint's offset log, and an idempotent
+sink. The ``foreachBatch`` sinks that keep a store write batch N into a
+directory named ``batch=N`` and read only lower ids, so a replayed batch
+overwrites its own directory with the same rows.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import cleaning
@@ -39,6 +51,7 @@ from ..schemas import (
     STREAM_ENVELOPE_SCHEMA,
     USER_RAW_SCHEMA,
 )
+from ..session import fan_out, load_table, normalize_ntz
 
 RAW_SCHEMAS = {
     "pin": PIN_RAW_SCHEMA,
@@ -267,8 +280,6 @@ def attributed_conversions(
     what the oracle-checked dual ``events_view_purchase_attribution``
     exercises.
     """
-    from ..session import normalize_ntz
-
     views, purchases = normalize_ntz(views), normalize_ntz(purchases)
     v = views.withWatermark("ts", watermark).select(
         F.col("event_id").alias("view_id"),
@@ -319,8 +330,6 @@ def windowed_event_counts(
     is what the oracle-checked duals ``events_tumbling_window`` /
     ``events_sliding_window`` exercise.
     """
-    from ..session import normalize_ntz
-
     events = normalize_ntz(events)
     win = F.window(ts_col, duration, slide) if slide else F.window(ts_col, duration)
     return (
@@ -347,8 +356,6 @@ def session_event_counts(
     per open session is evicted once the watermark passes session end.
     Batch dual: ``events_session_window`` (oracle-checked).
     """
-    from ..session import normalize_ntz
-
     events = normalize_ntz(events)
     return (
         events.withWatermark(ts_col, watermark)
@@ -393,6 +400,152 @@ def run_streaming_pipeline(
     return queries
 
 
+# Wire payload of the two envelope roundtrips: the events columns, with
+# the timestamp as epoch micros (lossless for the driver's micro-precision
+# events and directly reproducible in DuckDB as ``epoch_us(ts)``).
+_EVENTS_WIRE = (
+    "event_id long, user_id long, event_type string, ts_us long, value double"
+)
+
+
+def _fresh_dir(path: str) -> str:
+    """Delete ``path`` if it exists and return it: each bounded drive
+    starts from an empty work dir, so repeated runs replay identically."""
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    return path
+
+
+def _to_envelopes(df: DataFrame) -> DataFrame:
+    """One envelope JSON line per row, in the ``{StreamName, Data,
+    PartitionKey}`` shape the reference's Kinesis emulator PUTs."""
+    payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
+    return df.select(
+        F.to_json(
+            F.struct(
+                F.lit("events").alias("StreamName"),
+                payload.alias("Data"),
+                F.col("user_id").cast("string").alias("PartitionKey"),
+            )
+        ).alias("value")
+    )
+
+
+def _envelope_stream(
+    spark: SparkSession, sf_dir: str, work_dir: str, every: int, replay_every: int = 0
+) -> DataFrame:
+    """Wipe ``work_dir``, land every ``every``-th event (by ``event_id``)
+    as envelope lines in ONE text file under ``work_dir/landing/events``
+    (each ``replay_every``-th of them twice), and return the parsed
+    :data:`_EVENTS_WIRE` stream over it. One file drains as one
+    micro-batch."""
+    subset = (
+        load_table(spark, sf_dir, "events")
+        .filter(F.col("event_id") % every == 0)
+        .select(
+            "event_id",
+            "user_id",
+            "event_type",
+            F.unix_micros(F.col("ts")).alias("ts_us"),
+            "value",
+        )
+    )
+    lines = _to_envelopes(subset)
+    if replay_every:
+        lines = lines.unionAll(
+            _to_envelopes(subset.filter(F.col("event_id") % replay_every == 0))
+        )
+    landing = os.path.join(_fresh_dir(work_dir), "landing", "events")
+    lines.coalesce(1).write.mode("overwrite").text(landing)
+    raw = spark.readStream.format("text").load(landing)
+    return parse_envelope_payload(raw, _EVENTS_WIRE, "event_id")
+
+
+def _split_at_midpoint(
+    df: DataFrame, col: str, halve_max: bool = False
+) -> list[DataFrame]:
+    """The two chunks of a bounded drive: rows with ``col`` at or below
+    the midpoint, then the rest. The midpoint lies halfway between the
+    min and max of ``col``, or at ``max // 2`` with ``halve_max`` (the
+    event-id split). An empty input gives two empty chunks, so the drive
+    still runs and its sink reads back 0 rows with its usual columns."""
+    lo, hi = df.agg(F.min(col), F.max(col)).first()
+    if hi is None:
+        return [df, df]
+    mid = F.lit(hi // 2 if halve_max else lo + (hi - lo) / 2)
+    return [df.filter(F.col(col) <= mid), df.filter(F.col(col) > mid)]
+
+
+def _drive_chunks(
+    spark: SparkSession, work_dir: str, chunks: list[DataFrame], schema, start
+) -> None:
+    """One bounded drive (see the module docstring): wipe ``work_dir``,
+    then append each chunk to ``work_dir/src`` and drain it with the
+    ``availableNow`` query ``start`` opens on the file source, before
+    landing the next."""
+    src = os.path.join(_fresh_dir(work_dir), "src")
+    for chunk in chunks:
+        chunk.write.mode("append").parquet(src)
+        start(spark.readStream.schema(schema).parquet(src)).awaitTermination()
+
+
+def _drive_upsert(
+    spark: SparkSession,
+    work_dir: str,
+    name: str,
+    chunks: list[DataFrame],
+    schema,
+    view,
+    keys: list[str],
+    order_col: str | None = None,
+) -> DataFrame:
+    """:func:`_drive_chunks` with ``view(stream)`` feeding the keyed
+    :func:`upsert_sink` at ``work_dir/state/<name>`` (checkpoint
+    ``work_dir/checkpoints/<name>``); returns the final table."""
+    table_dir = os.path.join(work_dir, "state", name)
+    ckpt_dir = os.path.join(work_dir, "checkpoints", name)
+    _drive_chunks(
+        spark, work_dir, chunks, schema,
+        lambda s: upsert_sink(
+            view(s), table_dir, ckpt_dir, keys, available_now=True, order_col=order_col
+        ),
+    )
+    return spark.read.parquet(table_dir)
+
+
+def _drive_append(
+    spark: SparkSession, work_dir: str, chunks: list[DataFrame], schema, view
+) -> DataFrame:
+    """:func:`_drive_chunks` with ``view(stream)`` feeding a parquet
+    :func:`write_entity_stream` sink at ``work_dir/out``; returns the
+    sink's rows without the heartbeat rows (negative ``user_id``)."""
+    ckpt_dir = os.path.join(work_dir, "ckpt")
+    _drive_chunks(
+        spark, work_dir, chunks, schema,
+        lambda s: write_entity_stream(
+            view(s), "out", work_dir, ckpt_dir, fmt="parquet", available_now=True
+        ),
+    )
+    out = spark.read.parquet(os.path.join(work_dir, "out"))
+    return out.filter(F.col("user_id") >= 0)
+
+
+def _start_foreach_batch(
+    stream: DataFrame, apply_batch, checkpoint_dir: str, available_now: bool
+):
+    """Start ``stream`` into ``apply_batch(batch_df, batch_id)`` with its
+    offsets checkpointed at ``checkpoint_dir``: the one writer set-up of
+    the ``foreachBatch`` sinks."""
+    writer = (
+        stream.writeStream.foreachBatch(apply_batch)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def availablenow_events_roundtrip(
     spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
@@ -406,89 +559,27 @@ def availablenow_events_roundtrip(
     can certify it from the same parquet the envelopes were derived from:
 
     * Envelope lines are serialized from ``events`` rows (every 20th
-      ``event_id``) in the exact ``{StreamName, Data, PartitionKey}`` wire
-      shape the reference's Kinesis emulator PUTs, and every 3rd selected
-      record is emitted TWICE — planted duplicates the watermarked dedup
-      (T2) must drop for the row count to match the oracle.
-    * All lines land in ONE text file, so the file source drains them in
-      one micro-batch and ``dropDuplicatesWithinWatermark`` state covers
-      every planted duplicate regardless of arrival order — the result is
-      exactly DISTINCT-by-key, which is what the SQL dual asserts.
+      ``event_id``), and every 3rd selected record is emitted TWICE —
+      planted duplicates the watermarked dedup (T2) must drop for the row
+      count to match the oracle.
+    * All lines land in ONE text file, so ``dropDuplicatesWithinWatermark``
+      state covers every planted duplicate regardless of arrival order —
+      the result is exactly DISTINCT-by-key, which is what the SQL dual
+      asserts.
     * The sink is the real checkpointed ``write_entity_stream`` writer
       (S8/T3), format-resolved via :func:`default_sink_format` so a
       Delta-enabled cluster certifies its Delta path with the same row.
-
-    ``work_dir`` is wiped and rebuilt every call (landing + checkpoint +
-    sink), so the run is idempotent for repeated driver/parity/bench
-    invocations. Timestamps travel on the wire as epoch micros (``ts_us``)
-    — lossless for the driver's micro-precision events and directly
-    reproducible in DuckDB as ``epoch_us(ts)``.
     """
-    import shutil
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..session import load_table
-
-    wire_schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts_us", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    landing = os.path.join(work_dir, "landing", "events")
+    typed = _envelope_stream(spark, sf_dir, work_dir, every=20, replay_every=3)
+    deduped = watermarked_dedup(
+        typed.withColumn("ts", F.timestamp_micros(F.col("ts_us"))),
+        "ts", delay="1 day", keys=["event_id"],
+    ).drop("ts")
     out_dir = os.path.join(work_dir, "sink")
     ckpt_dir = os.path.join(work_dir, "checkpoints")
-
-    subset = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 20 == 0)
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.unix_micros(F.col("ts")).alias("ts_us"),
-            "value",
-        )
-    )
-    def to_wire(df: DataFrame) -> DataFrame:
-        payload = F.to_json(F.struct(*[F.col(c) for c in df.columns]))
-        return df.select(
-            F.to_json(
-                F.struct(
-                    F.lit("events").alias("StreamName"),
-                    payload.alias("Data"),
-                    F.col("user_id").cast("string").alias("PartitionKey"),
-                )
-            ).alias("value")
-        )
-
-    lines = to_wire(subset)
-    planted_dups = to_wire(subset.filter(F.col("event_id") % 3 == 0))
-    lines.unionAll(planted_dups).coalesce(1).write.mode("overwrite").text(landing)
-
-    raw = spark.readStream.format("text").load(landing)
-    typed = parse_envelope_payload(raw, wire_schema, "event_id").withColumn(
-        "ts", F.timestamp_micros(F.col("ts_us"))
-    )
-    deduped = watermarked_dedup(typed, "ts", delay="1 day", keys=["event_id"]).drop(
-        "ts"
-    )
-    query = write_entity_stream(
+    write_entity_stream(
         deduped, "events", out_dir, ckpt_dir, available_now=True
-    )
-    query.awaitTermination()
+    ).awaitTermination()
     return spark.read.format(default_sink_format()).load(
         os.path.join(out_dir, "events")
     )
@@ -537,8 +628,6 @@ def upsert_sink(
         # crash recovery: a previous batch died mid-swap
         layout.recover_dir(table_dir, old_dir)
         # last-wins within the batch so merge sees unique keys
-        from pyspark.sql import Window
-
         tie_break = (
             [F.col(order_col).desc()] if order_col else []
         ) + [F.monotonically_increasing_id().desc()]
@@ -557,14 +646,7 @@ def upsert_sink(
         merged.write.mode("overwrite").parquet(tmp)
         layout.swap_dir(tmp, table_dir, old_dir)
 
-    writer = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(stream, apply_batch, checkpoint_dir, available_now)
 
 
 def availablenow_upsert_roundtrip(
@@ -585,68 +667,16 @@ def availablenow_upsert_roundtrip(
     All envelope lines land in one file (one micro-batch); cross-batch
     upsert semantics are pinned separately by the streaming pytest suite.
     """
-    import shutil
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ..session import load_table
-
-    wire_schema = StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("ts_us", LongType()),
-            StructField("value", DoubleType()),
-        ]
-    )
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    landing = os.path.join(work_dir, "landing", "events")
+    typed = _envelope_stream(spark, sf_dir, work_dir, every=10)
     table_dir = os.path.join(work_dir, "state", "latest_events")
-    ckpt_dir = os.path.join(work_dir, "checkpoints", "latest_events")
-
-    subset = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") % 10 == 0)
-        .select(
-            "event_id",
-            "user_id",
-            "event_type",
-            F.unix_micros(F.col("ts")).alias("ts_us"),
-            "value",
-        )
-    )
-    payload = F.to_json(F.struct(*[F.col(c) for c in subset.columns]))
-    subset.select(
-        F.to_json(
-            F.struct(
-                F.lit("events").alias("StreamName"),
-                payload.alias("Data"),
-                F.col("user_id").cast("string").alias("PartitionKey"),
-            )
-        ).alias("value")
-    ).coalesce(1).write.mode("overwrite").text(landing)
-
-    raw = spark.readStream.format("text").load(landing)
-    typed = parse_envelope_payload(raw, wire_schema, "event_id").withColumn(
-        "ord", F.struct(F.col("ts_us"), F.col("event_id"))
-    )
-    query = upsert_sink(
-        typed,
+    upsert_sink(
+        typed.withColumn("ord", F.struct(F.col("ts_us"), F.col("event_id"))),
         table_dir,
-        ckpt_dir,
+        os.path.join(work_dir, "checkpoints", "latest_events"),
         keys=["user_id"],
         available_now=True,
         order_col="ord",
-    )
-    query.awaitTermination()
+    ).awaitTermination()
     return spark.read.parquet(table_dir).drop("ord")
 
 
@@ -654,34 +684,22 @@ def availablenow_incremental_rollup(
     spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Incremental materialized view, driven end-to-end as a bounded run:
-    events arrive in TWO file batches; an update-mode streaming aggregation
-    (day x event_type counts + value sum) is maintained through the keyed
-    :func:`upsert_sink`, and the final table must equal the batch rollup
-    over all data.
+    an update-mode streaming aggregation (day x event_type counts + value
+    sum) is maintained through the keyed :func:`upsert_sink` over two
+    chunks split by ``event_id``, and the final table must equal the batch
+    rollup over all data.
 
     This is the pattern that replaces nightly full recomputes at 100 TB:
     each trigger emits only the (day, type) rows the new files touched,
     the MERGE rewrites only those keys, and aggregation state lives in the
-    checkpoint — history is never re-read. Two genuinely separate
-    availableNow runs (second sees only the second file via the shared
-    checkpoint) make the cross-batch merge load-bearing: if the sink ever
-    dropped or duplicated a key the totals would diverge from the oracle's
-    whole-table GROUP BY.
+    checkpoint — history is never re-read. The second drain sees only the
+    second chunk, so the cross-batch merge is load-bearing: if the sink
+    ever dropped or duplicated a key the totals would diverge from the
+    oracle's whole-table GROUP BY.
     """
-    import shutil
-
-    from ..session import load_table
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    table_dir = os.path.join(work_dir, "state", "daily_rollup")
-    ckpt_dir = os.path.join(work_dir, "checkpoints", "daily_rollup")
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    mid = (events.agg(F.max("event_id")).first()[0] or 0) // 2
 
     def rollup(df: DataFrame) -> DataFrame:
         # value accumulates as exact integer cents: streaming state adds
@@ -700,71 +718,39 @@ def availablenow_incremental_rollup(
             )
         )
 
-    for chunk in (
-        events.filter(F.col("event_id") <= mid),
-        events.filter(F.col("event_id") > mid),
-    ):
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        query = upsert_sink(
-            rollup(stream),
-            table_dir,
-            ckpt_dir,
-            keys=["day", "event_type"],
-            available_now=True,
-        )
-        query.awaitTermination()
-    return spark.read.parquet(table_dir)
+    return _drive_upsert(
+        spark, work_dir, "daily_rollup",
+        _split_at_midpoint(events, "event_id", halve_max=True),
+        events.schema, rollup, keys=["day", "event_type"],
+    )
 
 
 def availablenow_funnel_steps(
     spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
-    """Streaming ordered funnel, driven end-to-end as a bounded run: events
-    land in TWO event-time-ordered file batches (split at the time-range
-    midpoint — the log-ingestion arrival order the stateful operator's
-    precondition names); ``funnel_first_times`` maintains per-user
-    (t_view, t_click, t_purchase) in O(1) state across both drains, the
-    keyed upsert sink converges the monotone per-user rows, and the result
-    is the final per-user funnel table. The caller rolls it up with the
-    SAME presentation edge as the batch funnel, so the two must agree
+    """Streaming ordered funnel, driven end-to-end as a bounded run over
+    two event-time-ordered chunks (split at the time-range midpoint — the
+    log-ingestion arrival order the stateful operator's precondition
+    names); ``funnel_first_times`` maintains per-user (t_view, t_click,
+    t_purchase) in O(1) state across both drains, the keyed upsert sink
+    converges the monotone per-user rows, and the result is the final
+    per-user funnel table. The caller rolls it up with the SAME
+    presentation edge as the batch funnel, so the two must agree
     row-for-row on the same events.
 
     The 100 TB posture: per-user state is three longs (no event buffering),
     emission touches only users seen in the batch, and the upsert rewrites
     only their keys — history is never re-read across triggers.
     """
-    import shutil
-
-    from ..session import load_table
     from .stateful import funnel_first_times
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    table_dir = os.path.join(work_dir, "state", "funnel_times")
-    ckpt_dir = os.path.join(work_dir, "checkpoints", "funnel_times")
 
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_type"
     )
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
-    mid_ts = lo + (hi - lo) / 2
-    for chunk in (
-        events.filter(F.col("ts") <= F.lit(mid_ts)),
-        events.filter(F.col("ts") > F.lit(mid_ts)),
-    ):
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        query = upsert_sink(
-            funnel_first_times(stream),
-            table_dir,
-            ckpt_dir,
-            keys=["user_id"],
-            available_now=True,
-        )
-        query.awaitTermination()
-    return spark.read.parquet(table_dir)
+    return _drive_upsert(
+        spark, work_dir, "funnel_times", _split_at_midpoint(events, "ts"),
+        events.schema, funnel_first_times, keys=["user_id"],
+    )
 
 
 def availablenow_attribution_outer(
@@ -778,8 +764,8 @@ def availablenow_attribution_outer(
     watermark passes ``view_ts + horizon``, because until then a matching
     purchase could still arrive. That makes outer emission WATERMARK-
     DRIVEN, and a bounded drive has to advance the watermark past the last
-    real view: after the two real event-time-ordered batches, two
-    far-future sentinel batches (negative user_id, join-inert) push the
+    real view: after the two real event-time-ordered chunks, two
+    far-future sentinel chunks (negative user_id, join-inert) push the
     checkpoint watermark beyond every real view's expiry — the second one
     is needed because batch N evicts with the watermark computed at the
     end of batch N-1. This is the standard event-time-heartbeat pattern
@@ -788,58 +774,34 @@ def availablenow_attribution_outer(
     sentinels' role and state stays bounded at horizon + watermark of
     history per side.
     """
-    import shutil
-
-    from ..session import load_table
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "out")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
-    mid_ts = lo + (hi - lo) / 2
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
+    hi = events.agg(F.max("ts").alias("hi"))
 
-    def sentinel(hours: int):
+    def sentinel(hours: int) -> DataFrame:
         # one heartbeat PER SIDE: the global watermark is the MIN over all
         # watermark nodes (multipleWatermarkPolicy=min), so advancing only
         # the views branch would pin the join's watermark at the last real
         # purchase and the trailing unmatched views would never flush.
         # Distinct negative user_ids keep the two heartbeats join-inert.
-        return spark.sql(
-            f"SELECT -1L AS event_id, timestamp'{hi}' + INTERVAL {hours} HOURS AS ts,"
-            " -1L AS user_id, 'view' AS event_type, CAST(0.0 AS DOUBLE) AS value"
-            f" UNION ALL SELECT -2L, timestamp'{hi}' + INTERVAL {hours} HOURS,"
-            " -2L, 'purchase', CAST(0.0 AS DOUBLE)"
-        )
+        ts = f"hi + INTERVAL {hours} HOURS AS ts"
+        return hi.selectExpr(
+            "-1L AS event_id", ts, "-1L AS user_id", "'view' AS event_type",
+            "0D AS value",
+        ).unionAll(hi.selectExpr("-2L", ts, "-2L", "'purchase'", "0D"))
 
-    chunks = [
-        events.filter(F.col("ts") <= F.lit(mid_ts)),
-        events.filter(F.col("ts") > F.lit(mid_ts)),
-        sentinel(8),
-        sentinel(16),
-    ]
-    for chunk in chunks:
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
+    def outer(stream: DataFrame) -> DataFrame:
         views = stream.filter(F.col("event_type") == "view")
         purchases = stream.filter(F.col("event_type") == "purchase")
-        joined = attributed_conversions(views, purchases, how="leftOuter")
-        query = (
-            joined.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
+        return attributed_conversions(views, purchases, how="leftOuter")
+
+    return _drive_append(
+        spark, work_dir,
+        _split_at_midpoint(events, "ts") + [sentinel(8), sentinel(16)],
+        "event_id long, ts timestamp, user_id long, event_type string, value double",
+        outer,
+    )
 
 
 def availablenow_cms_rollup(
@@ -847,155 +809,93 @@ def availablenow_cms_rollup(
 ) -> DataFrame:
     """Incrementally-maintained count-min sketch, driven end-to-end bounded.
 
-    The sketch twin of :func:`availablenow_incremental_rollup`: events
-    arrive in two file batches and the CMS cell table (depth 4 x width
-    256 over ``user_id``) is maintained as an update-mode streaming
-    aggregation through the keyed upsert sink. Count-min cells merge by
-    per-cell ADDITION, which is exactly what streaming aggregation state
-    computes — so the incrementally-maintained sketch must equal the
-    batch-built sketch over all data, bit for bit (the oracle rebuilds
-    it in SQL). The aggregate runs WITHOUT a watermark deliberately: its
-    state domain is bounded at depth*width = 1024 keys by construction,
-    the one case where unbounded-lifetime streaming state is safe at any
-    volume. At 100 TB/day this maintains frequency estimates for an
-    unbounded key domain in constant state and constant sink size.
+    The sketch twin of :func:`availablenow_incremental_rollup`: the CMS
+    cell table (depth 4 x width 256 over ``user_id``) is maintained as an
+    update-mode streaming aggregation through the keyed upsert sink.
+    Count-min cells merge by per-cell ADDITION, which is exactly what
+    streaming aggregation state computes — so the incrementally-maintained
+    sketch must equal the batch-built sketch over all data, bit for bit
+    (the oracle rebuilds it in SQL). The aggregate runs WITHOUT a
+    watermark deliberately: its state domain is bounded at depth*width =
+    1024 keys by construction, the one case where unbounded-lifetime
+    streaming state is safe at any volume. At 100 TB/day this maintains
+    frequency estimates for an unbounded key domain in constant state and
+    constant sink size.
     """
-    import shutil
-
     from ..operators import sketches
-    from ..session import load_table
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    table_dir = os.path.join(work_dir, "state", "cms_cells")
-    ckpt_dir = os.path.join(work_dir, "checkpoints", "cms_cells")
 
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id")
-    mid = (events.agg(F.max("event_id")).first()[0] or 0) // 2
-
-    for chunk in (
-        events.filter(F.col("event_id") <= mid),
-        events.filter(F.col("event_id") > mid),
-    ):
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema("event_id long, user_id long").parquet(src)
-        query = upsert_sink(
-            sketches.cms_cells(stream, "user_id", depth=4, width=256),
-            table_dir,
-            ckpt_dir,
-            keys=["row_idx", "bucket"],
-            available_now=True,
-        )
-        query.awaitTermination()
-    return spark.read.parquet(table_dir)
+    return _drive_upsert(
+        spark, work_dir, "cms_cells",
+        _split_at_midpoint(events, "event_id", halve_max=True),
+        "event_id long, user_id long",
+        lambda s: sketches.cms_cells(s, "user_id", depth=4, width=256),
+        keys=["row_idx", "bucket"],
+    )
 
 
 def availablenow_tdigest_daily(
     spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Incrementally-maintained per-day t-digest quantiles, driven
-    end-to-end bounded: events arrive in two file batches and the custom
-    stateful operator (:func:`..streaming.stateful.daily_quantile_digests`)
-    folds each batch into the per-day centroid state; the keyed upsert
-    sink keeps the latest (day, n, p50, p95) row per day (``n_values``
-    is monotone, so it is the order column). The non-algebraic sketch
-    twin of :func:`availablenow_cms_rollup`: CMS cells merge by
-    addition inside a built-in aggregate, quantile digests need
-    ``applyInPandasWithState`` — together they cover both halves of the
-    incremental-sketch story. Per-key state <= ~2*delta centroids.
+    end-to-end bounded: the custom stateful operator
+    (:func:`..streaming.stateful.daily_quantile_digests`) folds each
+    chunk into the per-day centroid state; the keyed upsert sink keeps
+    the latest (day, n, p50, p95) row per day (``n_values`` is monotone,
+    so it is the order column). Which rows go in which chunk changes the
+    digests, so the ``event_id`` split is part of the result. The
+    non-algebraic sketch twin of :func:`availablenow_cms_rollup`: CMS
+    cells merge by addition inside a built-in aggregate, quantile
+    digests need ``applyInPandasWithState`` — together they cover both
+    halves of the incremental-sketch story. Per-key state <= ~2*delta
+    centroids.
     """
-    import shutil
-
-    from ..session import load_table
     from .stateful import daily_quantile_digests
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    table_dir = os.path.join(work_dir, "state", "daily_digests")
-    ckpt_dir = os.path.join(work_dir, "checkpoints", "daily_digests")
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", F.to_date(F.date_trunc("day", F.col("ts"))).alias("day"), "value"
     )
-    mid = (events.agg(F.max("event_id")).first()[0] or 0) // 2
-    schema = "event_id long, day date, value double"
-
-    for chunk in (
-        events.filter(F.col("event_id") <= mid),
-        events.filter(F.col("event_id") > mid),
-    ):
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-        query = upsert_sink(
-            daily_quantile_digests(stream.drop("event_id")),
-            table_dir,
-            ckpt_dir,
-            keys=["day"],
-            available_now=True,
-            order_col="n_values",
-        )
-        query.awaitTermination()
-    return spark.read.parquet(table_dir)
+    return _drive_upsert(
+        spark, work_dir, "daily_digests",
+        _split_at_midpoint(events, "event_id", halve_max=True),
+        "event_id long, day date, value double",
+        lambda s: daily_quantile_digests(s.drop("event_id")),
+        keys=["day"], order_col="n_values",
+    )
 
 
 def availablenow_session_rollup(
     spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Streaming session windows (built-in ``session_window`` state
-    merge), driven end-to-end bounded: events land in TWO event-time-
-    ordered file batches, the 30-minute-gap session aggregate maintains
-    per-user open sessions across the drains — a session SPANNING the
-    batch boundary must merge its two halves in state, which is the
-    load-bearing property — and append mode emits each session exactly
-    once, when the watermark passes its close. Two far-future sentinel
-    batches (negative user_id, filtered on read) push the watermark past
-    every real session's close, because batch N evicts with the watermark
-    computed at the end of batch N-1; on a live stream the next day's
-    traffic plays that role and state stays bounded at the open-session
-    frontier per user.
+    merge), driven end-to-end bounded over two event-time-ordered chunks:
+    the 30-minute-gap session aggregate maintains per-user open sessions
+    across the drains — a session SPANNING the chunk boundary must merge
+    its two halves in state, which is the load-bearing property — and
+    append mode emits each session exactly once, when the watermark
+    passes its close. Two far-future sentinel chunks (negative user_id,
+    filtered on read) push the watermark past every real session's
+    close, because batch N evicts with the watermark computed at the end
+    of batch N-1; on a live stream the next day's traffic plays that
+    role and state stays bounded at the open-session frontier per user.
 
     Session value accumulates as exact integer cents (the source values
     are cent-quantized) because streaming state merges partials in a
     different order than a batch sum — integer addition is the
     order-insensitive formulation; the read edge divides once.
     """
-    import shutil
-
-    from ..session import load_table
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    out_dir = os.path.join(work_dir, "out")
-    ckpt_dir = os.path.join(work_dir, "ckpt")
-
     events = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
-    mid_ts = lo + (hi - lo) / 2
-    schema = "user_id long, ts timestamp, value double"
+    hi = events.agg(F.max("ts").alias("hi"))
 
-    def sentinel(hours: int):
-        return spark.sql(
-            f"SELECT -1L AS user_id, timestamp'{hi}' + INTERVAL {hours} HOURS AS ts,"
-            " CAST(0.0 AS DOUBLE) AS value"
+    def sentinel(hours: int) -> DataFrame:
+        return hi.selectExpr(
+            "-1L AS user_id", f"hi + INTERVAL {hours} HOURS AS ts", "0D AS value"
         )
 
-    chunks = [
-        events.filter(F.col("ts") <= F.lit(mid_ts)),
-        events.filter(F.col("ts") > F.lit(mid_ts)),
-        sentinel(8),
-        sentinel(16),
-    ]
-    for chunk in chunks:
-        chunk.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(schema).parquet(src)
-        sessions = (
+    def sessions(stream: DataFrame) -> DataFrame:
+        return (
             stream.withWatermark("ts", "1 hour")
-            .groupBy(
-                F.session_window("ts", "30 minutes").alias("w"), "user_id"
-            )
+            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
@@ -1007,26 +907,27 @@ def availablenow_session_rollup(
                 "cents",
             )
         )
-        query = (
-            sessions.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
+
+    return _drive_append(
+        spark, work_dir,
+        _split_at_midpoint(events, "ts") + [sentinel(8), sentinel(16)],
+        "user_id long, ts timestamp, value double",
+        sessions,
+    )
+
+
+def _with_replays(chunk: DataFrame) -> DataFrame:
+    """``chunk`` with every ``event_id % 5 == 0`` row delivered twice —
+    the duplicate delivery a Kinesis/Kafka consumer contract allows."""
+    return chunk.unionByName(chunk.filter(F.col("event_id") % 5 == 0))
 
 
 def availablenow_dedup_rollup(
     spark: SparkSession, sf_dir: str, work_dir: str
 ) -> DataFrame:
     """Exactly-once rollup over an AT-LEAST-ONCE source, driven end-to-end
-    as a bounded run: events arrive in two event-time-ordered file
-    batches, each polluted with planted replays (every event_id % 5 == 0
-    row appears twice in its batch — the duplicate delivery a Kinesis/
-    Kafka consumer contract allows), pass through
+    as a bounded run: two event-time-ordered chunks, each polluted with
+    planted replays (:func:`_with_replays`), pass through
     ``dropDuplicatesWithinWatermark`` keyed on event_id, and feed the
     update-mode day x type counting aggregate through the keyed upsert
     sink. The final table must equal the batch DISTINCT-event rollup —
@@ -1036,54 +937,30 @@ def availablenow_dedup_rollup(
     100 TB posture: dedup state holds only event_ids younger than the
     watermark delay (eviction is the operator's whole point — unlike
     plain streaming ``dropDuplicates``, whose state grows forever); the
-    time-ordered batch split keeps every replay inside the watermark so
+    time-ordered split keeps every replay inside the watermark so
     nothing is late-dropped, which is exactly the delivery guarantee a
     log-ordered source provides. Downstream the upsert rewrites only the
     keys the new files touched, as in ``availablenow_incremental_rollup``.
     """
-    import shutil
-
-    from ..session import load_table
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    table_dir = os.path.join(work_dir, "state", "dedup_rollup")
-    ckpt_dir = os.path.join(work_dir, "checkpoints", "dedup_rollup")
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type"
     )
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
-    if lo is None:
-        return events.select(
-            F.to_date("ts").alias("day"), "event_type"
-        ).groupBy("day", "event_type").agg(F.count(F.lit(1)).alias("event_count"))
-    mid_ts = lo + (hi - lo) / 2
-    for chunk in (
-        events.filter(F.col("ts") <= F.lit(mid_ts)),
-        events.filter(F.col("ts") > F.lit(mid_ts)),
-    ):
-        noisy = chunk.unionByName(chunk.filter(F.col("event_id") % 5 == 0))
-        noisy.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
+
+    def rollup(stream: DataFrame) -> DataFrame:
         deduped = stream.withWatermark("ts", "7 days").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        rollup = (
+        return (
             deduped.withColumn("day", F.to_date(F.date_trunc("day", F.col("ts"))))
             .groupBy("day", "event_type")
             .agg(F.count(F.lit(1)).alias("event_count"))
         )
-        query = upsert_sink(
-            rollup,
-            table_dir,
-            ckpt_dir,
-            keys=["day", "event_type"],
-            available_now=True,
-        )
-        query.awaitTermination()
-    return spark.read.parquet(table_dir)
+
+    return _drive_upsert(
+        spark, work_dir, "dedup_rollup",
+        [_with_replays(c) for c in _split_at_midpoint(events, "ts")],
+        events.schema, rollup, keys=["day", "event_type"],
+    )
 
 
 def availablenow_bitmap_distinct(
@@ -1094,10 +971,10 @@ def availablenow_bitmap_distinct(
     user_id div 63, folded with BIT_OR — the batch
     ``events_bitmap_retention`` representation) in an update-mode
     aggregate + keyed upsert sink. BIT_OR is idempotent, so the planted
-    at-least-once replays (every event_id % 5 == 0 delivered twice) are
-    absorbed for free — no ``dropDuplicatesWithinWatermark``, no
-    per-event-id state. Contrast with ``availablenow_dedup_rollup``,
-    which must hold event ids to protect a COUNT from replays.
+    at-least-once replays (:func:`_with_replays`) are absorbed for free —
+    no ``dropDuplicatesWithinWatermark``, no per-event-id state. Contrast
+    with ``availablenow_dedup_rollup``, which must hold event ids to
+    protect a COUNT from replays.
 
     100 TB posture: streaming state is |days| x |users|/63 bitmap rows
     (bounded by the key domain, not the event volume), and each
@@ -1105,55 +982,24 @@ def availablenow_bitmap_distinct(
     The popcount finalization runs on the maintained table, outside the
     stream.
     """
-    import shutil
-
-    from ..session import load_table
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    src = os.path.join(work_dir, "src")
-    table_dir = os.path.join(work_dir, "state", "bitmap_distinct")
-    ckpt_dir = os.path.join(work_dir, "checkpoints", "bitmap_distinct")
-
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id"
     )
-    lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
-    if lo is None:
-        return events.select(
-            F.to_date("ts").alias("day"),
-            F.lit(0).cast("long").alias("n_active"),
-        ).limit(0)
-    mid_ts = lo + (hi - lo) / 2
-    for chunk in (
-        events.filter(F.col("ts") <= F.lit(mid_ts)),
-        events.filter(F.col("ts") > F.lit(mid_ts)),
-    ):
-        noisy = chunk.unionByName(chunk.filter(F.col("event_id") % 5 == 0))
-        noisy.write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        words = (
+
+    def words(stream: DataFrame) -> DataFrame:
+        return (
             stream.withColumn("day", F.to_date("ts"))
             .withColumn("word", F.expr("user_id div 63").cast("long"))
-            .withColumn(
-                "bit", F.expr("shiftleft(1L, CAST(user_id % 63 AS INT))")
-            )
+            .withColumn("bit", F.expr("shiftleft(1L, CAST(user_id % 63 AS INT))"))
             .groupBy("day", "word")
             .agg(F.bit_or("bit").alias("bits"))
         )
-        query = upsert_sink(
-            words,
-            table_dir,
-            ckpt_dir,
-            keys=["day", "word"],
-            available_now=True,
-        )
-        query.awaitTermination()
-    return (
-        spark.read.parquet(table_dir)
-        .groupBy("day")
-        .agg(F.sum(F.bit_count("bits")).cast("long").alias("n_active"))
-    )
+
+    return _drive_upsert(
+        spark, work_dir, "bitmap_distinct",
+        [_with_replays(c) for c in _split_at_midpoint(events, "ts")],
+        events.schema, words, keys=["day", "word"],
+    ).groupBy("day").agg(F.sum(F.bit_count("bits")).cast("long").alias("n_active"))
 
 
 def incremental_dedup_store_sink(
@@ -1167,14 +1013,13 @@ def incremental_dedup_store_sink(
     checkpoint_dir: str | None = None,
     available_now: bool = False,
 ):
-    """Streaming ARRIVAL path for the incremental dedup store (VERDICT
-    r15 item 2): each micro-batch of documents dedups against the
-    signature store as of the PREVIOUS batch and appends its kept
-    signatures — the production arrival the reference's landing zone
-    implies (STREAM:45-232 is arrival-at-a-time into persistent tables;
-    this is the LLM-pipeline analogue of that surface, driven by the
-    engine's own streaming runtime instead of an external batch
-    scheduler).
+    """Streaming ARRIVAL path for the incremental MinHash dedup store:
+    each micro-batch of documents dedups against the signature store as
+    of the PREVIOUS batch and appends its kept signatures — the
+    production arrival the reference's landing zone implies
+    (STREAM:45-232 is arrival-at-a-time into persistent tables; this is
+    the LLM-pipeline analogue of that surface, driven by the engine's own
+    streaming runtime instead of an external batch scheduler).
 
     Store layout under ``work_dir`` (the base store is READ-ONLY input —
     ``base_sigs``/``base_docs`` frames, typically the fingerprint-cached
@@ -1185,12 +1030,8 @@ def incremental_dedup_store_sink(
       NEXT batches' Jaccard verification fetches candidates from)
     * ``decisions/batch=N/`` — batch N's per-document decision rows
 
-    EXACTLY-ONCE at the table level without a transaction log: every
-    write is ``overwrite`` into a directory NAMED by the micro-batch id,
-    and batch N reads only deltas with id < N — so a replayed batch
-    (crash between the delta writes and the checkpoint commit)
-    overwrites its own directories with identical content, and a stale
-    partial directory from a dead incarnation is invisible to the
+    Replays are idempotent by batch-id directory (module docstring): a
+    stale partial directory from a dead incarnation is invisible to the
     batches that follow until its id replays. This is the same
     idempotency contract Delta encodes with ``txnAppId``/``txnVersion``;
     directory-per-batch is the scaffold's manifest.
@@ -1208,7 +1049,6 @@ def incremental_dedup_store_sink(
     exactly like the IVF cell index.
     """
     from ..operators import dedup as dedup_ops
-    from ..session import fan_out
 
     spark = stream_docs.sparkSession
     sig_delta_root = os.path.join(work_dir, "sig_delta")
@@ -1243,17 +1083,10 @@ def incremental_dedup_store_sink(
         finally:
             decisions.unpersist()
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(work_dir, "_checkpoint"),
-        )
+    return _start_foreach_batch(
+        stream_docs, apply_batch,
+        checkpoint_dir or os.path.join(work_dir, "_checkpoint"), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def availablenow_incremental_dedup_roundtrip(
@@ -1268,26 +1101,16 @@ def availablenow_incremental_dedup_roundtrip(
     threshold: float = 0.3,
 ) -> DataFrame:
     """Drive :func:`incremental_dedup_store_sink` as one bounded,
-    oracle-checkable run: each ``arrivals`` frame lands as ONE file
-    (sequential writes, distinct mtimes) and ``maxFilesPerTrigger=1``
-    pins file == micro-batch, so arrival k IS batch k and the greedy
-    within-batch policy is deterministic cross-engine. ``work_dir``
-    (landing + checkpoint + store deltas + decisions) is wiped per call
-    — repeated driver/parity/bench invocations replay identically.
+    oracle-checkable run over :func:`_landed_stream` (arrival k IS batch
+    k, so the greedy within-batch policy is deterministic cross-engine).
 
     Returns the accumulated decisions table with the directory-encoded
     ``batch`` id surfaced as ``arrival`` (1-based).
     """
-    import shutil
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    stream = _landed_stream(spark, work_dir, arrivals)
-    query = incremental_dedup_store_sink(
-        stream, work_dir, base_sigs, base_docs, text_col, id_col,
-        threshold, available_now=True,
-    )
-    query.awaitTermination()
+    incremental_dedup_store_sink(
+        _landed_stream(spark, work_dir, arrivals), work_dir, base_sigs, base_docs,
+        text_col, id_col, threshold, available_now=True,
+    ).awaitTermination()
     return spark.read.parquet(os.path.join(work_dir, "decisions")).withColumn(
         "arrival", (F.col("batch") + 1).cast("int")
     ).drop("batch")
@@ -1313,11 +1136,12 @@ def _committed_batch_dirs(root: str, before: int) -> list[str]:
 
 
 def _landed_stream(spark: SparkSession, work_dir: str, arrivals: list[DataFrame]):
-    """Land each arrival frame as ONE file (sequential writes, distinct
-    mtimes) and open a ``maxFilesPerTrigger=1`` file-source stream over
-    the landing dir, so arrival k IS micro-batch k — the determinism
-    pin every oracle-checkable streaming roundtrip needs."""
-    landing = os.path.join(work_dir, "landing")
+    """Wipe ``work_dir``, land each arrival frame as ONE file under
+    ``work_dir/landing`` (sequential writes, distinct mtimes) and open a
+    ``maxFilesPerTrigger=1`` file-source stream over it, so arrival k IS
+    micro-batch k — the determinism pin every oracle-checkable store
+    roundtrip needs."""
+    landing = os.path.join(_fresh_dir(work_dir), "landing")
     for arr in arrivals:
         arr.coalesce(1).write.mode("append").parquet(landing)
     return (
@@ -1334,19 +1158,19 @@ def ivf_stream_upsert_sink(
     checkpoint_dir: str | None = None,
     available_now: bool = False,
 ):
-    """Streaming ARRIVAL path for the IVF index (VERDICT r15 item 2, ANN
-    member): each micro-batch of vectors assigns to the FIXED stored
-    centroids (O(batch) map-side Arrow kernel — FAISS ``IVF.add``
-    semantics, no retrain, no store read at all) and lands as a
-    cell-partitioned delta directory named by the micro-batch id under
-    ``work_dir/delta/batch=N/``. Readers take base ∪ deltas; the r15
-    compactor merges deltas into base cells on schedule, and the r16
-    drift monitor + retrain-migrate close the lifecycle.
+    """Streaming ARRIVAL path for the IVF index: each micro-batch of
+    vectors assigns to the FIXED stored centroids (O(batch) map-side
+    Arrow kernel — FAISS ``IVF.add`` semantics, no retrain, no store read
+    at all) and lands as a cell-partitioned delta directory named by the
+    micro-batch id under ``work_dir/delta/batch=N/``. Readers take base ∪
+    deltas; the partition compactor (``sources.layout.compact_partitions``)
+    merges deltas into base cells on schedule (``ann_ivf_index_compaction``),
+    and the centroid-drift gate with ``similarity.ivf_retrain_migrate``
+    (``ann_ivf_drift_gated_retrain``) closes the lifecycle.
 
-    EXACTLY-ONCE at the table level: every write is ``overwrite`` into
-    its batch-id-named directory (``incremental_dedup_store_sink``'s
-    contract — a replayed batch overwrites itself with identical
-    content; assignment is deterministic given the centroids).
+    Replays are idempotent by batch-id directory (module docstring);
+    assignment is deterministic given the centroids, so a replayed batch
+    rewrites identical content.
     """
     from ..operators import similarity
 
@@ -1359,17 +1183,10 @@ def ivf_stream_upsert_sink(
             os.path.join(delta_root, f"batch={batch_id}")
         )
 
-    writer = (
-        stream_vecs.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(work_dir, "_checkpoint"),
-        )
+    return _start_foreach_batch(
+        stream_vecs, apply_batch,
+        checkpoint_dir or os.path.join(work_dir, "_checkpoint"), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def availablenow_ivf_upsert_roundtrip(
@@ -1378,20 +1195,13 @@ def availablenow_ivf_upsert_roundtrip(
     arrivals: list[DataFrame],
     centroids: list[list[float]],
 ) -> DataFrame:
-    """Drive :func:`ivf_stream_upsert_sink` as one bounded run (one
-    landing file per arrival, file == micro-batch) and return the
-    accumulated index DELTA (all committed batches, cell column intact).
-    ``work_dir`` is wiped per call — repeated driver/parity/bench
-    invocations replay identically."""
-    import shutil
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    stream = _landed_stream(spark, work_dir, arrivals)
-    query = ivf_stream_upsert_sink(
-        stream, work_dir, centroids, available_now=True
-    )
-    query.awaitTermination()
+    """Drive :func:`ivf_stream_upsert_sink` as one bounded run over
+    :func:`_landed_stream` and return the accumulated index DELTA (all
+    committed batches, cell column intact)."""
+    ivf_stream_upsert_sink(
+        _landed_stream(spark, work_dir, arrivals), work_dir, centroids,
+        available_now=True,
+    ).awaitTermination()
     dirs = _committed_batch_dirs(os.path.join(work_dir, "delta"), 1 << 62)
     out = spark.read.parquet(dirs[0])
     for p in dirs[1:]:
@@ -1408,18 +1218,18 @@ def kmv_stream_merge_sink(
     checkpoint_dir: str | None = None,
     available_now: bool = False,
 ):
-    """Streaming ARRIVAL path for the KMV vocabulary sketch (VERDICT r15
-    item 2, sketch member): each micro-batch tokenizes its documents
-    (O(batch)), sketches them, and MERGES into the store sketch as of
-    the previous batch — the store corpus is never re-read; the arrival
-    cost is the batch's tokens plus a ≤k-row store read. The merged
-    sketch is VERSIONED per batch (``work_dir/sketch/batch=N/`` holds
-    the full ≤k-row sketch AFTER batch N), which is what makes replay
-    exact: a replayed batch re-reads the version its id mandates
-    (largest id < N — never its own output) and overwrites its own
-    directory with identical content. KMV is closed under union, so the
-    stream-maintained sketch equals the from-scratch sketch of
-    store ∪ arrivals bit-for-bit (the oracle-checked contract).
+    """Streaming ARRIVAL path for the KMV vocabulary sketch: each
+    micro-batch tokenizes its documents (O(batch)), sketches them, and
+    MERGES into the store sketch as of the previous batch — the store
+    corpus is never re-read; the arrival cost is the batch's tokens plus
+    a ≤k-row store read. The merged sketch is VERSIONED per batch
+    (``work_dir/sketch/batch=N/`` holds the full ≤k-row sketch AFTER
+    batch N), which is what makes replay exact: a replayed batch re-reads
+    the version its id mandates (largest id < N — never its own output)
+    and overwrites its own directory with identical content. KMV is
+    closed under union, so the stream-maintained sketch equals the
+    from-scratch sketch of store ∪ arrivals bit-for-bit (the
+    oracle-checked contract).
     """
     from ..operators import sketches
 
@@ -1441,17 +1251,10 @@ def kmv_stream_merge_sink(
             os.path.join(sketch_root, f"batch={batch_id}")
         )
 
-    writer = (
-        stream_docs.writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            checkpoint_dir or os.path.join(work_dir, "_checkpoint"),
-        )
+    return _start_foreach_batch(
+        stream_docs, apply_batch,
+        checkpoint_dir or os.path.join(work_dir, "_checkpoint"), available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def availablenow_kmv_merge_roundtrip(
@@ -1462,19 +1265,13 @@ def availablenow_kmv_merge_roundtrip(
     text_col: str = "text",
     k: int = 64,
 ) -> list[DataFrame]:
-    """Drive :func:`kmv_stream_merge_sink` as one bounded run (one
-    landing file per arrival, file == micro-batch) and return the
-    per-batch sketch VERSIONS in batch order (version i = the store
-    sketch after arrival i). ``work_dir`` is wiped per call."""
-    import shutil
-
-    if os.path.exists(work_dir):
-        shutil.rmtree(work_dir)
-    stream = _landed_stream(spark, work_dir, arrivals)
-    query = kmv_stream_merge_sink(
-        stream, work_dir, base_sketch, text_col, k, available_now=True
-    )
-    query.awaitTermination()
+    """Drive :func:`kmv_stream_merge_sink` as one bounded run over
+    :func:`_landed_stream` and return the per-batch sketch VERSIONS in
+    batch order (version i = the store sketch after arrival i)."""
+    kmv_stream_merge_sink(
+        _landed_stream(spark, work_dir, arrivals), work_dir, base_sketch, text_col, k,
+        available_now=True,
+    ).awaitTermination()
     return [
         spark.read.parquet(p)
         for p in _committed_batch_dirs(

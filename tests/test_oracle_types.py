@@ -14,11 +14,12 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
 from pinterest_data_pipeline_spark.session import TESTDATA_TABLES

@@ -101,6 +101,22 @@ def test_pack_null_sizes_count_as_zero_tokens(spark):
     assert _packed_rows(df, 8, n_blocks=4) == _python_pack(all_null, 8)
 
 
+def test_pack_null_order_values_pack_first(spark):
+    """A null doc_id packs ahead of every other row, as Spark's ascending
+    ORDER BY places nulls; a frame whose only doc_id is null packs at 0."""
+    rows = [(1, 5), (2, 7), (None, 3)]
+    want, pos = {}, 0
+    for doc_id, n in sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0)):
+        want[doc_id] = (n, pos // 4, pos % 4)
+        pos += n
+    df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
+    assert _packed_rows(df, 4) == want == {
+        None: (3, 0, 0), 1: (5, 0, 3), 2: (7, 2, 0),
+    }
+    only_null = spark.createDataFrame([(None, 3)], "doc_id long, n_tokens long")
+    assert _packed_rows(only_null, 4) == {None: (3, 0, 0)}
+
+
 def test_chunk_sliding_covers_text_exactly(spark):
     """Chunks tile the document: starts advance by stride, the last chunk
     is the only one allowed to be short, and reconstructing from

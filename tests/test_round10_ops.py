@@ -283,16 +283,41 @@ def test_cdc_scd2_roundtrip_paths_agree(spark):
     assert all(str(r.current_since) == "2020-01-01" for r in kept)
 
 
-def test_availablenow_tdigest_daily_empty_events(spark, tmp_path):
-    """ADVICE r9: an empty events table must yield an empty digest table,
-    not TypeError(None // 2) from max(event_id) on zero rows."""
+# Column names of each chunked streaming drive on a non-empty events table.
+DRIVE_COLUMNS = {
+    "incremental_rollup": ["day", "event_type", "event_count", "value_cents"],
+    "funnel_steps": ["user_id", "t_view", "t_click", "t_purchase"],
+    "attribution_outer": [
+        "view_id", "purchase_id", "user_id", "lag_seconds", "purchase_value",
+    ],
+    "cms_rollup": ["row_idx", "bucket", "cell_count"],
+    "tdigest_daily": ["day", "n_values", "p50", "p95"],
+    "session_rollup": ["user_id", "session_start_ts", "n_events", "cents"],
+    "dedup_rollup": ["day", "event_type", "event_count"],
+    "bitmap_distinct": ["day", "n_active"],
+}
+
+
+@pytest.fixture(scope="module")
+def empty_events_dir(spark, tmp_path_factory):
+    """An sf dir whose events.parquet has the testdata schema and 0 rows."""
+    d = tmp_path_factory.mktemp("empty_events")
+    ev = spark.read.parquet(f"{SF}/events.parquet").limit(0)
+    ev.write.parquet(str(d / "events.parquet"))
+    return str(d)
+
+
+@pytest.mark.parametrize("drive", sorted(DRIVE_COLUMNS))
+def test_availablenow_drive_empty_events(spark, empty_events_dir, tmp_path, drive):
+    """Every chunked streaming drive returns 0 rows, with its usual
+    columns, on an empty events table: the shared midpoint split gives two
+    empty chunks instead of subtracting None bounds."""
     from pinterest_data_pipeline_spark.streaming import pipeline as sp
 
-    ev = spark.read.parquet(f"{SF}/events.parquet").limit(0)
-    ev.write.parquet(str(tmp_path / "events.parquet"))
-    out = sp.availablenow_tdigest_daily(
-        spark, str(tmp_path), str(tmp_path / "_work")
+    out = getattr(sp, f"availablenow_{drive}")(
+        spark, empty_events_dir, str(tmp_path / "_work")
     )
+    assert out.columns == DRIVE_COLUMNS[drive]
     assert out.count() == 0
 
 

@@ -30,7 +30,7 @@ from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
 from pinterest_data_pipeline_spark.session import TESTDATA_TABLES, get_spark
