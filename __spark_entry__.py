@@ -1,12 +1,13 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Registry surface of the engine: ``entry``, ``queries`` and ``oracle_sql``.
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash -> CORRECTNESS_r{N}.json).
+``entry(spark)`` runs the flagship query as a smoke check. Each
+``queries()[name]`` has a DuckDB dual ``oracle_sql()[name]``;
+``tools/check_parity.py`` runs both on the same parquet and compares row
+count, column names and an order-insensitive value hash. The tier-1 tests
+and the verify skill drive the same surface.
 
 Implementation lives in ``pinterest_data_pipeline_spark``; this module is a
-thin registry so the driver imports one flat surface.
+thin registry so callers import one flat surface.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query on /root/testdata/sf0.001; driver checks rows>0.
+    """Flagship query on /root/testdata/sf0.001; the smoke check wants rows>0.
 
     Exercises the engine's whole hot path: parquet scan -> 4-way join
     (broadcast dim + sort-merge fact) -> hash aggregate -> window rank ->
@@ -33,91 +34,10 @@ def entry(spark: SparkSession) -> DataFrame:
     return analytics.q1_top_brand_per_nation(spark, SMOKE_SF_DIR)
 
 
-# The correctness driver evaluates the FIRST 50 registry entries. The
-# window's composition is DATA-DRIVEN: tools/ledger.py derives each
-# query's certification history from CORRECTNESS_r*.json, and
-# tests/test_registry_window.py asserts the seating invariants against it
-# (every oracled-never-certified query seated; no twice-certified query
-# holding a seat while an under-certified one waits; rotation never
-# deletes a query — full-registry parity stays enforced locally by
-# tools/check_parity.py). Run `python tools/ledger.py` for the ledger,
-# and `python tools/ledger.py --propose-window` to GENERATE the rotation
-# below (VERDICT r8 item 7 — this window is that tool's output).
-# ROUND-17 ROTATION (tool-proposed): the six r16 births are
-# once-certified and keep seats; the cluster family heads the back-fill
-# via ledger.RESEAT_CHANGED (VERDICT r16 item 4 — its connected-
-# components algorithm changed after its last certification: r16 driver
-# union-find + r17 pointer-doubling / driver-side contraction, so a seat
-# re-certifies changed code first); staleness back-fill then continues
-# through the r6/r8 and r1-r3/r9 blocks.
-SEATING_ROUND = 17  # invariant tests evaluate the ledger as of SEATING_ROUND-1
-
-PRIORITY_WINDOW: tuple[str, ...] = (
-    "ann_ivf_centroid_retrain",  # r16
-    "dedup_incremental_stream_store",  # r16
-    "dedup_bucket_store_compaction",  # r16
-    "ann_ivf_stream_upsert",  # r16
-    "sketch_kmv_stream_store",  # r16
-    "ann_ivf_drift_gated_retrain",  # r16
-    "dedup_cluster_canonical",  # r5,r6,r15
-    "dedup_near_duplicate_clusters",  # r2,r3,r4,r14
-    "dedup_incremental_clusters",  # r14,r15
-    "dedup_decontaminate_ngram",  # r6,r8
-    "embedding_quantize_int8",  # r6,r8
-    "embedding_truncate_renormalize",  # r7,r8
-    "ann_two_stage_rerank",  # r6,r8
-    "layout_compact_small_files",  # r6,r8
-    "streaming_funnel_steps",  # r7,r8
-    "events_ewma_daily",  # r7,r8
-    "events_pattern_match",  # r7,r8
-    "streaming_cms_rollup",  # r7,r8
-    "streaming_view_purchase_outer",  # r7,r8
-    "sketch_mg_heavy_langs",  # r7,r8
-    "join_dpp_partition_pruned",  # r7,r8
-    "dedup_simhash_exact_recall",  # r7,r8
-    "pandas_grouped_agg_weighted_mean",  # r7,r8
-    "schema_evolution_merge",  # r6,r8
-    "quality_table_checksum",  # r6,r8
-    "text_unigram_logprob",  # r6,r8
-    "join_lateral_top_customers",  # r7,r8
-    "recursive_order_chain",  # r7,r8
-    "scalar_math_functions",  # r6,r8
-    "cdc_snapshot_diff",  # r7,r8
-    "sketch_hll_merge_equals_direct",  # r6,r8
-    "agg_histogram_totalprice",  # r6,r8
-    "quality_column_profile",  # r6,r8
-    "events_funnel_steps",  # r7,r8
-    "events_retention_cohorts",  # r7,r8
-    "q2_orders_per_brand_year",  # r1,r2,r3,r9
-    "q3_top_supplier_per_nation",  # r1,r2,r3,r9
-    "q4_nation_with_top_supplier",  # r1,r2,r3,r9
-    "q5_top_segment_per_balance_band",  # r1,r2,r3,r9
-    "q6_median_acctbal_per_band",  # r1,r2,r3,r9
-    "q7_orders_per_year",  # r1,r2,r3,r9
-    "q8_median_price_by_year",  # r1,r2,r3,r9
-    "q9_median_price_by_year_priority",  # r1,r2,r3,r9
-    "clean_age_group_customers",  # r1,r2,r3,r9
-    "clean_scalar_functions",  # r1,r2,r3,r9
-    "set_ops_customers",  # r2,r3,r9
-    "join_semi_customers_with_orders",  # r1,r2,r3,r9
-    "join_outer_order_counts",  # r1,r2,r3,r9
-    "agg_rollup_region_nation",  # r1,r2,r3,r9
-    "agg_stats_suite",  # r1,r2,r3,r9
-)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
-
-    Ordered so the driver-checked prefix (PRIORITY_WINDOW) spans every
-    operator family; the remaining registry follows in registration order.
-    """
-    registry = dict(analytics.QUERIES)
-    ordered = {name: registry[name] for name in PRIORITY_WINDOW}
-    for name, fn in registry.items():
-        if name not in ordered:
-            ordered[name] = fn
-    return ordered
+    """One entry per implemented operator from SURVEY.md §2, in
+    registration order."""
+    return dict(analytics.QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:

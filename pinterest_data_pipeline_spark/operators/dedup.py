@@ -28,15 +28,15 @@ from ..session import persist_scoped
 from ..sources import layout
 from .text import shingles, stable_hash64
 
-# Row cap for the incremental family's BATCH-side broadcast hints (VERDICT
-# r14 item 1, the r12/r13 driver-killer class): the family's pitch is "cost
-# tracks the batch", but a day's landing at 100 TB scale is not always
-# broadcast-sized. Every batch-derived frame the operators below force
-# through the driver is COUNTED first (the self-enforcing pattern of
-# ranking.BROADCAST_BUCKET_LIMIT, same 1M-row value: ~tens of MB of
-# (long, long) rows) and above the cap the join degrades to sort-merge —
-# the join that spills — instead of a multi-GB broadcast. The STORE side
-# remains contractually never-broadcast regardless (plan-pinned).
+# Row cap for the incremental family's BATCH-side broadcast hints (a forced
+# broadcast of a data-sized frame exhausts driver memory): the family's
+# pitch is "cost tracks the batch", but a day's landing at 100 TB scale is
+# not always broadcast-sized. Every batch-derived frame the operators below
+# force through the driver is COUNTED first (the self-enforcing pattern of
+# ranking.BROADCAST_BUCKET_LIMIT, same 1M-row value: ~tens of MB of (long,
+# long) rows) and above the cap the join degrades to sort-merge — the join
+# that spills — instead of a multi-GB broadcast. The STORE side remains
+# contractually never-broadcast regardless (plan-pinned).
 BATCH_BROADCAST_CAP = 1_000_000
 
 
@@ -303,8 +303,8 @@ def band_bucket_store(
     broadcast join injects dynamic partition pruning — the scan reads
     only the (band, bh_part) directories the batch's bucket keys touch,
     never the whole store (the IVF cell-index discipline applied to the
-    signature store; the layout incremental_minhash_dedup's docstring
-    promised since r14)."""
+    signature store, the layout incremental_minhash_dedup's docstring
+    describes)."""
     return band_buckets(sigs, id_col, k, bands).withColumn(
         "bh_part", F.pmod(F.col("band_hash"), F.lit(n_parts)).cast("int")
     )
@@ -322,7 +322,7 @@ def write_bucket_store(
     n_parts: int = BUCKET_STORE_PARTS,
 ) -> None:
     """Build and persist the partitioned bucket store WITH its layout
-    metadata sidecar (ADVICE r15): the arrival probe's ``bh_part``
+    metadata sidecar: the arrival probe's ``bh_part``
     derivation must use the n_parts the store was BUILT with — a
     mismatch raises no error, the probe's pmod simply never matches the
     store's partition values and candidates (hence dedup decisions)
@@ -392,13 +392,13 @@ def incremental_candidates(
     """LSH candidate pairs for a batch against a signature store:
     ``(bid, oid, partner_in_store)``.
 
-    Direction contract (the r12/r13 broadcast-killer lesson, made
-    structural): the BATCH bucket frame broadcasts into the store scan —
-    the store side NEVER shuffles and is never the broadcast side
-    (plan-contract-pinned by tests/test_round14_ops.py). Batch-internal
+    Direction contract (a data-sized broadcast exhausts driver memory, so
+    the direction is structural): the BATCH bucket frame broadcasts into the
+    store scan — the store side NEVER shuffles and is never the broadcast
+    side (plan-contract-pinned by tests/test_round14_ops.py). Batch-internal
     candidates keep only earlier-id partners (the greedy policy).
 
-    The batch-side broadcast is itself SIZE-GUARDED (VERDICT r14 item 1):
+    The batch-side broadcast is itself SIZE-GUARDED:
     the bucket frame is persisted (it feeds the store probe AND both
     sides of the batch-internal self-join) and counted once; above
     ``batch_broadcast_cap`` rows the store probe degrades to a sort-merge
@@ -414,12 +414,11 @@ def incremental_candidates(
     filter on the store scan, so untouched directories are pruned at
     planning time — the O(touched buckets) arrival scan).
 
-    Static vs dynamic pruning (r16 optimization, guide §2.4/§6): the
-    r15 shape relied on runtime DPP injected by the broadcast probe,
-    which required the batch lineage to stay RAW (Spark's cache
+    Static vs dynamic pruning: runtime DPP injected by the broadcast
+    probe would require the batch lineage to stay RAW (Spark's cache
     substitution swaps any plan-equivalent subtree for an InMemoryRelation
-    and the DPP rule then drops the pruning subquery — measured r15).
-    Raw lineage re-ran the batch's shingle+minhash pass once per plan
+    and the DPP rule then drops the pruning subquery — measured), and
+    raw lineage re-runs the batch's shingle+minhash pass once per plan
     branch (~4x per arrival). The touched-partition list is tiny by
     construction, so collecting it on the driver and filtering the scan
     statically keeps the same O(touched dirs) guarantee — visible as
@@ -600,7 +599,7 @@ def incremental_minhash_dedup(
     so incremental == full-recompute restricted to batch-involving
     pairs (pinned by pytest and the exhaustive DuckDB dual).
     """
-    # persisted in BOTH store layouts since the r16 static-pruning change:
+    # persisted in BOTH store layouts because of the static pruning:
     # the probe's partition filter no longer depends on runtime DPP, so
     # the batch signature pass runs once per arrival (see
     # incremental_candidates' pruning note)
@@ -666,13 +665,13 @@ def _arrow_union_find(edges: DataFrame) -> list[tuple[int, int]]:
 
     The caller MUST have verified the frame is under its row cap (the
     self-enforcing count-gate discipline) — the collect here arrives as
-    TWO ARROW INT64 COLUMNS (~16 MB at the 1M-pair cap, ADVICE r14),
+    TWO ARROW INT64 COLUMNS (~16 MB at the 1M-pair cap),
     never Row objects. Union always points the larger root at the
     smaller, so every final ``find`` is the component MINIMUM — exactly
     the converged min-diffusion label.
 
     NULL endpoints (nullable bigint passes the caller's dtype gate) get
-    the distributed branch's semantics exactly (ADVICE r16): SQL equi-joins
+    the distributed branch's semantics exactly: SQL equi-joins
     never match a NULL key, so in the iterative branch a NULL node keeps
     its own NULL label and never links its partner to anything — the
     non-NULL partner still appears (as a singleton, unless a clean pair
@@ -811,7 +810,7 @@ def cluster_pairs(
     """Connected components over (id_a, id_b) near-dup pairs.
 
     Returns (member_id, cluster_id) with cluster_id = min member id.
-    Iterative min-label propagation WITH POINTER DOUBLING (r17): each
+    Iterative min-label propagation WITH POINTER DOUBLING: each
     round every node adopts the smallest label among itself, its
     neighbors' labels, and — the shortcut — its own label's label
     (``label(label(v))``). Plain diffusion moves the minimum one hop per
@@ -846,10 +845,10 @@ def cluster_pairs(
     ``limit(cap+1)`` collected as Arrow, so gate and collect are a single
     action and nothing is persisted) the components solve by driver
     union-find instead — the
-    same r14-certified shape :func:`incremental_cluster_update` runs on
+    same shape :func:`incremental_cluster_update` runs on
     contracted batch graphs: one bounded Arrow collect plus a linear
     pass beats O(diameter) rounds of join+checkpoint+action scheduling
-    whenever the pair set is driver-sized (r16, guide §1.2 — at sf0.1
+    whenever the pair set is driver-sized (at sf0.1
     the converged loop spent ~2.7 s of pure per-round job overhead on
     256 pairs). Labels are identical by construction (union-by-min ==
     converged min-diffusion; pytest-pinned against the distributed
@@ -865,15 +864,14 @@ def cluster_pairs(
         and dict(pairs.dtypes).get("id_a") == "bigint"
         and dict(pairs.dtypes).get("id_b") == "bigint"
     ):
-        # r17 (guide §1.4 + ADVICE r16): the count gate and the pair
-        # collect fold into ONE bounded action — limit(cap+1).toArrow()
-        # IS the gate (cap+1 rows back == over cap) and, under the cap,
-        # already holds the two int64 columns the union-find needs, so
-        # no persisted input generation exists at all. Over the cap the
-        # distributed loop below re-reads the raw pair lineage once into
-        # the ONLY cached generation (`cluster_edges`) — the old shape
-        # kept a second, redundant persisted copy of the input alive for
-        # the whole loop on exactly the largest graphs (§5).
+        # The count gate and the pair collect fold into ONE bounded action —
+        # limit(cap+1).toArrow() IS the gate (cap+1 rows back == over cap)
+        # and, under the cap, already holds the two int64 columns the
+        # union-find needs, so no persisted input generation exists at all.
+        # Over the cap the distributed loop below re-reads the raw pair
+        # lineage once into the ONLY cached generation (`cluster_edges`), so
+        # no second, redundant persisted copy of the input stays alive for
+        # the whole loop on exactly the largest graphs.
         limited = pairs.select("id_a", "id_b").limit(driver_cc_cap + 1).toArrow()
         if limited.num_rows <= driver_cc_cap:
             labels, saw_null = _union_find_min(
@@ -992,20 +990,19 @@ def incremental_cluster_update(
     registered query's recompute-from-scratch DuckDB dual.
 
     Scale shape: the corpus-scale clusters table is only SCANNED (root
-    lookup probed by the endpoint set; final remap against the
-    root-change map — the table itself never shuffles while the batch is
-    broadcast-sized); the connected components run on the contracted
-    batch graph only, O(new pairs), never the corpus. ONE self-enforcing
-    bounded action guards everything (r17 revision of the r15 probe):
-    at or under ``driver_cc_cap`` PAIRS the gate IS the collect —
-    ``limit(cap+1)`` as Arrow (two int64 columns, ~16 MB at the default
-    cap), one materialization of the pair lineage — and contraction,
-    union-find, remap and fresh labels then run driver-side with a
-    single distributed root-lookup job (:func:`_driver_cluster_update`);
-    every driver structure is bounded by the gate — endpoints and remap
-    rows <= 2*n_pairs, contracted edges <= n_pairs. Past
-    ``batch_broadcast_cap`` the batch-side broadcasts degrade to
-    sort-merge joins, and above ``driver_cc_cap`` the whole update
+    lookup probed by the endpoint set; final remap against the root-change
+    map — the table itself never shuffles while the batch is
+    broadcast-sized); the connected components run on the contracted batch
+    graph only, O(new pairs), never the corpus. ONE self-enforcing bounded
+    action guards everything: at or under ``driver_cc_cap`` PAIRS the gate
+    IS the collect — ``limit(cap+1)`` as Arrow (two int64 columns, ~16 MB at
+    the default cap), one materialization of the pair lineage — and
+    contraction, union-find, remap and fresh labels then run driver-side
+    with a single distributed root-lookup job
+    (:func:`_driver_cluster_update`); every driver structure is bounded by
+    the gate — endpoints and remap rows <= 2*n_pairs, contracted edges <=
+    n_pairs. Past ``batch_broadcast_cap`` the batch-side broadcasts degrade
+    to sort-merge joins, and above ``driver_cc_cap`` the whole update
     degrades to the persisted distributed shape ending in
     :func:`cluster_pairs` (same min-label answers, pinned by pytest).
     Returns (member_id, cluster_id) covering all old members plus the
@@ -1019,7 +1016,7 @@ def incremental_cluster_update(
         and dts.get("id_a") == "bigint"
         and dts.get("id_b") == "bigint"
     ):
-        # r17 (guide §1.4): the count gate and the pair collect fold into
+        # The count gate and the pair collect fold into
         # ONE bounded action — `limit(cap+1).toArrow()` materializes the
         # expensive verified-pairs lineage exactly once AND is the gate
         # (cap+1 rows back == over cap, fall through to the distributed
@@ -1032,7 +1029,7 @@ def incremental_cluster_update(
         # join + a local union. (Old shape: persist + count job, then a
         # contracted-graph join/distinct collect job, then remap/fresh
         # plans re-reading the cache.) Labels are pinned identical to
-        # the distributed branch by the r14/r15 equality pytests.
+        # the distributed branch by the equality pytests.
         limited = new_pairs.limit(driver_cc_cap + 1).toArrow()
         if limited.num_rows <= driver_cc_cap:
             return _driver_cluster_update(
@@ -1213,7 +1210,7 @@ def simhash(
     ``df`` is used as given: fan a narrow source scan out first
     (:func:`~..session.fan_out`), as ``load_documents`` does.
     """
-    if n_bits > 64:  # explicit raise: survives `python -O` (ADVICE r10 class)
+    if n_bits > 64:  # explicit raise: survives `python -O`, unlike assert
         raise ValueError("simhash packs into a single 64-bit long")
     lanes = (n_bits + 15) // 16  # 16-bit-spaced bit groups needed
     hash_fn = hash_fn or (lambda c: F.xxhash64(c))

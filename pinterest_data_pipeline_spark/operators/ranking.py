@@ -1,9 +1,9 @@
 """Distributed exact ranking without a data-sized single-task sort.
 
-The naive exact rank — ``row_number() OVER (ORDER BY value)`` or a
-per-key variant whose key cardinality is small — funnels every row of a
-partition through one task (the scale wall VERDICT r9 flagged on the
-weighted median). ``two_phase_rank`` splits it:
+The naive exact rank — ``row_number() OVER (ORDER BY value)`` or a per-key
+variant whose key cardinality is small — funnels every row of a partition
+through one task (the scale wall the weighted median hit).
+``two_phase_rank`` splits it:
 
 1. rows hash into coarse BUCKETS of the sort key (a value-range or
    key-prefix expression whose occupied-bucket count is bounded by the
@@ -18,8 +18,8 @@ it touches one row per occupied bucket. Residual skew is bounded by the
 largest single bucket, tunable via the bucket expression's granularity.
 
 Used by ``agg_gini_customer_revenue`` (value-range buckets) and
-``dedup_sorted_neighborhood`` (key-prefix buckets); scale evidence in
-NOTES.md (gini 5.2x, sorted_neighborhood 7.2x wall at 64x data).
+``dedup_sorted_neighborhood`` (key-prefix buckets); at 64x data the
+split cut wall time 5.2x for gini and 7.2x for sorted_neighborhood.
 """
 
 from __future__ import annotations
@@ -29,13 +29,14 @@ from pyspark.sql import functions as F
 
 from ..session import persist_scoped
 
-# Self-enforcing broadcast bound for the bucket-offset frame (VERDICT r12
-# item 3): the offset rows are narrow (partition keys + _bkt + long
-# offsets), so 1M rows is ~32-64 MB broadcast — comfortably driver-safe —
-# while anything growing with the data blows past it immediately. Above
-# the bound the join degrades to sort-merge (the join that SPILLS; the
-# round-12 probe lesson), so a caller whose bucket expression turns out
-# to be data-sized gets a slower-but-correct plan instead of a driver OOM.
+# Self-enforcing broadcast bound for the bucket-offset frame: the offset
+# rows are narrow (partition keys + _bkt + long offsets), so 1M rows is
+# ~32-64 MB broadcast — comfortably driver-safe — while anything growing
+# with the data blows past it immediately. Above the bound the join degrades
+# to sort-merge (the join that SPILLS, where a forced broadcast of a
+# data-sized frame exhausts driver memory), so a caller whose bucket
+# expression turns out to be data-sized gets a slower-but-correct plan
+# instead of a driver OOM.
 BROADCAST_BUCKET_LIMIT = 1_000_000
 
 
@@ -76,21 +77,19 @@ def two_phase_rank(
 def _nullsafe_bucket_join(b: DataFrame, offs: DataFrame, part: list[str]) -> DataFrame:
     """Join the data side to the bucket-offset frame NULL-SAFELY.
 
-    A plain equi-join on ``_bkt`` silently DROPS rows whose bucket is
-    NULL (a NULL sort value buckets to NULL) — found by the round-11
-    NULL-contract test, latent in both helpers since birth (no certified
-    consumer feeds NULL sort keys, but the helper must not lose rows).
-    NULLs sort FIRST in both the naive window and the bucket windows, so
-    with a null-safe equality the NULL bucket is simply the first bucket
-    and every offset stays correct.
+    A plain equi-join on ``_bkt`` silently DROPS rows whose bucket is NULL
+    (a NULL sort value buckets to NULL) — no registered consumer feeds NULL
+    sort keys, but the helper must not lose rows (the NULL-contract tests
+    pin this). NULLs sort FIRST in both the naive window and the bucket
+    windows, so with a null-safe equality the NULL bucket is simply the
+    first bucket and every offset stays correct.
 
-    CONTRACT, NOW SELF-ENFORCING (VERDICT r12 item 3, superseding the
-    prose-only ADVICE r11 contract): callers should bound the occupied
+    CONTRACT, SELF-ENFORCING: callers should bound the occupied
     bucket count by the VALUE DOMAIN of their bucket expression (cents
     ranges, 2-char prefixes), never by data size — the broadcast is what
     makes phase 3 shuffle-free. But "the planner's post-agg estimate
-    WILL eventually lie" cuts both ways for forced hints (the round-12
-    256x probe killed a driver on exactly this shape), so the helper no
+    WILL eventually lie" cuts both ways for forced hints (a 256x-data
+    probe exhausted driver memory on exactly this shape), so the helper no
     longer trusts the contract blindly: ``offs`` is persisted (it is the
     phase-1 aggregate — the join consumes the same cached frame, so the
     extra action re-reads cache, not lineage) and COUNTED, and above
@@ -108,7 +107,7 @@ def _nullsafe_bucket_join(b: DataFrame, offs: DataFrame, part: list[str]) -> Dat
         if n_buckets <= BROADCAST_BUCKET_LIMIT
         else renamed.hint("merge")
     )
-    # Measured r13 trade (sf0.1, warm mins): forced-broadcast-no-guard
+    # Measured trade (sf0.1, warm mins): forced-broadcast-no-guard
     # gini 0.62 / spearman 0.69; this guard 1.10 / 1.07; no-hint-AQE
     # 0.94 / 0.95. The +0.3-0.45 s is the serialized count job — local
     # bench noise at cluster scale — and the AQE alternative, though
@@ -133,11 +132,11 @@ def two_phase_running(
     current_row: bool = True,
 ) -> DataFrame:
     """Append running aggregates (cumulative SUM / MAX over the sort
-    order) computed in the same two phases as :func:`two_phase_rank` —
-    the reshape for ``SUM/MAX(x) OVER (ORDER BY v)`` when the ordered
-    domain is value-bounded but still large enough that one window task
-    is a 100x wall (VERDICT r10 item 4: the skyline cumulative-max and
-    the KS CDF sums were the last unpartitioned windows of this class).
+    order) computed in the same two phases as :func:`two_phase_rank` — the
+    reshape for ``SUM/MAX(x) OVER (ORDER BY v)`` when the ordered domain is
+    value-bounded but still large enough that one window task is a 100x wall
+    (the skyline cumulative-max and the KS CDF sums are windows of this
+    class).
 
     ``specs`` is ``[(src_col, fn, out_col)]`` with ``fn`` in
     {"sum", "max"}; ``bucket`` must be monotone in ``order_cols`` (value
@@ -145,14 +144,13 @@ def two_phase_running(
     semantics); ``False`` at the preceding row (strict "best so far",
     matching ``rowsBetween(unboundedPreceding, -1)``).
 
-    Semantics match the naive global window EXACTLY, including NULLs
-    (ADVICE r11): a running sum/max is NULL iff its frame is empty (the
-    first row under a strict frame) or every framed value is NULL —
-    the pre-r12 sum path coalesced that to 0, silently diverging from
-    ``SUM() OVER`` on the empty strict frame. Sum sources must be
-    integral types (byte/short/int/long) — outputs are normalized to
-    long, and a double/decimal source would silently truncate, so it is
-    rejected loudly here (ADVICE r11).
+    Semantics match the naive global window EXACTLY, including NULLs: a
+    running sum/max is NULL iff its frame is empty (the first row under a
+    strict frame) or every framed value is NULL — coalescing that to 0 would
+    silently diverge from ``SUM() OVER`` on the empty strict frame. Sum
+    sources must be integral types (byte/short/int/long) — outputs are
+    normalized to long, and a double/decimal source would silently truncate,
+    so it is rejected loudly here.
 
     Phase-2's serial window touches one row per occupied bucket; the
     per-bucket phase-3 windows run in parallel with skew bounded by the

@@ -119,7 +119,7 @@ def weighted_sample(
     orders; NULL and non-positive weights are clamped to 1.0 (an A-ES
     precondition — and NULL must be coalesced EXPLICITLY: under
     three-valued logic ``when(w <= 0, ...)`` passes NULL through to the
-    key, silently un-sampling those rows, ADVICE r8) — fractional
+    key, silently un-sampling those rows) — fractional
     weights in (0, 1) are honored as written. We compare ln(u)/w (monotone in u^(1/w), numerically safer
     near u^tiny ≈ 1), u = (h+1)/2^32 ∈ (0, 1].
 
@@ -150,7 +150,7 @@ def weighted_sample_per_group(
     salt: str = "wgroup",
 ) -> DataFrame:
     """k-per-group weighted sample without replacement, deterministic
-    (the multi-draw twin of ``weighted_sample``, VERDICT r8 item 8).
+    (the multi-draw twin of ``weighted_sample``).
 
     One Efraimidis–Spirakis draw PER GROUP: within each group the n rows
     with the largest A-ES priority ln(u)/w survive — an exact weighted

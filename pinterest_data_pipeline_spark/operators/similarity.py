@@ -34,7 +34,7 @@ def _stack_vectors(series: pd.Series, dim: int | None, ctx: str):
 
     A null or ragged vector otherwise surfaces as an opaque ValueError deep
     inside worker-side numpy reshape/vstack; validate up front and name the
-    offending condition (ADVICE r2). Returns a (batch, dim) float array.
+    offending condition. Returns a (batch, dim) float array.
     """
     import numpy as np
 
@@ -185,21 +185,21 @@ def knn_partial_topk_matmul(
     ``audited_rows`` is the bounded query set (collected Rows of
     (q_id, q_vec, q_label)).
 
-    Scale shape: the global top-k per query under the total order
-    (dot desc, id asc) is a subset of every batch's local top-k under
-    the same order, so each Arrow batch emits at most ``q*(k+extra)``
-    rows — Python->JVM traffic is corpus-size-independent and the caller
-    finishes with one WindowGroupLimit rank. Replaces a q*n interpreted
-    zip_with/aggregate evaluation (~10x HOF tax, NOTES.md) with one
-    C-side matmul.
+    Scale shape: the global top-k per query under the total order (dot desc,
+    id asc) is a subset of every batch's local top-k under the same order,
+    so each Arrow batch emits at most ``q*(k+extra)`` rows — Python->JVM
+    traffic is corpus-size-independent and the caller finishes with one
+    WindowGroupLimit rank. Replaces a q*n interpreted zip_with/aggregate
+    evaluation (a measured ~10x higher-order-function tax) with one C-side
+    matmul.
 
-    CONTRACT (ADVICE r10): ``extra`` must be >= the maximum number of
+    CONTRACT: ``extra`` must be >= the maximum number of
     rows the caller drops per (query, batch) AFTER this kernel — the
     per-batch partial has already truncated to k+extra, so any larger
     post-filter silently loses true top-k candidates. The default
     ``extra=1`` covers exactly one dropped row per query (the self-match
     ``vec_id == q_id``); a caller excluding a label set or an id list
-    must pass a matching slack. Per ADVICE r11, call sites pass
+    must pass a matching slack. Call sites pass
     ``extra`` EXPLICITLY with a comment naming the post-filter it
     covers, so the slack-vs-filter pairing is reviewable at each caller
     (see plans/extensions.py quality_embedding_proximity_audit /
@@ -233,7 +233,7 @@ def knn_partial_topk_matmul(
             labels = pdf[label_col].to_numpy()
             x = _stack_vectors(pdf[vec_col], dim, "knn_partial_topk_matmul")
             x_absmax = float(np.abs(x).max()) if x.size else 0.0
-            # correctness-critical: must survive `python -O` (ADVICE r10),
+            # correctness-critical: must survive `python -O`,
             # so an explicit raise rather than an assert
             if not x_absmax * q_absmax * dim < 2**53:
                 raise ValueError(
@@ -713,8 +713,8 @@ def ivf_retrain_migrate(
 ) -> tuple[DataFrame, int, int]:
     """Migrate a cell-partitioned IVF index to RETRAINED centroids by
     rewriting only the cells whose membership changed — the final verb of
-    the index lifecycle (r14 ``IVF.add`` upsert absorbs batches, r15
-    compaction merges their files, r15 drift monitoring decides WHEN the
+    the index lifecycle (the ``IVF.add`` upsert absorbs batches,
+    compaction merges their files, drift monitoring decides WHEN the
     stored centroids are stale; this executes the retrain without a full
     re-index).
 
@@ -732,7 +732,7 @@ def ivf_retrain_migrate(
        cells ride along — their directory is being replaced anyway;
        stayers in untouched cells never rewrite, their files keep mtimes).
        The rewrite shuffles O(touched-cells' rows), never O(index), and
-       swaps in via the shared crash-recoverable aside-and-swap
+       swaps in via the shared aside-and-swap
        (:func:`~..sources.layout.swap_partitions`; Delta
        ``OPTIMIZE``-commit mapping at :func:`~..sources.layout.swap_dir`).
 
@@ -752,7 +752,7 @@ def ivf_retrain_migrate(
     # Persisted for the life of this call: the moves aggregate AND the
     # touched-cell rewrite both need every vector's new_cell, and without
     # the cache the second job re-scans the index and re-scores every
-    # vector against the centroids (measured r16: the rescan+rescore was
+    # vector against the centroids (measured: the rescan+rescore was
     # ~half the migrate wall time). At scale the cache spills columnar
     # batches to executor-local disk — the same disks the rewrite's
     # shuffle uses — trading one map-only rescan for a cache write/read;
@@ -778,13 +778,15 @@ def ivf_retrain_migrate(
     if touched:
         aside = index_path + "__migrating"
         _shutil.rmtree(aside, ignore_errors=True)
-        # dropDuplicates makes a RE-RUN exact after a mid-migration crash:
-        # cell swaps commit one directory at a time, so a crash between a
-        # mover's destination swap and its source swap leaves the row in
-        # both cells; on the re-run both copies reassign to the same
-        # (id, vec, new_cell) row and the dedup collapses them. Protocol:
-        # the recovery sweep restores READABILITY at any time; re-running
-        # the migration restores EXACTNESS (idempotent). The shuffle is
+        # Cell swaps commit one directory at a time, so a crash mid-swap
+        # leaves one of two states for a mover. Destination swapped,
+        # source not: the row sits in both cells; on a re-run both copies
+        # reassign to the same (id, vec, new_cell) row and dropDuplicates
+        # collapses them, so re-running restores the exact index. Source
+        # swapped, destination not: the mover is in neither cell and a
+        # re-run cannot bring it back; closing that needs a commit marker
+        # over the whole migration (an open ROADMAP item). The recovery
+        # sweep restores READABILITY in both states. The shuffle is
         # O(touched cells' rows), never O(index).
         (
             reassigned.filter(F.col("new_cell").isin(touched))
@@ -1056,7 +1058,7 @@ def build_ivf_pq_index(
     corpus pass — the frame a 100 TB deployment writes partitioned by
     cell. The full-precision vector must NOT ride along, or the
     candidate broadcast join ships every candidate's embedding through
-    ADC scoring and the 16x size advantage evaporates (ADVICE r8; the
+    ADC scoring and the 16x size advantage evaporates (the
     rerank re-joins corpus for only the k_coarse vectors it needs).
     Pinned by pytest on the exact three-column schema.
     """

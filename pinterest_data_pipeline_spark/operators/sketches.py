@@ -239,12 +239,12 @@ def kmv_sketch(df: DataFrame, item_col: str, k: int = 64, salt: str = "kmv") -> 
 # Dunning & Ertl 2019 ("Computing extremely accurate quantiles using
 # t-digests"), the MERGING-digest variant: a digest is a sorted list of
 # (mean, weight) centroids whose sizes are capped by the k1 scale function
-# k1(q) = (delta / 2pi) * asin(2q - 1) — fine centroids at the tails,
-# coarse in the middle, so tail quantiles (p95/p99) keep high resolution
-# at a fixed <= ~2*delta centroid budget. This is the sketch family the
-# VERDICT r8 roster was missing next to HLL (distinct), CMS (frequency),
-# KMV (distinct-exact-dual), and MG (heavy hitters): the 100 TB answer to
-# "exact percentile needs every value in one partition".
+# k1(q) = (delta / 2pi) * asin(2q - 1) — fine centroids at the tails, coarse
+# in the middle, so tail quantiles (p95/p99) keep high resolution at a fixed
+# <= ~2*delta centroid budget. It completes the sketch family next to HLL
+# (distinct), CMS (frequency), KMV (distinct-exact-dual), and MG (heavy
+# hitters): the 100 TB answer to "exact percentile needs every value in one
+# partition".
 #
 # Distributed shape: one ``mapInPandas`` pass builds a <= ~2*delta-centroid
 # digest PER PARTITION (constant state per task, buffered compress —
@@ -261,7 +261,7 @@ def kmv_sketch(df: DataFrame, item_col: str, k: int = 64, salt: str = "kmv") -> 
 # order yields the same digest; per-partition digests depend only on the
 # partition's row order (stable parquet scans). The certification query
 # emits only cross-engine-exact values (exact quantiles) plus rank-space
-# bound booleans, so driver hashes never see a sketch-dependent float.
+# bound booleans, so parity hashes never see a sketch-dependent float.
 
 
 def _k1(q: float, delta: float) -> float:

@@ -77,7 +77,7 @@ def shingles(c: Column, n: int = 3) -> Column:
       double spaces, no non-space whitespace — overlapping n-grams come from
       ONE codegen'd ``regexp_extract_all`` pass using a zero-width
       lookahead anchored at each token start (``(?<= )(?=(tok{n}))``).
-      Higher-order array lambdas run interpreted (~10x tax, NOTES.md); this
+      Higher-order array lambdas run interpreted (a measured ~10x tax); this
       moves the shingle build inside WholeStageCodegen and cut the sf0.1
       MinHash signature stage 1.95s -> 0.85s (2.3x) with a bit-identical
       result.
@@ -229,7 +229,7 @@ def make_sentence_splitter_udtf():
     return SentenceSplitter
 
 
-# --- PII redaction + repetition metrics (round 5) ---------------------------
+# --- PII redaction + repetition metrics ------------------------------------
 
 # Patterns deliberately restricted to syntax shared by Java regex (Spark)
 # and RE2 (DuckDB): char classes, \d, bounded repetition — no backrefs or

@@ -1,4 +1,4 @@
-"""Oracle-checked analytical query battery over the driver testdata.
+"""Oracle-checked analytical query battery over the shared testdata.
 
 Each function takes ``(spark, sf_dir)`` and returns a DataFrame; each has an
 ANSI-SQL dual in ``oracles.py`` that DuckDB runs over the identical parquet.
@@ -12,8 +12,8 @@ Design rules for every query here:
 
 * Declarative DataFrame chains only — Catalyst does pushdown/pruning/join
   selection; small dims (region/nation) get an explicit ``broadcast`` hint.
-* Every computed column is aliased identically to the oracle SQL (the driver
-  hash-compares by sorted column name).
+* Every computed column is aliased identically to the oracle SQL (the parity
+  check hash-compares by sorted column name).
 * Float aggregates are rounded to a fixed scale in BOTH duals so the
   order-insensitive value-hash is stable across engines.
 """
@@ -213,7 +213,7 @@ def q9_median_price_by_year_priority(spark: SparkSession, sf_dir: str) -> DataFr
 # ===========================================================================
 # Cleaning operators exercised over testdata (P1-P11, F1-F6 — SURVEY §2.2/2.7)
 # The pin/geo/user-shaped fixtures live in unit tests; these queries prove
-# the same operators against the driver's oracle on its own tables.
+# the same operators against the DuckDB oracle on its own tables.
 # ===========================================================================
 @query
 def clean_normalize_nulls_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -549,7 +549,7 @@ def json_extract_event_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed = events.withColumn(
         "props_struct", F.from_json(F.col("props"), "k INT")
     )
-    # no final orderBy: the driver compare is order-insensitive and the
+    # no final orderBy: the parity compare is order-insensitive and the
     # range-sort sampling pass would re-run the scan+parse lineage (~2x)
     return parsed.select("event_id", F.col("props_struct.k").alias("prop_k")).filter(
         F.col("prop_k").isNotNull()
@@ -771,7 +771,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw approx values the query certifies the *invariant* — per group it
     emits the exact count plus ``abs(approx − exact) ≤ 0.15·exact`` (3σ of
     the default rsd=0.05). The DuckDB dual emits the same exact count with
-    a literal TRUE, so the driver's value-hash passes iff the bound holds.
+    a literal TRUE, so the parity value-hash passes iff the bound holds.
     """
     lineitem = load_table(spark, sf_dir, "lineitem")
     return (

@@ -172,7 +172,7 @@ def dedup_containment_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs, Jaccard-verified (rows-only check).
 
-    No presentation orderBy: the driver's value-hash is order-insensitive,
+    No presentation orderBy: the parity value-hash is order-insensitive,
     and a global sort's range-sampling pass would execute the whole
     candidate-verify lineage a second time (~2× the query).
     """
@@ -208,8 +208,8 @@ def _exact_dup_pairs(corpus: DataFrame) -> DataFrame:
 
 @query
 def dedup_simhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash (xxhash64) near-dup certification — BOUND ORACLE (VERDICT
-    r14 item 6, closing the registry's last rows-only entry).
+    """SimHash (xxhash64) near-dup certification — BOUND ORACLE (the
+    registry's last rows-only entry until it gained this dual).
 
     The raw pair list cannot carry an exact dual (DuckDB has no
     xxhash64), so the query emits the certifiable invariants instead,
@@ -232,7 +232,7 @@ def dedup_simhash_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame
     THIS hash by ``test_simhash_xxhash64_pairs_equal_exhaustive_
     hamming_join``; the raw pair-list operator remains
     ``dedup.simhash_near_duplicates``. The pair frame is persisted and
-    consumed by both aggregates — the pipeline runs once (r13 lesson).
+    consumed by both aggregates — the pipeline runs once.
     """
     docs = load_documents(spark, sf_dir).select("doc_id", "text")
     corpus = _planted_dup_corpus(docs)
@@ -281,7 +281,7 @@ def dedup_simhash_near_duplicates_stable(spark: SparkSession, sf_dir: str) -> Da
     can reproduce — and the pigeonhole candidate decomposition is LOSSLESS
     (a pair within distance d must differ <= floor(d/m) in some chunk), so
     the result equals the exhaustive Hamming cross join bit-for-bit: the
-    whole SimHash algorithm, not just its plumbing, is driver-checked. The
+    whole SimHash algorithm, not just its plumbing, is parity-checked. The
     xxhash64 variant stays registered as the faster production default.
     """
     from ..operators.text import stable_hash64
@@ -296,7 +296,7 @@ def dedup_simhash_near_duplicates_stable(spark: SparkSession, sf_dir: str) -> Da
 def dedup_near_duplicate_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end near-dedup decision: MinHash pairs -> connected
     components -> (doc, cluster, keep). Iterative label propagation on
-    the Spark side; EXACTLY oracled since r2 by the recursive-CTE
+    the Spark side; EXACTLY oracled by the recursive-CTE
     transitive closure over the exhaustive >=0.3 Jaccard pair set.
     Unsorted on purpose — see ``dedup_minhash_near_duplicates``."""
     docs = load_documents(spark, sf_dir)
@@ -583,7 +583,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force top-10 and the per-query overlap bound (≥2 of 10) is
     emitted as a boolean the DuckDB dual states as literal TRUE. Exact
     per-dataset overlaps (3-7 of 10 across the test SFs) stay pinned by
-    pytest; the driver row certifies the invariant cross-engine."""
+    pytest; the parity row certifies the invariant cross-engine."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = _query_vectors(spark, sf_dir)
     centroids = similarity.train_ivf_centroids(emb, n_cells=16)
@@ -593,7 +593,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def ann_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILTERED ANN (VERDICT r9 item 8): top-10 nearest under a metadata
+    """FILTERED ANN: top-10 nearest under a metadata
     predicate (label % 2 = 0) — the common production retrieval shape
     ("nearest products in THIS category"). The predicate is pushed into
     the IVF candidate stage: the corpus is filtered BEFORE cell
@@ -626,12 +626,12 @@ def ann_ivf_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = emb.select("vec_id", "label")
     # ONE consumption of the ANN pipeline: the (queries x k)-row result
     # broadcasts into the labels scan (never the reverse — a data-sized
-    # label frame on the build side is the r12 driver-killer), the exact
+    # label frame on the build side exhausts driver memory), the exact
     # truth set broadcasts on top, and a single aggregate emits recall
     # AND the filter audit. The previous shape referenced `ann` from two
     # branches and re-executed the whole IVF candidate stage (corpus
     # Arrow kernel included) per run.
-    # CONTRACT (ADVICE r13): n_returned counts labels JOIN ann rows, which
+    # CONTRACT: n_returned counts labels JOIN ann rows, which
     # equals ann rows only because vec_id is the embeddings table's
     # primary key (TESTDATA.md; one row per vector by construction — the
     # store a real index would enforce). A duplicated vec_id would
@@ -910,7 +910,8 @@ def pipeline_curate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     train/valid/test split. Output: (doc_id, quality, split) of the
     surviving corpus — what a 100 TB curation job materializes.
 
-    Rows-only for the driver (MinHash stage); every component operator is
+    The DuckDB dual reuses each stage's single-operator SQL, so the
+    composition is hash-checked; every component operator is also
     individually oracle-checked or pytest-pinned elsewhere, and the
     composition invariants (no dup survives, floor holds, splits total)
     are pytest-asserted.
@@ -980,7 +981,7 @@ def streaming_availablenow_events(spark: SparkSession, sf_dir: str) -> DataFrame
     append sink (S8/T3), drained with ``availableNow`` and the sink read
     back. Planted duplicates (every 3rd shipped record emitted twice) make
     the dedup load-bearing: if it ever regressed, the row count would beat
-    the oracle's DISTINCT-by-key and the driver row would go red.
+    the oracle's DISTINCT-by-key and the parity row would go red.
 
     Oracle: the same every-20th-event subset straight off the parquet —
     the round-trip through the wire format and the stream must be lossless.
@@ -1143,7 +1144,7 @@ def dedup_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-6 additions: vector compression, two-stage retrieval, layout -----
+# --- vector compression, two-stage retrieval, layout ----------------------
 
 
 def _work_dir(sf_dir: str, name: str) -> str:
@@ -1252,7 +1253,7 @@ def layout_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def streaming_upsert_latest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed streaming upsert certified from the driver: events -> wire
+    """Keyed streaming upsert oracle-checked: events -> wire
     envelopes -> readStream -> foreachBatch MERGE into a parquet table
     keyed by user_id (latest event wins, event-time + event_id order) ->
     final table read back.
@@ -1278,7 +1279,7 @@ def streaming_upsert_latest_events(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query
 def streaming_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental materialized view certified from the driver: events in
+    """Incremental materialized view oracle-checked: events in
     two file batches -> update-mode streaming aggregation -> keyed upsert
     sink; the maintained table must equal the oracle's whole-table
     GROUP BY. The 100 TB replacement for nightly full recomputes — each
@@ -1485,7 +1486,7 @@ def streaming_cms_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def streaming_view_purchase_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join, certified from the driver:
+    """Stream-stream LEFT OUTER interval join, oracle-checked:
     the watermarked two-stream attribution join (purchase within 1 hour
     of a view, both sides bounded to horizon + watermark of state) with
     the OUTER rows — views that never converted — emitted once their
@@ -1837,8 +1838,8 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round 8: bloom prefilter, KMV sketch, prefix clusters, CDC apply,
-# --- streaks, drift ---------------------------------------------------------
+# --- bloom prefilter, KMV sketch, prefix clusters, CDC apply, streaks,
+# --- drift -----------------------------------------------------------------
 
 
 @query
@@ -2009,10 +2010,10 @@ def user_streaks(events: DataFrame) -> DataFrame:
     activity days -> the date-minus-row_number island key -> island
     sizes; per user: active days, streak count, longest streak.
     Module-level so the hot-key stress can drive it on a synthetic bot
-    partition (VERDICT r8 item 5), mirroring pattern_match_journeys.
+    partition, mirroring pattern_match_journeys.
 
     The per-user window has unbounded-but-SPILLABLE sort state (unlike
-    the r7 collect_list pattern-match shape, there is no array
+    the collect_list pattern-match shape, there is no array
     aggregation state — row_number streams through the sorted
     partition), so a multi-million-day hot key completes; the stress
     test pins that.
@@ -2245,14 +2246,13 @@ def events_rolling_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the exactly-7 anchor days it keeps a user active for
     (``explode(sequence(day, day+6))``) and count_distinct per anchor.
 
-    The r8 version phrased the expansion as a band join of the anchor
-    list against the pairs, which compiled to a
-    ``BroadcastNestedLoopJoin`` — D x |pairs| predicate evaluations,
-    degrading linearly in the day horizon (VERDICT r8 item 2, the
-    round's one ``weak`` plan). The explode form emits a constant 7 rows
-    per pair into a plain hash aggregate: horizon-independent, no BNLJ,
-    and one shuffle fewer. Anchors with no same-day activity drop out in
-    the inner join with DAU, exactly as the band join's anchor list did.
+    Phrasing the expansion as a band join of the anchor list against the
+    pairs compiles to a ``BroadcastNestedLoopJoin`` — D x |pairs| predicate
+    evaluations, degrading linearly in the day horizon. The explode form
+    emits a constant 7 rows per pair into a plain hash aggregate:
+    horizon-independent, no BNLJ, and one shuffle fewer. Anchors with no
+    same-day activity drop out in the inner join with DAU, exactly as the
+    band join's anchor list did.
     """
     events = load_table(spark, sf_dir, "events")
     pairs = events.select(
@@ -2313,13 +2313,13 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_id")
 
 
-# --- round 9: quantile sketch, recall sweep, multi-draw sampling ------------
+# --- quantile sketch, recall sweep, multi-draw sampling --------------------
 
 
 @query
 def sketch_tdigest_quantile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable t-digest quantile sketch, certified like the HLL merge
-    (VERDICT r8 item 3): per-partition digests of l_extendedprice merged
+    """Mergeable t-digest quantile sketch, certified like the HLL merge:
+    per-partition digests of l_extendedprice merged
     into one estimate, AND an independent merge tree (4 hash-bucket
     digests merged) — both must land within 0.05 rank error of each
     target quantile and within 0.02 rank of EACH OTHER. The oracle emits
@@ -2328,7 +2328,7 @@ def sketch_tdigest_quantile_bounds(spark: SparkSession, sf_dir: str) -> DataFram
     certifies the mergeability property cross-engine; exact error
     (<0.01 rank observed) is pinned by pytest.
 
-    Rank-space bounds on purpose: sketch floats never reach the driver
+    Rank-space bounds on purpose: sketch floats never reach the parity
     hash — only exact quantiles (rounded at one site) and booleans.
     """
     from ..operators import sketches
@@ -2396,7 +2396,7 @@ def sketch_tdigest_quantile_bounds(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query
 def agg_tdigest_grouped_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouped p95 via the two-level t-digest (VERDICT r8 item 8): values
+    """Grouped p95 via the two-level t-digest: values
     are digested MAP-SIDE per (partition, event_type), so the one shuffle
     on the group key carries ~2*delta centroids per partition instead of
     the key's whole value mass — the shape that survives a hot key at
@@ -2433,7 +2433,7 @@ def agg_tdigest_grouped_p95(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def sketch_tdigest_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WEIGHTED t-digest (VERDICT r9 item 6): the sketch twin of
+    """WEIGHTED t-digest: the sketch twin of
     ``agg_weighted_median_price`` — centroid weights are native to the
     digest, so qty-weighted price quantiles cost the same mergeable
     one-pass sketch as unweighted ones, and this is the shape that
@@ -2445,7 +2445,7 @@ def sketch_tdigest_weighted_median(spark: SparkSession, sf_dir: str) -> DataFram
     weighted median's mass distribution, and within 0.02 of each other
     (mergeability). The emitted price/total are the EXACT operator's
     values (raw parquet double + integer sum) — sketch floats never
-    reach the driver hash; exact error is pinned tighter by pytest.
+    reach the parity hash; exact error is pinned tighter by pytest.
     """
     from ..operators import sketches
 
@@ -2535,7 +2535,7 @@ def sketch_tdigest_weighted_median(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query
 def ann_ivf_pq_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC recall-vs-probes sweep (VERDICT r8 item 8): the SAME index
+    """IVFADC recall-vs-probes sweep: the SAME index
     artifacts (centroids + codebooks trained once) queried at n_probe=2
     and n_probe=8, certifying the recall floor at both operating points —
     the accuracy/cost dial a production vector index exposes. Floors are
@@ -2544,7 +2544,7 @@ def ann_ivf_pq_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     must beat the certified 4-cell floor of 2 (floor 4; observed 6-9).
     Exact per-dataset overlaps pinned by pytest.
 
-    Build-once/query-many made literal (r13): the encoded (id, cell,
+    Build-once/query-many made literal: the encoded (id, cell,
     codes) index frame is built and persisted ONCE and both operating
     points read it — the unshared version ran the Arrow encode of the
     whole corpus twice per sweep. Same for the brute-force truth set
@@ -2595,7 +2595,7 @@ def events_rolling_p95_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge + quantile estimate runs over centroid rows, never raw values.
     Rolling quantiles DON'T decompose over sliding windows (same reason
     rolling distinct doesn't); mergeable digests are the standard answer,
-    and this query is the round's two new primitives composed.
+    and this query composes the two (rolling windows, t-digest merge).
 
     Certified rank-space per anchor: the digest p95 must sit within 0.03
     rank of 0.95 of that anchor's exact trailing-window values; the
@@ -2800,7 +2800,7 @@ def events_rolling_wau_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Everything is md5-integer arithmetic, so unlike HLL the merged
     estimate is bit-reproducible cross-engine: the oracle rebuilds the
-    sketches and the driver hash certifies the ESTIMATES exactly, not
+    sketches and the parity hash certifies the ESTIMATES exactly, not
     just a bound. The emitted bound (within 15% of exact) documents the
     accuracy contract as data: rse ~ 1/sqrt(k-2) = 6.3% at k=256;
     observed max deviation 9.2% at sf0.1 (1.5 sigma — deterministic per
@@ -2900,11 +2900,11 @@ def sample_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query
 def sample_weighted_multi_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language weighted sample without replacement: 20 docs PER LANG
-    drawn with probability proportional to n_chars (one Efraimidis–
-    Spirakis draw per group, md5-seeded) — the per-source quota draw of a
-    training-data mixer, where longer documents should win
-    proportionally more of each language's seats than a uniform cap
-    gives them (VERDICT r8 item 8's multi-draw twin). One shuffle on the
+    drawn with probability proportional to n_chars (one Efraimidis– Spirakis
+    draw per group, md5-seeded) — the per-source quota draw of a
+    training-data mixer, where longer documents should win proportionally
+    more of each language's seats than a uniform cap gives them (the
+    multi-draw twin of the single-draw weighted sample). One shuffle on the
     group key, WindowGroupLimit capping at rank 20; the draw is exactly
     reproducible in any engine (exact row_number dual).
     """
@@ -2917,7 +2917,7 @@ def sample_weighted_multi_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang", "draw_rank")
 
 
-# --- round-10 additions: set-overlap sketches, sparse cosine, co-occurrence --
+# --- set-overlap sketches, sparse cosine, co-occurrence --------------------
 
 
 @query
@@ -3151,7 +3151,7 @@ def window_global_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     through ONE task, so instead aggregate to DISTINCT prices (fully
     parallel, map-side combinable), run the cumulative count via
     :func:`~..operators.ranking.two_phase_running` over $100 price-range
-    buckets (round 11: the distinct-price domain itself tracks sample
+    buckets (the distinct-price domain itself tracks sample
     cardinality until the ~10.4M-value price domain saturates, so even
     the distinct-value window needs the bucketed split — the KS-CDF
     reshape applied here), and hash-join the per-value rank back to
@@ -3199,13 +3199,13 @@ def window_global_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def streaming_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exactly-once counts over an at-least-once source, certified from
-    the driver: two event-time-ordered file batches with planted replays
+    """Exactly-once counts over an at-least-once source, oracle-checked:
+    two event-time-ordered file batches with planted replays
     (every fifth event delivered twice) stream through
     ``dropDuplicatesWithinWatermark`` + update-mode counting aggregate +
     keyed upsert sink; the maintained table must equal the oracle's
     batch rollup over DISTINCT events — the streaming-T2 twin the
-    roster's pytest covers, promoted to a driver-certified query.
+    roster's pytest covers, promoted to an oracle-checked query.
     """
     from ..streaming import pipeline as streaming_pipeline
 
@@ -3227,7 +3227,7 @@ def _mineable_baskets(li: DataFrame, cap: int = _BASKET_CAP) -> DataFrame:
     miners fan out O(basket^k) per order key inside ONE task: bounded on
     clean TPC-H data (<= 7 items/order) but a single pathological basket
     (bot cart, ETL glitch) becomes a 10^10-pair straggler at 100 TB — the
-    same hot-key class as the r7 pattern-match fix. Oversized baskets are
+    same hot-key class as the pattern-match journeys. Oversized baskets are
     excluded WHOLE (standard practice in frequent-itemset mining: a
     100k-item transaction carries no lift signal), via one SORT-FREE count
     window on the order key — the hot basket costs O(B) to measure and
@@ -3878,7 +3878,7 @@ def events_ab_chisquare(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- int64 overflow guard for the pair-statistic family ---------------------
-# VERDICT r13 item 5: the rank/pair statistics carry exact-integer moment
+# The rank/pair statistics carry exact-integer moment
 # sums whose worst-case magnitudes are polynomial in N — past a per-query
 # ceiling, long arithmetic THROWS under Spark 4 ANSI mode. The ceilings are
 # worst-case-exact, derived from each query's largest intermediate:
@@ -3926,7 +3926,7 @@ def quality_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE pass buckets both samples per distinct price (integer
     cents) — a partial-agg groupBy; the CDF sums then run via
     :func:`~..operators.ranking.two_phase_running` over $100 cent-range
-    buckets (VERDICT r10 item 4: the distinct-cents domain tracks sample
+    buckets (the distinct-cents domain tracks sample
     cardinality until the ~10.4M-value price domain saturates, so the old
     unpartitioned window funneled it through ONE task; phase 2's serial
     window sees ~1k bucket rows, phase 3 parallelizes per bucket, and the
@@ -4006,8 +4006,8 @@ def clean_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     the outlier-impact readout.
 
     Scale shape: ONE scan of lineitem — a (flag, cents) partial-agg
-    rollup (value-DOMAIN-bounded output) feeds BOTH passes (round 11:
-    previously the raw table was scanned twice): the exact percentiles
+    rollup (value-DOMAIN-bounded output) feeds BOTH passes, so the raw
+    table is scanned once: the exact percentiles
     come from frequency-weighted ``percentile(cents, p, cnt)`` over the
     rollup (identical by definition to the per-row percentile), and the
     clipped/raw sums re-aggregate the same rollup with cnt weights. The
@@ -4550,11 +4550,11 @@ def quality_knn_label_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one corpus scan against the 256-row bounded query set;
     per-batch dot products via ONE exact float64 GEMM (Arrow-batched
     mapInPandas — the q*n interpreted zip_with/aggregate form paid the
-    ~10x HOF tax, NOTES.md) emitting at most 256*(5+1) candidate rows
-    per batch regardless of corpus size; the global neighbour cut is a
-    WindowGroupLimit rank over those partials; label counts are a
-    (vector, label)-keyed partial agg. Output is a one-row rollup plus
-    the disagreement rate at one float site.
+    measured ~10x higher-order-function tax) emitting at most 256*(5+1)
+    candidate rows per batch regardless of corpus size; the global neighbour
+    cut is a WindowGroupLimit rank over those partials; label counts are a
+    (vector, label)-keyed partial agg. Output is a one-row rollup plus the
+    disagreement rate at one float site.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     # bounded by construction: exactly 256 rows leave the cluster
@@ -4801,7 +4801,7 @@ def join_fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-10 session-4 births ---------------------------------------------
+# --- statistics, running balance, segmentation, search --------------------
 
 
 @query
@@ -5048,7 +5048,7 @@ def quality_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: rank tables are value-DOMAIN sized (the weighted-median
     collapse), the size-rank join is a broadcast (50 distinct sizes), the
     price-rank join shuffles on the value key. The int64 ceiling is
-    ENFORCED, not documented (VERDICT r13 item 5): the n*sxx term reaches
+    ENFORCED, not documented: the n*sxx term reaches
     (4/3)n^4, so :func:`_stat_sum_type` counts the part table once and
     promotes every moment sum to exact decimal(38,0) past 50k rows —
     TPC-H sf1 (200k parts) would throw under ANSI long arithmetic
@@ -5060,8 +5060,8 @@ def quality_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def rank2(df: DataFrame, col: str) -> DataFrame:
-        # cumulative count via two_phase_running (round 11: bucketed
-        # split of the distinct-value window, the KS-CDF reshape) —
+        # cumulative count via two_phase_running (bucketed split of
+        # the distinct-value window, the KS-CDF reshape) —
         # value-range buckets of 1000 keep phase 2 at <=100 rows for
         # both rank columns (sizes collapse to one bucket, price cents
         # to ~10)
@@ -5084,7 +5084,7 @@ def quality_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = part.join(F.broadcast(rank2(part, "x")), "x").join(
         rank2(part, "y"), "y"
     )
-    # int64 guard (VERDICT r13 item 5): the n*sxx term reaches (4/3)n^4 —
+    # int64 guard: the n*sxx term reaches (4/3)n^4 —
     # ANSI long arithmetic throws past ~51k rows (TPC-H sf1 part = 200k
     # rows crashes unguarded). t == "long" below the ceiling keeps the
     # plan identical (redundant casts elided); above it every moment sum
@@ -5407,8 +5407,8 @@ def quality_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     - 2*n1(n1+1)/2; the tie-corrected normal z-score is assembled from
     five exact integers (n1, n2, n, 2*U1, sum(t^3 - t)) with divisions
     and one sqrt only at the terminal site. The int64 ceiling on the
-    cubic tie term is ENFORCED via :func:`_stat_sum_type` (VERDICT r13
-    item 5): decimal(38,0) promotion past 2e6 base rows — the
+    cubic tie term is ENFORCED via :func:`_stat_sum_type`:
+    decimal(38,0) promotion past 2e6 base rows — the
     fully-tied worst case overflows long at ~2.09e6 rows (planted
     proof: tests/test_round14_ops.py).
 
@@ -5426,7 +5426,7 @@ def quality_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     counts = orders.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
     # cumulative count via two_phase_running over $1000 cent-range
-    # buckets (round 11: bucketed split of the distinct-value window,
+    # buckets (bucketed split of the distinct-value window,
     # the KS-CDF reshape; order totals span ~[90k, 60M) cents -> ~600
     # occupied buckets in phase 2)
     from ..operators.ranking import two_phase_running
@@ -5442,7 +5442,7 @@ def quality_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         (2 * (F.col("cum") - F.col("cnt")) + F.col("cnt") + 1).alias("r2"),
         "cnt",
     )
-    # int64 guard (VERDICT r13 item 5): the tie term sum(t^3 - t) reaches
+    # int64 guard: the tie term sum(t^3 - t) reaches
     # n^3 on a fully-tied sample — ANSI long arithmetic throws past
     # ~2.09e6 rows in that worst case; above the (conservative,
     # unfiltered-table) ceiling the tie/rank sums run in decimal(38,0)
@@ -5792,7 +5792,7 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round 10 session 5: bitmap analytics, sweep-line concurrency ----------
+# --- bitmap analytics, sweep-line concurrency ------------------------------
 
 
 @query
@@ -6081,7 +6081,7 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_documents(spark, sf_dir)
     # bounded collect: one scalar — counted on the RAW scan, not the
     # fan_out frame (the count's repartition shuffle was pure overhead;
-    # row count is identical by construction, r17 guide §2.4)
+    # row count is identical by construction)
     n_docs = load_table(spark, sf_dir, "documents").count()
     tok = (
         docs.select(
@@ -6259,7 +6259,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: the shingle-set frame feeds BOTH sides of the verify
     # join on DIFFERENT keys (id_a / id_b), so there is no exchange to
     # reuse and the unpersisted shape ran the corpus text->shingle
-    # projection twice (r17 interleaved A/B: 1.59 -> 1.38 s warm min,
+    # projection twice (interleaved A/B: 1.59 -> 1.38 s warm min,
     # persist won every pair). Scale trade: one cached generation of
     # (doc_id, shingle_set) vs a second full text pass — MEMORY_AND_DISK
     # spills gracefully and the verify stage reads it twice regardless.
@@ -7406,7 +7406,8 @@ def quality_simpsons_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-URGENT/2-HIGH, cohort B = the rest; the comparison mean_A vs
     mean_B is decided WITHOUT division via the integer cross product
     sum_A*n_B <=> sum_B*n_A, accumulated in decimal(38,0) (sum x count
-    products outrun int64 at scale — the session-5 knife-edge rule), so
+    products outrun int64 at scale; a comparison decided on a rounded
+    double could flip on a knife-edge tie), so
     every direction is exact; the displayed means are rounded at the
     one presentation site. Output: one row per segment with both
     cohort sizes, rounded means, the segment direction, the pooled
@@ -7437,7 +7438,7 @@ def quality_simpsons_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Cast the SUMMAND so the accumulation itself runs in
         # decimal(38,0) — summing in int64 and casting the result can
         # overflow (or throw under ANSI) at 100 TB cohort sizes while the
-        # DuckDB oracle's sum(BIGINT) widens to HUGEINT (ADVICE r10).
+        # DuckDB oracle's sum(BIGINT) widens to HUGEINT.
         cents_dec = F.col("cents").cast("decimal(38,0)")
         return df.groupBy(*keys).agg(
             F.sum(F.when(F.col("is_a") == 1, 1).otherwise(0))
@@ -7666,8 +7667,8 @@ def _cached_store(
     readers ignore it.
 
     ``params`` folds the BUILD PARAMETERS (k, bands, n_cells, threshold,
-    centroid seed — whatever shaped the store) into the fingerprint
-    (ADVICE r14): changing an operator default then rebuilds instead of
+    centroid seed — whatever shaped the store) into the fingerprint:
+    changing an operator default then rebuilds instead of
     silently serving a stale store from the work dir."""
     path = _work_dir(sf_dir, name)
     fp_file = os.path.join(path, "_SOURCE_FINGERPRINT")
@@ -7705,7 +7706,7 @@ def fs_linkage_weights(
     1-m: the float-literal discipline of the PageRank query). Top-20
     pairs by total match weight.
 
-    Blocking is COST-BASED (VERDICT r11 item 4). Two candidate plans:
+    Blocking is COST-BASED. Two candidate plans:
 
     - ``coarse``: enumerate every pair inside a (brand, size) block —
       one self-join, zero extra shuffles. Optimal while blocks are
@@ -7744,7 +7745,7 @@ def fs_linkage_weights(
     (the PPJoin proven-lossless-filter discipline); the guard aggregate
     is evaluated EAGERLY over the persisted top frame before this
     function returns, so no downstream consumer — however
-    early-terminating — can skip it (ADVICE r12). This also subsumes
+    early-terminating — can skip it. This also subsumes
     the u_f >= 0.9 degenerate case where disagreement outweighs
     agreement: such data simply fails guard (a).
     """
@@ -7887,8 +7888,7 @@ def fs_linkage_weights(
     if strategy == "fine":
         # The <=20-row top frame feeds BOTH the result and the guard
         # aggregate below; without the persist the expensive blocked
-        # self-join is planned twice and nothing pins exchange reuse
-        # (ADVICE r12).
+        # self-join is planned twice and nothing pins exchange reuse.
         top = persist_scoped(top, "fs_linkage_top")
     w_rank = Window.partitionBy(F.lit(1)).orderBy(
         F.desc("match_weight"), F.asc("part_a"), F.asc("part_b")
@@ -7922,7 +7922,7 @@ def fs_linkage_weights(
     # Losslessness sentinel: a 1-row rollup of the persisted (<= 20-row)
     # top frame joined to the block-size pair total; a VIOLATING row
     # survives the filter and its raise_error projection aborts the job.
-    # Evaluated EAGERLY below (ADVICE r12): the old unioned-sentinel form
+    # Evaluated EAGERLY below: an unioned-sentinel form
     # let a .limit()/early-terminating consumer satisfy its limit from
     # the ranked child and never evaluate the violation partition —
     # collecting the aggregate here makes the guard unskippable, and the
@@ -8192,10 +8192,10 @@ def quality_embedding_proximity_audit(spark: SparkSession, sf_dir: str) -> DataF
     )
     # n_train attaches BEFORE the rollup and the rollup groups by it, so
     # a degenerate empty audit sample yields ZERO rows — matching the
-    # oracle's GROUP BY nt.n_train over an empty `nearest` (ADVICE r10;
-    # the old global agg emitted one all-null row cross-joined with
-    # n_train). Grouping on the 1-value broadcast key is partial-agg
-    # friendly — same single-row output on real input.
+    # oracle's GROUP BY nt.n_train over an empty `nearest` (a global
+    # agg would emit one all-null row cross-joined with n_train).
+    # Grouping on the 1-value broadcast key is partial-agg friendly —
+    # same single-row output on real input.
     return (
         nearest.crossJoin(F.broadcast(n_train))
         .groupBy("n_train")
@@ -8356,7 +8356,7 @@ def quality_bigram_logloss(spark: SparkSession, sf_dir: str) -> DataFrame:
     attaches as a 1-row broadcast. Unsorted on purpose — per-doc output
     is corpus-sized and a final presentation sort's range sampling
     re-executes the lineage (the ``dedup_minhash_near_duplicates``
-    rule); the driver hash is order-insensitive.
+    rule); the parity hash is order-insensitive.
     """
     docs = load_documents(spark, sf_dir)
     toks = text.tokens(F.col("text"))
@@ -8510,7 +8510,7 @@ def dedup_longest_shared_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-13 births --------------------------------------------------------
+# --- rank correlation, divergence, diff-in-differences, mix weights ---------
 
 
 @query
@@ -8531,7 +8531,7 @@ def quality_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one hash aggregate to the grid (output bounded by the
     value domain, the weighted-median collapse), then all pair math on
     the ~650-cell broadcast grid (a BroadcastNestedLoopJoin over cells,
-    never rows). The int64 ceiling is ENFORCED (VERDICT r13 item 5):
+    never rows). The int64 ceiling is ENFORCED:
     pair totals reach n*(n-1), so :func:`_stat_sum_type` promotes the
     grid arithmetic to exact decimal(38,0) past 3e9 rows; the halvings
     are exact integer/decimal ops, never a double (which silently
@@ -8543,7 +8543,7 @@ def quality_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("p_retailprice") * 100).cast("long") / 100
         ).cast("long").alias("y"),
     )
-    # int64 guard (VERDICT r13 item 5): n*(n-1) pair totals overflow long
+    # int64 guard: n*(n-1) pair totals overflow long
     # past ~3.03e9 rows; above the ceiling all pair/tie arithmetic runs
     # in decimal(38,0) (the grid is ~650 cells, so the decimal tax is
     # confined to a broadcast-sized frame)
@@ -8988,12 +8988,12 @@ def agg_pearson_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- round-14 births ---------------------------------------------------------
+# --- incremental stores: dedup, IVF upsert, clusters, sketches --------------
 
 
 @query
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-shard incremental near-dedup (VERDICT r13 item 6): screen a
+    """Cross-shard incremental near-dedup: screen a
     NEW document batch (doc_id % 10 == 0, ~10% of the corpus) against a
     PERSISTED MinHash signature store covering the other 90%, without
     recomputing the corpus — the production arrival shape of the
@@ -9008,7 +9008,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified (exact Jaccard >= 0.3) partner exists in the store or
     earlier in the batch. The exhaustive DuckDB dual recomputes every
     batch-involving pair from scratch — incremental == full is the
-    driver-checked contract (the LSH recall argument is the
+    parity-checked contract (the LSH recall argument is the
     ``dedup_minhash_near_duplicates`` oracle's: this corpus' true pairs
     are >=0.9 Jaccard, where 8x4 banding misses <2e-4).
 
@@ -9016,7 +9016,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     contributes one broadcast-probed scan (batch bucket keys broadcast
     into the store side — the store NEVER shuffles) and a semi-join
     text fetch for candidate partners only. Cost tracks the batch, not
-    the corpus (64x store probe in NOTES.md r14).
+    the corpus (measured by probing a 64x larger store).
     """
     docs = load_documents(spark, sf_dir)
     batch = docs.filter(F.pmod(F.col("doc_id"), F.lit(10)) == 0)
@@ -9061,10 +9061,10 @@ def ann_ivf_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived. The sharper contract — merged-index search EQUALS a
     from-scratch rebuild with the same centroids, bit-for-bit, and a
     planted batch twin IS retrieved from the delta — is pinned by
-    pytest (computing it here would double-execute the pipeline, the
-    r13 ann_ivf_filtered lesson).
+    pytest (computing it here would double-execute the pipeline, as
+    ``ann_ivf_filtered_topk`` would if it referenced its ANN frame twice).
 
-    ADVICE r14 strengthening: the row also carries ``exact_top1`` — the
+    The row also carries ``exact_top1`` — the
     exact quantized-cosine nearest neighbor over the FULL (old ∪ batch)
     corpus — which the DuckDB dual RECOMPUTES by brute force, so the
     certification row is data-dependent on the merged corpus (the
@@ -9103,13 +9103,14 @@ def ann_ivf_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def ann_ivf_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF index COMPACTION — the OPTIMIZE lifecycle step the r14 upsert
-    left open: ``IVF.add``-style appends leave each cell partition as
-    per-batch file fragments (the reference's ``flush.size=1`` landing
-    pathology, implementation_details.md:71, replayed on the vector
-    index), and probe cost then scales with fragments, not data.
-    :func:`~..sources.layout.compact_partitions` merges delta to base
-    with cell rebalance, rewriting ONLY fragmented cells.
+    """IVF index COMPACTION — the OPTIMIZE lifecycle step after the
+    ``IVF.add`` upsert (``ann_ivf_incremental_upsert``): ``IVF.add``-style
+    appends leave each cell partition as per-batch file fragments (the
+    reference's ``flush.size=1`` landing pathology,
+    implementation_details.md:71, replayed on the vector index), and probe
+    cost then scales with fragments, not data.
+    :func:`~..sources.layout.compact_partitions` merges delta to base with
+    cell rebalance, rewriting ONLY fragmented cells.
 
     Per run: the fingerprint-cached base index is file-copied to a work
     dir (scaffolding — production compacts in place), the batch delta is
@@ -9145,7 +9146,7 @@ def ann_ivf_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.copytree(base_path, work)
     # persisted: the delta's Arrow assign kernel feeds BOTH the fragmented
     # append and the losslessness digest — Python stages are the case
-    # where persist beats AQE reuse (the r13 rule)
+    # where persist beats AQE reuse
     delta = persist_scoped(
         similarity.ivf_assign_cells(batch, centroids), "compact_delta"
     )
@@ -9210,7 +9211,7 @@ def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     full recompute EXACTLY — same (doc_id, cluster_id, keep) rows, same
     min-id canonical labels — so the DuckDB dual is literally the full
     query's recursive-CTE closure: incremental == full is the
-    driver-checked contract, not a pytest-only claim.
+    parity-checked contract, not a pytest-only claim.
 
     Both stores are fingerprint-cached parquet (signatures shared with
     ``dedup_incremental_batch``; the cluster table built once from
@@ -9271,7 +9272,7 @@ def sketch_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     union of each side's k smallest), so the merged sketch equals a
     from-scratch sketch of the full corpus BIT-FOR-BIT — and the DuckDB
     dual computes the merged row FROM THE FULL TOKEN SET, making
-    incremental == full the driver-checked contract (the
+    incremental == full the parity-checked contract (the
     ``dedup_incremental_clusters`` discipline, sketch edition).
 
     Output: (stage batch/merged/store, n_sketch, kmv_estimate,
@@ -9325,7 +9326,7 @@ def sketch_incremental_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query
 def sketch_incremental_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental QUANTILE monitoring — the t-digest member of the
-    incremental-store family (VERDICT r14 item 7): a persisted per-day
+    incremental-store family: a persisted per-day
     t-digest centroid store absorbs an arriving day-slice by sketch
     MERGE, so historical days are never re-read on arrival — the
     arrival path is O(batch) partials plus a bounded centroid-store
@@ -9335,7 +9336,7 @@ def sketch_incremental_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch-day number is ≡ 0 (mod 10) play the arriving batch; the other
     ~90% of days are the store. t-digest is closed under merge within
     the documented rank bound (Dunning & Ertl; the
-    ``sketch_tdigest_quantile_bounds`` lineage), so the driver-checked
+    ``sketch_tdigest_quantile_bounds`` lineage), so the parity-checked
     contract is rank-space: per target quantile the MERGED
     (store ∪ batch partials) estimate must sit within 0.05 rank of q on
     the FULL corpus, and within 0.02 rank of a from-scratch digest of
@@ -9414,8 +9415,8 @@ def sketch_incremental_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query
 def embedding_store_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-store DRIFT monitor between snapshots — the retrain
-    trigger that completes the IVF index lifecycle (r14 upsert absorbs
-    batches without retraining; r15 compaction merges the files; THIS
+    trigger that completes the IVF index lifecycle (the upsert absorbs
+    batches without retraining; compaction merges the files; THIS
     decides when the stored centroids are stale): per-dimension mean
     shift between the store snapshot and the arriving batch, ranked.
 
@@ -9501,11 +9502,11 @@ def dedup_incremental_batch_pruned(spark: SparkSession, sf_dir: str) -> DataFram
     Decisions are IDENTICAL to ``dedup_incremental_batch`` by
     construction (same buckets, same candidates, same verify), so the
     DuckDB dual is the same exhaustive recompute — layout must never
-    change answers, driver-checked. Since r16 the pruning is STATIC —
+    change answers, parity-checked. The pruning is STATIC —
     the batch's touched (band, bh_part) set (bounded by the partition
     domain) collects once and filters the scan at planning time
-    (``PartitionFilters``, pytest-pinned) — replacing the r15 runtime-DPP
-    shape whose raw-lineage requirement re-ran the batch signature pass
+    (``PartitionFilters``, pytest-pinned) — rather than runtime DPP,
+    whose raw-lineage requirement would re-run the batch signature pass
     per plan branch.
 
     REGIME (documented honestly, the embedding-all-pairs precedent):
@@ -9531,7 +9532,7 @@ def dedup_incremental_batch_pruned(spark: SparkSession, sf_dir: str) -> DataFram
         params=f"shingle_n=3,k=32,bands=8,parts={dedup.BUCKET_STORE_PARTS}"
         ",meta=v2",
     )
-    # layout metadata travels WITH the store (ADVICE r15): the probe's
+    # layout metadata travels WITH the store: the probe's
     # bh_part modulus comes from the sidecar, never a guessed argument.
     # refresh=False: this store is mutated ONLY through Spark writes
     # (the _cached_store rebuild), which self-invalidate the listing
@@ -9551,7 +9552,7 @@ def dedup_incremental_batch_pruned(spark: SparkSession, sf_dir: str) -> DataFram
 @query
 def sketch_incremental_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental heavy-hitter monitoring — the Misra-Gries member of
-    the incremental-store family (KMV r14, t-digest r15): a persisted
+    the incremental-store family (next to KMV and t-digest): a persisted
     <= k-counter MG summary of the store corpus's languages absorbs an
     arriving batch by SUMMARY MERGE (union-add + one shrink,
     :func:`~..operators.sketches.mg_merge`), so the store corpus is
@@ -9641,7 +9642,7 @@ def ann_rerank_label_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic (the ``cosine_topk_quantized`` discipline), ties broken
     by vec_id at both stages, so DuckDB reproduces the full two-stage
     order bit-for-bit — unlike the recall-floor ANN entries, this one's
-    final ORDER is driver-checked.
+    final ORDER is parity-checked.
 
     Scale shape: the shortlist is the certifiable stand-in for any
     coarse stage (IVF/PQ/LSH swap in transparently — the rerank only
@@ -9688,11 +9689,11 @@ def ann_rerank_label_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query
 def ann_ivf_centroid_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drift-triggered centroid RETRAIN + touched-cells index MIGRATION —
-    the last verb of the IVF lifecycle (VERDICT r15 item 1): r14's
-    ``IVF.add`` upsert absorbs batches without retraining, r15's
-    compaction merges their files, r15's ``embedding_store_drift``
-    computes the retrain trigger; THIS executes the retrain the trigger
-    schedules, without a full re-index.
+    the last verb of the IVF lifecycle: the ``IVF.add`` upsert
+    (``ann_ivf_incremental_upsert``) absorbs batches without retraining,
+    ``ann_ivf_index_compaction`` merges their files,
+    ``embedding_store_drift`` computes the retrain trigger; THIS executes
+    the retrain the trigger schedules, without a full re-index.
 
     Per run: the fingerprint-cached base index (store vectors, stale
     store-trained centroids) is file-copied to a work dir (scaffolding —
@@ -9747,10 +9748,10 @@ def ann_ivf_centroid_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # ONE aggregate pass over the migrated index yields BOTH certification
-    # sides that previously each scanned it (r16, guide §1.2: fewer
-    # passes): the losslessness digest (count + vec_id hash-sum) and the
-    # zero-misassignment check (stored cell == nearest NEW centroid, the
-    # same Arrow kernel as before, now fused into the digest scan).
+    # sides, so the index is scanned once: the losslessness digest (count +
+    # vec_id hash-sum) and the zero-misassignment check (stored cell ==
+    # nearest NEW centroid, the same Arrow kernel as before, now fused into
+    # the digest scan).
     assign1 = similarity.nearest_cells_pandas(new_centroids, 1)
     mig_cert = migrated.select(
         "vec_id",
@@ -9804,12 +9805,13 @@ def ann_ivf_centroid_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def dedup_incremental_stream_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-driven incremental dedup store maintenance (VERDICT r15
-    item 2): the signature store absorbs arrivals through the engine's
+    """STREAM-driven incremental dedup store maintenance: the signature
+    store absorbs arrivals through the engine's
     OWN streaming runtime — a file-source ``readStream`` with one
     landing file per arrival and ``maxFilesPerTrigger=1``, so arrival k
-    is exactly micro-batch k — instead of the batch calls the r14/r15
-    entries drive. Each trigger dedups its documents against the store
+    is exactly micro-batch k — instead of the batch calls
+    ``dedup_incremental_batch`` and ``dedup_incremental_batch_pruned``
+    drive. Each trigger dedups its documents against the store
     AS OF the previous trigger (store ∪ kept arrivals < k) and appends
     kept signatures + documents as batch-id-named delta directories
     (``incremental_dedup_store_sink``'s replay-idempotent layout; the
@@ -9821,7 +9823,7 @@ def dedup_incremental_stream_store(spark: SparkSession, sf_dir: str) -> DataFram
     semantics from scratch — arrival 1 greedy vs store ∪ earlier-in-
     arrival-1; arrival 2 greedy vs store ∪ KEPT arrival-1 (a store
     partner now: its signatures were appended) ∪ earlier-in-arrival-2 —
-    so the driver certifies that the stream-maintained store answers
+    so the parity check certifies that the stream-maintained store answers
     exactly like the from-scratch recompute at every arrival point.
     Stream-built store == sequential-batch-built store and
     restart/replay idempotency are pytest-pinned (checkpoint surgery is
@@ -9854,13 +9856,13 @@ def dedup_incremental_stream_store(spark: SparkSession, sf_dir: str) -> DataFram
 @query
 def dedup_bucket_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket-store COMPACTION — the OPTIMIZE lifecycle step for the
-    signature store (VERDICT r15 item 5): ``store_delta`` appends land
+    signature store: ``store_delta`` appends land
     one fragment per touched ``(band, bh_part)`` leaf per arrival, so
     over N arrivals the DPP probe's O(touched dirs) scan degrades to
     O(touched dirs x N fragments) — the reference's ``flush.size=1``
     landing pathology (implementation_details.md:71) replayed on the
     bucket store, cured with the same touched-partitions discipline
-    ``ann_ivf_index_compaction`` applied to IVF cells in r15.
+    ``ann_ivf_index_compaction`` applies to IVF cells.
 
     Per run: the fingerprint-cached BASE store (docs with
     ``doc_id % 10 NOT IN (0, 9)``) is file-copied to a work dir, the
@@ -9870,7 +9872,7 @@ def dedup_bucket_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
     fragmented leaves. The compacted store then holds exactly the
     ``% 10 != 0`` corpus's buckets, so batch decisions against it must
     be IDENTICAL to ``dedup_incremental_batch``'s — the same exhaustive
-    recompute dual certifies that compaction (like layout, r15) never
+    recompute dual certifies that compaction (like layout) never
     changes answers. ``compaction_lossless`` (row count + content
     digest of compacted == base ∪ delta) and ``files_reduced_ok`` ride
     along as in-Spark invariants (TRUE in the dual); the fragment
@@ -9901,7 +9903,7 @@ def dedup_bucket_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
     work = _work_dir(sf_dir, "_bucket_compact")
     shutil.rmtree(work, ignore_errors=True)
     shutil.copytree(base_path, work)
-    # layout params come from the copied store's sidecar (ADVICE r15) —
+    # layout params come from the copied store's sidecar —
     # the delta MUST bucket with the same k/bands/n_parts as the base
     _, meta = dedup.open_bucket_store(spark, work)
     # persisted: the delta's signature pass feeds BOTH the fragmented
@@ -9968,18 +9970,18 @@ def dedup_bucket_store_compaction(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query
 def ann_ivf_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-driven IVF index maintenance (VERDICT r15 item 2, ANN
-    member): vector arrivals reach the index through the engine's OWN
-    streaming runtime — a file-source ``readStream`` with one landing
-    file per arrival and ``maxFilesPerTrigger=1`` (arrival k == micro-
-    batch k) — instead of the batch call ``ann_ivf_incremental_upsert``
-    drives. Each trigger assigns its vectors to the FIXED stored
-    centroids (O(batch) Arrow kernel, FAISS ``IVF.add`` — no retrain, no
-    store read) and lands a cell-partitioned, batch-id-named delta
-    directory (``ivf_stream_upsert_sink``'s replay-idempotent layout).
-    Search probes base ∪ stream deltas; the r15 compactor and the r16
-    retrain-migrate pick the deltas up on schedule — the arrival verb of
-    the same lifecycle.
+    """STREAM-driven IVF index maintenance (the ANN member of the
+    streaming arrival paths): vector arrivals reach the index through the
+    engine's OWN streaming runtime — a file-source ``readStream`` with one
+    landing file per arrival and ``maxFilesPerTrigger=1`` (arrival k ==
+    micro-batch k) — instead of the batch call
+    ``ann_ivf_incremental_upsert`` drives. Each trigger assigns its vectors
+    to the FIXED stored centroids (O(batch) Arrow kernel, FAISS ``IVF.add``
+    — no retrain, no store read) and lands a cell-partitioned,
+    batch-id-named delta directory (``ivf_stream_upsert_sink``'s
+    replay-idempotent layout). Search probes base ∪ stream deltas; the
+    compactor and the retrain-migrate pick the deltas up on schedule — the
+    arrival verb of the same lifecycle.
 
     Certified like the IVF family (recall >= 2/10, ``exact_top1``
     recomputed by brute force in the DuckDB dual), plus
@@ -10049,8 +10051,8 @@ def ann_ivf_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def sketch_kmv_stream_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STREAM-driven KMV vocabulary monitoring (VERDICT r15 item 2,
-    sketch member): document arrivals merge into the persisted KMV
+    """STREAM-driven KMV vocabulary monitoring (the sketch member of the
+    streaming arrival paths): document arrivals merge into the persisted KMV
     sketch through the engine's own streaming runtime (file == micro-
     batch), versioned per batch so replay is exact
     (``kmv_stream_merge_sink``). KMV is closed under union, so each
@@ -10115,8 +10117,8 @@ def sketch_kmv_stream_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def ann_ivf_drift_gated_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drift-GATED retrain policy — the decision wire between the r15
-    monitor and the r16 migration: ``embedding_store_drift`` computes the
+    """Drift-GATED retrain policy — the decision wire between the drift
+    monitor and the migration: ``embedding_store_drift`` computes the
     per-dimension shift statistic; THIS query thresholds it and fires
     ``ivf_retrain_migrate`` only when the gate trips, exactly the
     production loop the monitor's docstring promises ("THIS decides when

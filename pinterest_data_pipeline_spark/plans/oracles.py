@@ -4,7 +4,7 @@ Each string must be runnable by DuckDB against the pre-registered views
 (region nation customer supplier part orders lineitem events documents
 embeddings) and produce the same columns (by name) and values as the Spark
 DataFrame query of the same key. Keep aliases in lockstep with the Spark side
-— the driver sorts columns by name before value-hashing.
+— the parity check sorts columns by name before value-hashing.
 """
 
 from __future__ import annotations
@@ -21,8 +21,8 @@ def oracle(name: str):
     ``__BASKET_CAP__`` placeholders are substituted from the ONE shared
     Spark-side constant (:data:`..plans.extensions._BASKET_CAP`) so the
     six hot-basket-guard duals can never silently desynchronize from the
-    engine if the cap changes (ADVICE r13: TPC-H baskets are <= 7 items,
-    so parity alone would never surface the drift).
+    engine if the cap changes (TPC-H baskets are <= 7 items, so parity
+    alone would never surface the drift).
     """
 
     def _register(sql: str) -> str:
@@ -121,10 +121,10 @@ oracle("q6_median_acctbal_per_band")(
     """
 )
 
-# Bound-oracle duals for the two approx aggregates (VERDICT r5 #5): the
+# Bound-oracle duals for the two approx aggregates: the
 # Spark side computes approx AND exact and emits the invariant
 # abs(approx - exact) <= rtol*exact as a boolean; the DuckDB dual emits the
-# same exact value with a literal TRUE. The driver's value-hash therefore
+# same exact value with a literal TRUE. The parity value-hash therefore
 # certifies the sketch's error bound without requiring cross-engine sketch
 # equality.
 oracle("agg_approx_distinct")(
@@ -1362,7 +1362,7 @@ oracle("dedup_minhash_near_duplicates")(
     # affine permutations in 8 bands the miss probability for a >=0.3-Jaccard
     # pair is <2e-4, and the data's true pairs are all >=0.9 — so the banded
     # candidate set provably covers the exhaustive answer at this SF and the
-    # hash comparison is exact, turning LSH recall into a hard driver check.
+    # hash comparison is exact, turning LSH recall into a hard parity check.
     """
     WITH sh AS (
       SELECT doc_id,
@@ -1451,7 +1451,7 @@ oracle("text_analysis_battery")(
 )
 
 
-# --- extended TPC-H battery (round 2) ---------------------------------------
+# --- extended TPC-H battery ------------------------------------------------
 # SQL-entry-path queries share ONE ANSI text with the Spark side (imported
 # from relational.py), so the dual is the definition itself.
 
@@ -1805,8 +1805,8 @@ oracle("embedding_near_duplicates_exact")(_EMBEDDING_NEAR_DUP_SQL)
 # is IDENTICAL to the all-pairs oracle, the same certification pattern the
 # MinHash query uses (exhaustive-Jaccard dual).
 #
-# SCOPE (r3 ADVICE): exact set equality is an EMPIRICAL property of the
-# sf0.01 data + seeds, verified 14/14, and the driver gate always runs at
+# SCOPE: exact set equality is an EMPIRICAL property of the
+# sf0.01 data + seeds, verified 14/14, and the parity gate runs at
 # sf0.01 — within scope. The operator's general contract is subset-of-truth
 # plus a recall floor (pytest: tests/test_extensions.py recall tests); at
 # other scale factors or seeds a <100% recall would surface here as a
@@ -1864,7 +1864,7 @@ oracle("streaming_availablenow_events")(
     """
 )
 
-# --- round-5 additions ------------------------------------------------------
+# --- sequence packing, chunking, TF-IDF, relational gaps -------------------
 
 oracle("pack_sequences_documents")(
     # Greedy sequential packing is exactly an exclusive prefix sum over the
@@ -1907,7 +1907,7 @@ oracle("text_chunk_sliding")(
 
 oracle("tfidf_top_terms")(
     # DF over the full corpus, TF over the 1% slice, idf = ln(N/df) with
-    # identical op order so the round-4 values agree bit-for-bit.
+    # identical op order so the rounded-to-4 values agree bit-for-bit.
     """
     WITH toks AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
@@ -2096,7 +2096,7 @@ oracle("dedup_decontaminate_ngram")(
     """
 )
 
-# --- round-6 additions ------------------------------------------------------
+# --- vector compression, two-stage retrieval, layout ------------------------
 
 oracle("embedding_quantize_int8")(
     # Symmetric int8 codes: round-half-away-from-zero over float64 is
@@ -2791,7 +2791,7 @@ oracle("dedup_simhash_exact_recall")(
 oracle("ann_rerank_label_boost")(
     # EXACT two-stage dual: integer quantized dots, integer label bonus,
     # ties by vec_id at both stages — the full rerank ORDER is
-    # driver-checked, not just a recall floor.
+    # parity-checked, not just a recall floor.
     """
     WITH q AS (
         SELECT vec_id AS query_id, embedding, label AS query_label
@@ -2827,8 +2827,8 @@ oracle("ann_rerank_label_boost")(
 )
 
 oracle("dedup_simhash_near_duplicates")(
-    # Bound-oracle promotion of the registry's last rows-only entry
-    # (VERDICT r14 item 6): the xxhash64 pair LIST has no cross-engine
+    # Bound-oracle promotion of the registry's last rows-only entry:
+    # the xxhash64 pair LIST has no cross-engine
     # dual, so the registered query emits the certifiable invariants —
     # n_docs and the md5-exact-dup pair count (EXACT, data-dependent,
     # planted like dedup_simhash_exact_recall so containment is never
@@ -2958,7 +2958,7 @@ oracle("events_retention_cohorts")(
     """
 )
 
-# --- round 8 additions ------------------------------------------------------
+# --- bloom prefilter, KMV sketch, prefix clusters, CDC apply, drift --------
 
 # Rebuilds the IDENTICAL 16384-bit/3-hash Bloom filter (md5-derived bit
 # positions, 32-bit words via exact power-of-2 doubles) and must agree on
@@ -3297,7 +3297,7 @@ oracle("join_asof_tolerance")(
     """
 )
 
-# --- round 9 ----------------------------------------------------------------
+# --- quantile sketches, recall sweep, multi-draw sampling ------------------
 
 # t-digest certification duals: the sketch side is bound-certified (rank-
 # space booleans the dual states as literal TRUE); the cross-engine-exact
@@ -3328,7 +3328,7 @@ oracle("sketch_incremental_tdigest")(
     # sketch_tdigest_quantile_bounds lineage); the merged-vs-exact and
     # merged-vs-from-scratch rank bounds are in-Spark invariants stated
     # as booleans — incremental == full within the documented t-digest
-    # tolerance, driver-checked.
+    # tolerance, parity-checked.
     """
     WITH p AS (
         SELECT quantile_cont(value::DOUBLE, [0.1, 0.5, 0.9]) AS v
@@ -3448,7 +3448,7 @@ oracle("sample_token_budget_mix")(
 )
 
 # KMV rolling-WAU dual: the sketch is md5-integer arithmetic end to end,
-# so the dual REBUILDS it and the driver hash certifies the merged
+# so the dual REBUILDS it and the parity hash certifies the merged
 # ESTIMATES bit-for-bit (one rounded double division, same numerator both
 # engines) — unlike HLL, no bound-only oracle needed. within_bound
 # restates the k=256 accuracy contract (rse ~ 6.3%; observed <= 6%).
@@ -3679,7 +3679,7 @@ oracle("sketch_tdigest_weighted_median")(
     # agg_weighted_median_price) + literal TRUE for the weighted-rank
     # bounds — a green row certifies the weighted digest's 0.05/0.02
     # rank-space contract cross-engine; sketch floats never reach the
-    # driver hash.
+    # parity hash.
     """
     WITH t AS (
         SELECT l_returnflag, l_extendedprice,
@@ -5598,7 +5598,7 @@ oracle("text_phrase_search")(
     """
 )
 
-# --- round 10 session 5 ------------------------------------------------------
+# --- bitmap analytics, sweep-line concurrency ------------------------------
 
 # Rebuilds the identical user bitmaps (word = user_id // 63, 63-bit words so the
 # shift never reaches the int64 sign bit, which DuckDB rejects as overflow) and intersects them with the same integer bit arithmetic —
@@ -7043,7 +7043,7 @@ oracle("dedup_longest_shared_ngram")(
 )
 
 
-# --- round-13 births ---------------------------------------------------------
+# --- rank correlation, divergence, diff-in-differences, mix weights --------
 
 # Kendall tau-b from the bounded (size, $1-price-bucket) value grid:
 # concordant/discordant sums over dominating cell pairs, tie pairs from
@@ -7377,7 +7377,7 @@ oracle("ann_ivf_incremental_upsert")(
     # density PRECONDITION (4 of 16 cells hold >= k non-query vectors
     # from sf0.001 up). The incremental-specific contracts — merged
     # search == from-scratch rebuild, delta visibility — are pytest-
-    # pinned (no SQL engine can replay the IVF probe). ADVICE r14: the
+    # pinned (no SQL engine can replay the IVF probe). The
     # dual RECOMPUTES exact_top1 by brute force over the full merged
     # corpus (same integer-quantized dot, same tie-break), so the
     # certification is data-dependent, not shape-only.

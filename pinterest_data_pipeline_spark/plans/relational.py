@@ -10,10 +10,10 @@ Widens SURVEY.md §2.12 coverage beyond the reference's own surface:
 * **Date / string scalar-function suites** — one narrow oracle-checked
   projection each, pinning cross-engine semantics (1-based ``split_part``,
   Spark ``dayofweek`` = DuckDB ``dayofweek``+1, ISO ``weekofyear``).
-* **TPC-H-shaped classics** (Q1/Q3/Q5 adapted to the driver schema) — the
+* **TPC-H-shaped classics** (Q1/Q3/Q5 adapted to the test-data schema) — the
   canonical scan-heavy aggregate, mid-join top-k, and 6-way join workloads;
-  these are bench headliners whose plans must show pushed filters, broadcast
-  dims, and partial aggregation.
+  their plans must show pushed filters, broadcast dims, and partial
+  aggregation.
 
 Every query has a DuckDB oracle dual in ``oracles.py`` (same name).
 """
@@ -312,7 +312,7 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# TPC-H classics adapted to the driver schema (bench headliners)
+# TPC-H classics adapted to the test-data schema
 # ===========================================================================
 
 
@@ -455,7 +455,7 @@ def scd2_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query
 def cdc_scd2_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC -> SCD2 composition check (VERDICT r9 item 8): replaying a
+    """CDC -> SCD2 composition check: replaying a
     change feed reproduces the dimension history. Three full snapshots
     (base segments; a NEW- re-segmentation of every third customer; an
     attribute-identical re-observation) flow through BOTH halves of the
@@ -658,7 +658,7 @@ def sketch_hll_distinct_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL-sketch distinct estimate, bound-oracle form: sketch values are
     engine-specific, so the query emits the exact count plus the invariant
     ``abs(estimate − exact) ≤ 0.05·exact`` (>3σ at default lgConfigK=12);
-    the DuckDB dual emits exact + literal TRUE, so the driver value-hash
+    the DuckDB dual emits exact + literal TRUE, so the parity value-hash
     certifies the sketch error bound."""
     lineitem = load_table(spark, sf_dir, "lineitem")
     return (
@@ -1018,10 +1018,10 @@ def tpch_q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 # ===========================================================================
-# Extended TPC-H battery (round 2): Q2/Q4/Q6/Q7/Q8/Q9/Q13/Q15/Q16/Q17/Q20/
-# Q21/Q22 adapted to the driver schema (no partsupp, no commit/receipt
-# dates, no c_phone — adaptations noted per query). With the existing
-# Q1/Q3/Q5/Q10/Q12/Q14/Q18/Q19 and the round-4 Q11 adaptation (shipped
+# Extended TPC-H battery: Q2/Q4/Q6/Q7/Q8/Q9/Q13/Q15/Q16/Q17/Q20/
+# Q21/Q22 adapted to the test-data schema (no partsupp, no commit/receipt
+# dates, no c_phone — adaptations noted per query). With
+# Q1/Q3/Q5/Q10/Q12/Q14/Q18/Q19 and the Q11 adaptation (shipped
 # value standing in for partsupp stock value) this covers ALL 22 shapes.
 #
 # Queries whose essence is subquery structure run through the SQL entry
@@ -1388,12 +1388,11 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation's TOTAL value — a grouped aggregate HAVING against a scalar
     aggregate over the same derived table.
 
-    Adaptation (closing the round-2 'no faithful analogue' note): the
-    driver schema has no partsupp, so ps_supplycost * ps_availqty is
-    replaced by shipped value (sum of l_extendedprice) per (part,
-    nation-7-supplier) — same join tree (partsupp->supplier->nation
-    becomes lineitem->supplier->nation), same two-level aggregate
-    structure, same fractional-threshold semantics.
+    Adaptation: the test-data schema has no partsupp, so ps_supplycost *
+    ps_availqty is replaced by shipped value (sum of l_extendedprice) per
+    (part, nation-7-supplier) — same join tree (partsupp->supplier->nation
+    becomes lineitem->supplier->nation), same two-level aggregate structure,
+    same fractional-threshold semantics.
 
     DataFrame (not the shared-SQL path) on purpose: planning
     ``TPCH_Q11_SQL`` directly makes Spark expand the ``stock`` CTE twice —
@@ -1424,7 +1423,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-5 additions: interpolating resample, time-range window frames,
+# Interpolating resample, time-range window frames,
 # bucketed co-located joins
 # ===========================================================================
 
@@ -1941,12 +1940,11 @@ def agg_pareto_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     than mirrored construction. A final join counts the parts sitting
     ON each frontier point.
 
-    The running max is :func:`~..operators.ranking.two_phase_running`
-    over $1 price-range buckets (VERDICT r10 item 4: the old
-    ``Window.orderBy(price)`` funneled the whole distinct-price domain
-    — which tracks part cardinality until the value domain saturates —
-    through ONE task); phase 2's serial window sees one row per
-    occupied dollar bucket, phase 3 parallelizes per bucket.
+    The running max is :func:`~..operators.ranking.two_phase_running` over
+    $1 price-range buckets (a plain ``Window.orderBy(price)`` funnels the
+    whole distinct-price domain — which tracks part cardinality until the
+    value domain saturates — through ONE task); phase 2's serial window sees
+    one row per occupied dollar bucket, phase 3 parallelizes per bucket.
     """
     from ..operators.ranking import two_phase_running
 

@@ -72,8 +72,8 @@ def derived_shuffle_partitions(cpus: int) -> int:
 
     Guide §2.2: partitions should be sized so each holds a sensible chunk
     of data; flooring the count at the core count manufactures tiny tasks
-    whose scheduling overhead exceeds their work. Measured on this box
-    (r17, interleaved same-box A/B at sf0.1 = 17.5 MB of parquet): 32
+    whose scheduling overhead exceeds their work. Measured with an
+    interleaved same-host A/B at sf0.1 = 17.5 MB of parquet: 32
     partitions ran 1.3-3.3x SLOWER than 8 across the heavy battery
     (quality_js_divergence_sources 2.12 -> 0.91 s, dedup_longest_shared_ngram
     1.96 -> 0.60, quality_bigram_logloss 2.34 -> 1.33), while 2 partitions
@@ -148,7 +148,7 @@ def get_spark(
         # Disable PySpark's per-call DataFrame debugging context (call-site
         # capture for error messages): every Column/functions API call
         # otherwise pays a conf RPC + Python stack walk + two JVM calls —
-        # measured 8.4 ms per F.lit vs 0.16 ms with it off (r16). The
+        # measured 8.4 ms per F.lit vs 0.16 ms with it off. The
         # engine's expression-heavy operators (32-perm MinHash, banded LSH,
         # sketch batteries) build thousands of Columns per plan, so this is
         # pure driver-side overhead with no effect on results; plans,
@@ -177,7 +177,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     keeps all 64 bits — a double round-trip would lose sub-microsecond bits).
 
     The nanosAsLong conf is (re)applied here at runtime, not only in
-    :func:`get_spark`, because callers (the correctness driver, notebooks) may
+    :func:`get_spark`, because callers (tests, notebooks) may
     hand us a session built elsewhere; the conf is runtime-settable and
     idempotent, and without it the events scan throws PARQUET_TYPE_ILLEGAL.
     """

@@ -662,7 +662,7 @@ def availablenow_upsert_roundtrip(
     timestamps). That is exactly a per-key ``row_number() = 1`` over the
     same slice, which is what the DuckDB dual asserts — certifying the
     whole foreachBatch MERGE path (last-wins dedup, full-outer merge,
-    atomic table swap) from the driver, not just from pytest.
+    atomic table swap) through the parity check, not just from pytest.
 
     All envelope lines land in one file (one micro-batch); cross-batch
     upsert semantics are pinned separately by the streaming pytest suite.
@@ -1197,16 +1197,26 @@ def availablenow_ivf_upsert_roundtrip(
 ) -> DataFrame:
     """Drive :func:`ivf_stream_upsert_sink` as one bounded run over
     :func:`_landed_stream` and return the accumulated index DELTA (all
-    committed batches, cell column intact)."""
+    committed batches, cell column intact).
+
+    An empty micro-batch leaves a batch directory with no parquet file
+    (``partitionBy`` writes none), so the directories are read in one
+    scan with the sink's own schema rather than an inferred one; the
+    ``batch`` partition column that scan discovers is dropped."""
+    from ..operators import similarity
+
     ivf_stream_upsert_sink(
         _landed_stream(spark, work_dir, arrivals), work_dir, centroids,
         available_now=True,
     ).awaitTermination()
-    dirs = _committed_batch_dirs(os.path.join(work_dir, "delta"), 1 << 62)
-    out = spark.read.parquet(dirs[0])
-    for p in dirs[1:]:
-        out = out.unionByName(spark.read.parquet(p))
-    return out
+    delta_root = os.path.join(work_dir, "delta")
+    schema = similarity.ivf_assign_cells(arrivals[0], centroids).schema
+    return (
+        spark.read.schema(schema)
+        .option("basePath", delta_root)
+        .parquet(*_committed_batch_dirs(delta_root, 1 << 62))
+        .drop("batch")
+    )
 
 
 def kmv_stream_merge_sink(

@@ -99,11 +99,11 @@ def test_cluster_pairs_requires_checkpoint_dir_when_reliable(spark):
 
 
 def test_cluster_pairs_one_action_per_iteration(spark):
-    """VERDICT r6 item 3: the convergence flag folds into the round's
+    """The convergence flag folds into each iteration's
     materializing aggregate — ONE action (= one job once AQE and broadcast
     side-jobs are disabled) per iteration, not the old checkpoint + diff
     pair that doubled scheduler round-trips. ``driver_cc_cap=0`` forces
-    the distributed branch (r16: under-cap pair sets solve by driver
+    the distributed branch (under-cap pair sets solve by driver
     union-find instead), which is the branch whose action discipline
     this pins."""
     ns = spark.newSession()
@@ -122,9 +122,9 @@ def test_cluster_pairs_one_action_per_iteration(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert comps == {1: 1, 2: 1, 3: 1, 4: 1}
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    # star graph: round 1 relabels the leaves, round 2 observes no change
-    # (2 aggregate actions), + the final collect = 3 jobs total; the old
-    # two-jobs-per-round shape would show 5+
+    # star graph: iteration 1 relabels the leaves, iteration 2 observes no
+    # change (2 aggregate actions), + the final collect = 3 jobs total; a
+    # two-jobs-per-iteration shape would show 5+
     assert len(jobs) == 3, sorted(jobs)
 
 
@@ -153,8 +153,8 @@ def test_near_duplicate_query_plans_launch_no_jobs(spark):
 
 
 def test_cluster_pairs_driver_branch_matches_distributed(spark):
-    """r16: under ``driver_cc_cap`` PAIRS cluster_pairs solves by driver
-    union-find (the incremental family's r14-certified kernel) instead of
+    """Under ``driver_cc_cap`` PAIRS cluster_pairs solves by driver
+    union-find (the incremental family's kernel) instead of
     the iterative min-diffusion loop. Same labels by construction —
     pinned here on a shape that exercises path compression (a chain),
     min-through-merge (two chains joined out of id order), and a
@@ -179,7 +179,7 @@ def test_cluster_pairs_driver_branch_matches_distributed(spark):
 
 
 def test_cluster_pairs_distributed_deep_chain_log_rounds(spark):
-    """r17 pointer doubling: the distributed loop must converge in
+    """Pointer doubling: the distributed loop must converge in
     O(log diameter) rounds, not O(diameter). A 64-node chain has
     diameter 63 — plain min-diffusion would need 63 rounds (and silently
     return non-minimal labels at the default ``max_iters=20``); with the
@@ -202,7 +202,7 @@ def test_cluster_pairs_distributed_deep_chain_log_rounds(spark):
 
 
 def test_cluster_pairs_null_ids_match_distributed(spark):
-    """ADVICE r16 (medium): a nullable bigint pair column passes the driver
+    """A nullable bigint pair column passes the driver
     branch's dtype gate, and NULL endpoints used to crash the union-find
     (int-vs-None comparison). The distributed branch's semantics are the
     contract — SQL equi-joins never match NULL, so a NULL node keeps its
@@ -558,7 +558,7 @@ def test_multi_table_lsh_recall_beats_single_table(spark):
 def test_stack_vectors_names_every_failure_class():
     """Empty batches, null vectors, ragged dims, and null elements inside a
     vector must each fail (or return) descriptively — never an opaque numpy
-    error from worker-side vstack (r3 ADVICE)."""
+    error from worker-side vstack."""
     import pandas as pd
     import pytest
 
@@ -780,7 +780,7 @@ def test_arrow_byte_stats_diverge_on_multibyte_text(spark):
 
 
 def test_pattern_match_cap_bounds_state_and_flags_overflow(spark):
-    """VERDICT r7 item 2: a user past the cap must COMPLETE (state bounded
+    """A user past the cap must COMPLETE (state bounded
     by the pre-collection row_number filter), carry overflowed=true, keep
     the TRUE n_events, and have the match evaluated on the capped prefix —
     here the purchase lands past the cap, so converted flips to false."""
@@ -819,7 +819,7 @@ def test_pattern_match_cap_bounds_state_and_flags_overflow(spark):
 
 
 def test_misra_gries_one_shrink_per_batch(spark):
-    """VERDICT r7 item 3: the batch merge is the Mergeable-Summaries shape —
+    """The batch merge is the Mergeable-Summaries shape —
     the whole value_counts folds into the dict, then AT MOST ONE shrink per
     batch, and the n/(k+1) underestimate bound survives the batching."""
     import pandas as pd

@@ -201,9 +201,9 @@ def test_recover_rolls_back_uncommitted_partial_swap(spark, tmp_path):
 
 
 def test_recover_rolls_forward_after_commit_marker(spark, tmp_path):
-    """Crash AFTER the commit marker but before .old cleanup (the r3 ADVICE
-    scenario): a stale __zp=k.old would otherwise be read as a partition
-    with value 'k.old' — duplicating its rows and flipping the partition
+    """Crash AFTER the commit marker but before .old cleanup: a stale
+    __zp=k.old would otherwise be read as a partition with value
+    'k.old' — duplicating its rows and flipping the partition
     column's type to string. Recovery must delete it and keep the live dir."""
     import os
     import shutil
@@ -225,7 +225,7 @@ def test_recover_rolls_forward_after_commit_marker(spark, tmp_path):
 
 
 def test_compaction_retry_after_crash_is_duplicate_free(spark, tmp_path):
-    """The medium-severity r3 ADVICE case: a crash mid-swap followed by a
+    """A crash mid-swap followed by a
     retry with the SAME delta must not union the delta twice into the
     already-swapped partitions. The retry's built-in recovery rolls the
     table back first, so the final state is exactly base + delta."""
@@ -272,7 +272,7 @@ def test_incremental_zorder_preserves_pruning(spark, tmp_path):
 
 
 def test_recover_deletes_promoted_brand_new_partition(spark, tmp_path):
-    """The r4 ADVICE case: a touched partition whose live dir did NOT exist
+    """A touched partition whose live dir did NOT exist
     before the swap gets no ``.old`` in phase 2a, so after a crash between
     phase 2b and the commit marker the promoted dir would survive a
     rollback and the retry would union the same delta into it twice. The

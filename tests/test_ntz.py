@@ -1,6 +1,6 @@
 """normalize_ntz: flat AND nested TIMESTAMP_NTZ columns become session-zoned
 TIMESTAMP at the read edge, and the cast is instant-preserving under the UTC
-session timezone load_table pins (ADVICE r5 items 1-2)."""
+session timezone load_table pins."""
 
 from __future__ import annotations
 

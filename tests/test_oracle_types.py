@@ -1,9 +1,9 @@
 """Guard: no DuckDB oracle may emit HUGEINT/INT128 output columns.
 
-Round-5 post-mortem (VERDICT r5 §What's wrong #1): DuckDB widens
-``sum(CASE WHEN ... THEN 1 ELSE 0 END)`` over INTEGER to HUGEINT (int128),
-and the driver's value-hash serializes HUGEINT differently from BIGINT, so
-a query whose values match Spark exactly still red-rows on hash_match.
+DuckDB widens ``sum(CASE WHEN ... THEN 1 ELSE 0 END)`` over INTEGER to
+HUGEINT (int128), and a value hash serializes HUGEINT differently from
+BIGINT, so a query whose values match Spark exactly still fails a
+hash-compared parity check.
 The fix is a ``::BIGINT`` cast in the oracle SQL; this test DESCRIBEs every
 oracle through DuckDB so the class of failure can never silently recur.
 
@@ -12,7 +12,6 @@ DuckDB-only (no SparkSession) — runs in a couple of seconds.
 
 from __future__ import annotations
 
-import os
 import sys
 from pathlib import Path
 
@@ -24,7 +23,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import __spark_entry__ as entrymod
 from pinterest_data_pipeline_spark.session import TESTDATA_TABLES
 
-SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.001")
+SF_DIR = "/root/testdata/sf0.001"
 
 FORBIDDEN_TYPES = ("HUGEINT", "INT128", "UHUGEINT")
 
@@ -52,6 +51,6 @@ def test_no_oracle_emits_hugeint(con):
         if bad:
             offenders[name] = bad
     assert not offenders, (
-        "oracles emitting int128-class columns (driver hash-serializes these "
+        "oracles emitting int128-class columns (a value hash serializes these "
         f"differently from BIGINT — cast with ::BIGINT): {offenders}"
     )

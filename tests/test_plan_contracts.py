@@ -32,7 +32,7 @@ def plan_of(spark, name: str) -> str:
         "join_range_ship_window",
         "dedup_exact_documents",
         "events_session_window",
-        # round-8 batch additions: the bloom probe must stay a literal
+        # the bloom probe must stay a literal
         # expression, CDC apply a single-key window, streaks pure
         # aggregates — none may degenerate to a nested loop or Python
         # UDF. (kmv/psi attach a SINGLE-ROW scalar aggregate via
@@ -42,7 +42,7 @@ def plan_of(spark, name: str) -> str:
         "dedup_prefix_clusters",
         "cdc_apply_changelog",
         "events_user_streaks",
-        # round-10 session-5: the bitmap offset join and the SN gap join
+        # the bitmap offset join and the SN gap join
         # are explode-based (rolling-WAU precedent), never a 2-row BNLJ;
         # the rest are pure keyed joins/aggregates
         "events_bitmap_retention",
@@ -53,7 +53,7 @@ def plan_of(spark, name: str) -> str:
         "events_top_paths",
         "text_ngram_novelty",
         "text_pmi_cooccurrence",
-        # late session-5: pure keyed joins/aggregates (no scalar attach)
+        # pure keyed joins/aggregates (no scalar attach)
         "quality_duplicate_payments",
         "events_entry_channel_conversion",
         "events_new_vs_returning",
@@ -225,7 +225,7 @@ def test_q19_disjunction_still_hash_joins(spark):
     ],
 )
 def test_extended_tpch_plans_have_no_scale_killers(spark, name):
-    """The round-2 TPC-H battery: no cartesian products, no nested-loop
+    """The extended TPC-H battery: no cartesian products, no nested-loop
     joins (except the sanctioned 1-row scalar-subquery broadcast), no
     Python row UDFs anywhere."""
     plan = plan_of(spark, name)
@@ -297,7 +297,7 @@ def test_text_battery_is_shuffle_free(spark):
 def test_sentence_udtf_uses_arrow_eval(spark):
     """The sentence-split UDTF must ride Arrow batches (ArrowEvalPythonUDTF),
     not per-row pickling (BatchEvalPythonUDTF) — the last per-row Python
-    surface in the registry, closed in round 4."""
+    surface in the registry."""
     plan = plan_of(spark, "text_sentence_split_udtf")
     assert "ArrowEvalPythonUDTF" in plan
     assert "BatchEvalPythonUDTF" not in plan
@@ -479,7 +479,7 @@ def test_ewma_decay_joins_broadcast_daily_rollup(spark):
     [
         "sketch_kmv_distinct_union",
         "quality_drift_psi",
-        # round-10 session-5 scalar attaches: CUPED pooled moments,
+        # scalar attaches: CUPED pooled moments,
         # Theil-Sen median slope, KM corpus end, dyadic-decay reference
         # day, hierarchy global total, key-skew per-column totals (PMI
         # inlines its corpus count as a literal via the bounded collect
@@ -531,7 +531,7 @@ def test_scalar_attach_bnlj_build_side_is_single_row(spark, name):
     ],
 )
 def test_distinct_domain_windows_stay_bucketed(spark, name):
-    """Round 11: the distinct-value cumulative windows run through
+    """The distinct-value cumulative windows run through
     two_phase_running — every Window over the VALUE axis must be
     partitioned by the bucket column, and the only unpartitioned window
     allowed is phase 2's offset pass over the bucket rollup (ordered BY
@@ -555,12 +555,12 @@ def test_distinct_domain_windows_stay_bucketed(spark, name):
 
 
 def test_ann_certification_pipelines_execute_once(spark):
-    """Round 13: the ANN certification edges must consume their
+    """The ANN certification edges must consume their
     approximate pipeline exactly once. ann_ivf_filtered_topk fuses
     recall + the filter audit into one aggregate over one ANN subtree —
-    the pre-r13 shape referenced `ann` from two branches and the
-    executed plan carried TWO copies of the IVF candidate stage (six
-    ArrowEvalPython nodes, the corpus kernel twice). Three Arrow stages
+    a shape that referenced `ann` from two branches would carry TWO
+    copies of the IVF candidate stage (six ArrowEvalPython nodes, the
+    corpus kernel twice). Three Arrow stages
     remain by construction: corpus cell-assign, query cell-assign, and
     the brute-force truth kernel. The sweep pins its shared index via
     the persisted-frame marker (build-once/query-many): without the
@@ -573,7 +573,7 @@ def test_ann_certification_pipelines_execute_once(spark):
     )
     sweep = analytics.QUERIES["ann_ivf_pq_recall_sweep"](spark, SF)
     splan = sweep._jdf.queryExecution().executedPlan().toString()
-    # BOTH persisted frames must appear (ADVICE r13): the encoded index
+    # BOTH persisted frames must appear: the encoded index
     # AND the exact truth set each feed two operating points — losing
     # either one silently re-encodes / re-brute-forces the corpus while
     # a single-occurrence check stays green

@@ -196,7 +196,7 @@ def test_approx_percentile_two_level_merge_within_error_bound(spark):
     assert bounds.lo <= approx_union <= bounds.hi, (exact, approx_union, bounds)
 
 
-# --- round-6 operator properties --------------------------------------------
+# --- quantization, sessionization, as-of, sampling, CMS properties --------
 
 
 @given(
@@ -385,7 +385,7 @@ def test_cms_estimates_monotone_under_stream_growth(spark, part_a, part_b):
         assert est_ab[item] >= e
 
 
-# --- round-8 operators vs Python reference models ---------------------------
+# --- changelog, Bloom, KMV, balance, GEMM vs Python reference models ------
 
 _changelog = st.lists(
     st.tuples(
@@ -567,7 +567,7 @@ def test_gemm_kernel_dot_products_exact_at_component_bound(spark, vecs, qvec):
 )
 @settings(**SETTINGS)
 def test_two_phase_running_matches_global_window(spark, pairs, width, current_row):
-    """two_phase_running (round 11) must equal the naive global window
+    """two_phase_running must equal the naive global window
     for BOTH fns and BOTH frame ends, under arbitrary values (negative
     included — floor-division bucketing must stay monotone), duplicate
     order keys collapsed first (the helper ranks a distinct-value
@@ -589,7 +589,7 @@ def test_two_phase_running_matches_global_window(spark, pairs, width, current_ro
     expected = {
         r.v: (r.cs, r.mx)
         for r in df.withColumn(
-            # un-coalesced (ADVICE r11): the strict-frame first row is
+            # un-coalesced: the strict-frame first row is
             # NULL in true SUM() OVER semantics and the helper must match
             "cs", F.sum("c").over(w).cast("long")
         ).withColumn("mx", F.max("x").over(w)).collect()

@@ -1,4 +1,4 @@
-"""Round-10 operators: weighted t-digest, the reshaped exact weighted
+"""Weighted t-digest, the reshaped exact weighted
 median, and the PPJoin length filter.
 
 The weighted-digest tests pin the properties the certification query's
@@ -116,7 +116,7 @@ def test_tdigest_weighted_partials_match_exact_weighted_median(spark):
 
 
 def test_tdigest_grouped_weighted_partials_keep_null_groups(spark):
-    """ADVICE r9: NULL group keys are real groups on the exact sides —
+    """NULL group keys are real groups on the exact sides —
     the sketch side must keep them too (groupby dropna=False)."""
     df = spark.createDataFrame(
         [("a", 1.0, 1.0), (None, 2.0, 1.0), (None, 4.0, 3.0)],
@@ -174,7 +174,7 @@ def test_jaccard_join_length_filter_prunes_size_mismatches(spark):
 
 
 def test_jaccard_prefix_epsilon_boundary():
-    """ADVICE r9: ceil(t*sz) at an exact integer boundary must not round
+    """ceil(t*sz) at an exact integer boundary must not round
     UP through float error. t=0.75, sz=8: t*sz = 6.0 exactly; the prefix
     keep-count is sz - ceil(t*sz) + 1 = 3. The epsilon form preserves
     this for every (t, sz) where t*sz is integral."""
@@ -186,7 +186,7 @@ def test_jaccard_prefix_epsilon_boundary():
         assert eps == exact, (t, sz)
 
 
-# --- hot-key stresses (VERDICT r9 item 7) -----------------------------------
+# --- hot-key stresses ------------------------------------------------------
 
 
 def test_jaccard_hot_token_candidates_bounded(spark):
@@ -615,7 +615,7 @@ def test_streaming_dedup_rollup_absorbs_replays(spark, tmp_path):
 
 
 def test_market_basket_hot_basket_stress(spark):
-    """The family's adversary is one enormous basket — and since r13 the
+    """The family's adversary is one enormous basket — and the
     contract is the _mineable_baskets guard (extensions._BASKET_CAP=512):
     baskets above the cap are excluded WHOLE before any pair enumeration.
     This stresses both halves of that contract end-to-end through the
@@ -1756,7 +1756,7 @@ def test_fifo_allocation_matches_hand_simulation(spark):
     assert r.total_supply == 8
 
 
-# --- session-4 births -------------------------------------------------------
+# --- statistics, running balance, segmentation, search ----------------------
 
 
 def test_cohens_kappa_hand_computed(spark):
@@ -3626,15 +3626,15 @@ def test_grid_neighbor_pairs_hot_cell_still_exact(spark):
     assert got == brute
     assert (99, 100) in got  # the cell-straddling pair survives blocking
     # ValueError, not AssertionError: the losslessness contract must
-    # survive `python -O` (ADVICE r10)
+    # survive `python -O`
     with _pytest.raises(ValueError, match="lossless"):
         joins_ops.grid_neighbor_pairs(pts, cell=100, threshold2=300**2)
 
 
 def test_knn_partial_topk_matmul_empty_inputs(spark):
     """Empty audit set / empty corpus return empty frames with the right
-    schema instead of crashing (the empty-input guard class ADVICE r9
-    flagged in the streaming helpers)."""
+    schema instead of crashing (the same empty-input guard the streaming
+    helpers need)."""
     from pinterest_data_pipeline_spark.operators import similarity
 
     corpus = spark.createDataFrame(

@@ -1,9 +1,8 @@
-"""Round-11 operator tests: the two_phase_running reshape (VERDICT r10
-item 4) — the last distinct-domain global windows (pareto skyline
-cumulative max, KS CDF cumulative sums) moved onto the bucketed
-two-phase plan, so the helper itself is pinned against the naive global
-window on adversarial shapes (duplicate bucket edges, single bucket,
-empty frame semantics)."""
+"""Operator tests for the two_phase_running reshape — the distinct-domain
+global windows (pareto skyline cumulative max, KS CDF cumulative sums) run
+on the bucketed two-phase plan, so the helper itself is pinned against the
+naive global window on adversarial shapes (duplicate bucket edges, single
+bucket, empty frame semantics)."""
 
 from __future__ import annotations
 
@@ -92,7 +91,7 @@ def test_two_phase_running_single_bucket_and_multi_spec(spark):
 
 
 def test_embedding_proximity_audit_empty_eval_emits_zero_rows(spark):
-    """ADVICE r10: on an all-train vector store (empty audited eval
+    """On an all-train vector store (empty audited eval
     sample) the audit must emit ZERO rows — matching the oracle's
     GROUP BY over an empty nearest-neighbour frame — instead of one
     all-null row cross-joined with n_train."""

@@ -1,11 +1,10 @@
-"""Round-12 operator tests: the FS-linkage second blocking pass
-(VERDICT r11 item 4) — candidates come from a union of three finer
-blocked self-joins instead of the coarse (brand, size) pair
-enumeration, guarded at runtime by the losslessness check described in
-the query docstring. These tests pin (a) exact equality against the
-coarse plan on real data, (b) the guard RAISING when an all-disagree
-pair could enter the top-20, and (c) the constant-field (u == 1)
-degenerate path that must NOT raise."""
+"""Operator tests for the FS-linkage second blocking pass — candidates
+come from a union of three finer blocked self-joins instead of the coarse
+(brand, size) pair enumeration, guarded at runtime by the losslessness check
+described in the query docstring. These tests pin (a) exact equality against
+the coarse plan on real data, (b) the guard RAISING when an all-disagree
+pair could enter the top-20, and (c) the constant-field (u == 1) degenerate
+path that must NOT raise."""
 
 from __future__ import annotations
 
@@ -19,8 +18,7 @@ from pinterest_data_pipeline_spark.plans import extensions  # noqa: F401  (regis
 
 
 def test_simhash_xxhash64_pairs_equal_exhaustive_hamming_join(spark):
-    """Closes the last rows-only certification gap (VERDICT r11 item 6):
-    the xxhash64 SimHash variant cannot be oracled cross-engine (DuckDB
+    """The xxhash64 SimHash variant cannot be oracled cross-engine (DuckDB
     has no xxhash64), so certify the WHOLE pipeline in-Spark instead —
     the multi-index pigeonhole's pair set must equal the exhaustive
     O(n^2) Hamming cross-join over the SAME xxhash64 signatures, on the
@@ -69,7 +67,7 @@ def test_simhash_xxhash64_pairs_equal_exhaustive_hamming_join(spark):
 
 
 def _coarse_top20(spark, sf_dir):
-    """The pre-r12 coarse-blocked reference plan, kept verbatim as the
+    """The coarse-blocked reference plan, kept verbatim as the
     in-Spark dual for the fine-block rewrite (same shape as the DuckDB
     oracle in plans/oracles.py)."""
     from pinterest_data_pipeline_spark.plans.extensions import load_table
@@ -223,7 +221,7 @@ def _write_docs(spark, d, rows):
 
 
 def test_bigram_logloss_is_word_order_sensitive(spark):
-    """r12 birth: docs 1 and 2 share the SAME token multiset (so any
+    """Docs 1 and 2 share the SAME token multiset (so any
     unigram score ties them) but differ in word order — the bigram
     cross-entropy must separate them, and the values on this
     hand-computable fixture must match the add-1-smoothed formula
@@ -256,7 +254,7 @@ def test_bigram_logloss_is_word_order_sensitive(spark):
 
 
 def test_longest_shared_ngram_span_and_df_cap(spark):
-    """r12 birth: two docs sharing a planted 12-token run report
+    """Two docs sharing a planted 12-token run report
     span=12 (5 chained 8-gram windows); docs sharing nothing are absent;
     a gram shared by >50 docs is frequency-capped out of the candidates
     entirely (the PPJoin prefix-filter discipline)."""
@@ -282,7 +280,7 @@ def test_longest_shared_ngram_span_and_df_cap(spark):
 
 
 def test_birth_vocab_joins_stay_sort_merge(spark):
-    """Round-12 plan contract: every join whose build side is a
+    """Plan contract: every join whose build side is a
     DATA-SIZED frame (gram vocabulary, gram occurrences, bigram/context
     counts, per-pair aggregates) must plan as SortMergeJoin — the 256x
     probe killed both a planner-chosen broadcast (driver maxResultSize)

@@ -1,5 +1,5 @@
-"""Round-13 operator tests: the self-enforcing broadcast guard on the
-two-phase ranking helpers (VERDICT r12 item 3) — the bucket-offset
+"""Operator tests for the self-enforcing broadcast guard on the
+two-phase ranking helpers — the bucket-offset
 frame is counted before the phase-3 join, and above
 ``BROADCAST_BUCKET_LIMIT`` the join degrades to sort-merge instead of
 trusting the caller's domain-boundedness contract forever.
@@ -85,7 +85,7 @@ def test_guard_counts_buckets_not_rows(spark, monkeypatch):
     assert "BroadcastHashJoin" in plan, plan
 
 
-# --- round-13 births: planted-value tests -----------------------------------
+# --- rank correlation, divergence, DiD, mix weights: planted values --------
 
 import math
 import os
@@ -264,7 +264,7 @@ def test_pearson_matrix_planted_correlations(spark):
     assert out[("discount", "tax")] == -1.0
 
 
-# --- round-13 births: property tests -----------------------------------------
+# --- rank correlation, mix weights: property tests -------------------------
 
 from hypothesis import given, settings as hyp_settings, strategies as st
 
@@ -355,7 +355,7 @@ def test_temperature_mix_property(spark, sizes):
     assert abs(sum(r.weight_t05 for r in out.values()) - 1.0) < 1e-4
 
 
-# --- hot-basket guard (r13 session 2) ---------------------------------------
+# --- hot-basket guard -----------------------------------------------------
 #
 # Every basket-mining consumer (pair/triple itemsets, the co-occurrence
 # graph) fans out O(basket^k) per order key inside one task. TPC-H data
@@ -406,7 +406,7 @@ def test_cooccurrence_edges_survive_hot_basket(spark):
 
 
 def test_hot_basket_guard_is_linear_not_quadratic(spark):
-    """Volume check (the r8 pattern-match stress, basket edition): one
+    """Volume check (the pattern-match hot-key stress, basket edition): one
     50k-item bot basket plus 200 normal baskets through the guarded
     pair-mining shape completes quickly — the bot basket is measured
     (one count window pass) and dropped, never pair-enumerated
@@ -432,7 +432,7 @@ def test_hot_basket_guard_is_linear_not_quadratic(spark):
         .filter(F.col("a") < F.col("b"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )
-    # plan-shape proof (ADVICE r13): the _bsz cap filter must sit BELOW
+    # plan-shape proof: the _bsz cap filter must sit BELOW
     # the self-join in the optimized plan — that ordering, not the wall
     # clock, is what prevents the 1.25e9-pair fan-out. The join node
     # appears before (= above) the last _bsz filter in the plan text.
@@ -448,12 +448,12 @@ def test_hot_basket_guard_is_linear_not_quadratic(spark):
     elapsed = time.perf_counter() - t0
     assert pairs[0].n_pairs == 200 * 10  # C(5,2) per normal basket
     # generous wall-clock backstop only — the plan assert above is the
-    # real guard-ran-first proof (ADVICE r13: time bounds flake on load)
+    # real guard-ran-first proof (time bounds flake on load)
     assert elapsed < 120, f"guarded mining took {elapsed:.1f}s"
 
 
 def test_basket_cap_oracles_track_spark_constant():
-    """ADVICE r13 (medium): the six hot-basket-guard DuckDB duals derive
+    """The six hot-basket-guard DuckDB duals derive
     their cap from the ONE Spark-side constant at registration time —
     TPC-H data (<= 7 items/basket) can never surface a drift through
     parity, so pin the substitution structurally."""

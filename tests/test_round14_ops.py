@@ -1,5 +1,5 @@
-"""Round-14 tests: the ENFORCED int64 overflow guard for the
-pair-statistic family (VERDICT r13 item 5).
+"""Tests for the ENFORCED int64 overflow guard of the pair-statistic
+family.
 
 The guard (``extensions._stat_sum_type``) counts the base table (a
 metadata count) and promotes the exact integer moment/pair arithmetic to
@@ -143,7 +143,7 @@ def test_force_promote_values_match_long_path(
     0) and compare every column (exact for the integer columns, bit-equal
     for the rounded floats).
     This certifies the decimal path against the same DuckDB duals
-    transitively — the long path is driver-certified against them."""
+    transitively — the long path is parity-checked against them."""
     normal = QUERIES[name](spark, SF001).collect()
     for ceiling in (
         "_STAT_CEILING_SPEARMAN",
@@ -161,7 +161,7 @@ def test_force_promote_values_match_long_path(
             assert a == b, col
 
 
-# --- cross-shard incremental dedup (VERDICT r13 item 6) -----------------------
+# --- cross-shard incremental dedup -----------------------------------------
 
 
 def test_incremental_dedup_equals_full_recompute(spark):
@@ -270,11 +270,11 @@ def test_incremental_dedup_planted_batch(spark):
 
 
 def test_incremental_candidates_store_never_broadcast(spark, tmp_path):
-    """Direction contract (the r12/r13 corpus-broadcast killer): in the
-    candidate plan the STORE side must never sit under a
-    BroadcastExchange — the batch bucket keys are the broadcast side.
-    Parses the plan tree by indentation: no line inside any
-    BroadcastExchange subtree may reference the store parquet."""
+    """Direction contract (a corpus-sized broadcast exhausts driver
+    memory): in the candidate plan the STORE side must never sit under a
+    BroadcastExchange — the batch bucket keys are the broadcast side. Parses
+    the plan tree by indentation: no line inside any BroadcastExchange
+    subtree may reference the store parquet."""
     import os
 
     from pinterest_data_pipeline_spark.operators import dedup
@@ -509,14 +509,14 @@ def test_incremental_cluster_table_never_broadcast(spark, tmp_path):
             assert "cluster_table" not in ln, (
                 "live cluster-table scan under a BroadcastExchange:\n" + plan
             )
-    # and the broadcasts carry bounded LOCAL relations (r17: the under-cap
+    # and the broadcasts carry bounded LOCAL relations (the under-cap
     # path collects the pair/root sets once and ships sub/remap/fresh as
     # LocalRelations — nothing persisted, nothing corpus-scale broadcast)
     assert "LocalTableScan" in plan
 
 
 def test_incremental_cluster_driver_and_distributed_cc_agree(spark):
-    """The guarded degrade (r13 pattern): driver-side union-find under
+    """The guarded degrade: driver-side union-find under
     the cap and the distributed label-propagation fallback produce the
     same min-label answers on the same crafted graph."""
     from pinterest_data_pipeline_spark.operators import dedup

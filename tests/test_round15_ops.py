@@ -1,13 +1,12 @@
-"""Round-15 tests: size-guarded BATCH-side broadcasts in the
-incremental-store family (VERDICT r14 item 1).
+"""Tests for size-guarded BATCH-side broadcasts in the incremental-store
+family.
 
-The r14 births protected the STORE side contractually (never broadcast,
-never shuffled), but the arrival batch's endpoint/bucket/remap frames
-were wrapped in unconditional ``F.broadcast(...)`` — the r12
-driver-killer class one config away (a day's landing at 100 TB is not
-always broadcast-sized). The fix is the established self-enforcing
-pattern: count the batch-derived frame once, broadcast at or under
-``BATCH_BROADCAST_CAP`` rows, degrade to a sort-merge join above it.
+The STORE side is protected contractually (never broadcast, never
+shuffled); an unconditional ``F.broadcast(...)`` on the arrival batch's
+endpoint/bucket/remap frames would exhaust driver memory once a day's
+landing at 100 TB stops being broadcast-sized. The guard is the
+self-enforcing pattern: count the batch-derived frame once, broadcast
+at or under ``BATCH_BROADCAST_CAP`` rows, degrade to a sort-merge join above it.
 These tests pin the plan shape on BOTH sides of the cap and that the
 results are identical either way.
 """
@@ -74,7 +73,7 @@ class _no_auto_broadcast:
 
 
 def test_incremental_candidates_broadcast_guard_both_sides(spark, tmp_path):
-    """Below the cap the batch bucket keys broadcast (the r14 contract);
+    """Below the cap the batch bucket keys broadcast;
     with the cap forced to 0 the probe join degrades to sort-merge — NO
     BroadcastExchange anywhere in the plan — and the candidate set is
     identical."""
@@ -166,7 +165,7 @@ def test_incremental_cluster_update_broadcast_guard_both_sides(spark):
 
 
 def test_cached_store_params_token_invalidates(spark, tmp_path):
-    """ADVICE r14: _cached_store's fingerprint folds the BUILD PARAMETERS
+    """_cached_store's fingerprint folds the BUILD PARAMETERS
     in — changing an operator default rebuilds the store instead of
     silently serving a stale one from the work dir."""
     import shutil
@@ -198,7 +197,7 @@ def test_cached_store_params_token_invalidates(spark, tmp_path):
 
 
 def test_driver_union_find_collects_arrow_not_rows(spark):
-    """ADVICE r14: the under-cap CC path must collect the contracted
+    """The under-cap CC path must collect the contracted
     edges as Arrow columns (bounded, compact), not Row objects. Pinned
     behaviorally: the answer equals the distributed path on a chain that
     exercises path compression."""
@@ -214,7 +213,7 @@ def test_driver_union_find_collects_arrow_not_rows(spark):
     assert {r for r in _rows(fast) if r[0] == 115} == {(115, 100)}
 
 
-# --- IVF index compaction (r15 birth: the OPTIMIZE lifecycle step) -----------
+# --- IVF index compaction (the OPTIMIZE lifecycle step) --------------------
 
 
 def _ivf_fixture(spark, tmp_path, n_cells=8):
@@ -337,7 +336,7 @@ def test_ivf_compaction_rebalances_big_cells(spark, tmp_path):
         assert 1 <= len(files) <= math.ceil(n / 64)
 
 
-# --- incremental t-digest store refresh (r15 birth, sketch family) -----------
+# --- incremental t-digest store refresh (sketch family) --------------------
 
 
 def test_incremental_tdigest_merged_matches_scratch(spark):
@@ -450,7 +449,7 @@ def test_embedding_drift_planted_shift_ranks_first(spark, tmp_path, monkeypatch)
     assert by_dim[0]["abs_shift"] == 0.0
 
 
-# --- partitioned bucket-store layout (pulled-forward r16 candidate) ----------
+# --- partitioned bucket-store layout --------------------------------------
 
 
 def test_pruned_bucket_store_decisions_match_sig_store(spark, tmp_path):
@@ -480,7 +479,7 @@ def test_pruned_bucket_store_decisions_match_sig_store(spark, tmp_path):
 
 
 def test_pruned_bucket_store_scan_is_partition_pruned(spark, tmp_path):
-    """The arrival probe prunes the bucket-store scan STATICALLY (r16):
+    """The arrival probe prunes the bucket-store scan STATICALLY:
     the batch's touched (band, bh_part) set — bounded by the partition
     domain — is collected once and lands as a PartitionFilters predicate
     on the store scan, so only touched leaf directories are read. The
@@ -532,7 +531,7 @@ def test_pruned_bucket_store_scan_is_partition_pruned(spark, tmp_path):
     assert cands.count() > 0
 
 
-# --- incremental Misra-Gries store refresh (r15 birth) ------------------------
+# --- incremental Misra-Gries store refresh ---------------------------------
 
 
 def test_incremental_mg_merge_bound_and_size(spark):

@@ -1,6 +1,6 @@
-"""Round-16 tests: drift-triggered IVF centroid retrain + touched-cells
-index migration (VERDICT r15 item 1) and the read-path crash-recovery
-sweep (ADVICE r15).
+"""Tests for drift-triggered IVF centroid retrain + touched-cells index
+migration, the read-path crash-recovery sweep, bucket-store compaction
+and the streaming arrival paths of the incremental stores.
 
 The file-layout contracts no SQL dual can express live here:
 migrated-index rowset == from-scratch rebuild with the new centroids,
@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from pinterest_data_pipeline_spark.operators import similarity
@@ -169,14 +170,14 @@ def test_align_centroids_recovers_permutation():
 
 
 def test_open_partitions_recovers_mid_swap_cell_aside(spark, tmp_path):
-    """ADVICE r15: a reader opening an index left mid-swap (live cell dir
+    """A reader opening an index left mid-swap (live cell dir
     missing, ``_old_cell=N`` aside present) must see the FULL index —
     open_partitions runs the recovery sweep before reading. A plain
     parquet read of the same state is BROKEN until someone sweeps:
     Spark's partition inference sees ``_old_cell`` as a second partition
     column and fails with CONFLICTING_PARTITION_COLUMN_NAMES (measured —
-    loud, not the silent-partial-index failure ADVICE hypothesized, but
-    every reader is still down until a maintenance run happens by)."""
+    loud, not a silent partial index, but every reader is still down
+    until a maintenance run happens by)."""
     import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
@@ -197,7 +198,7 @@ def test_open_partitions_recovers_mid_swap_cell_aside(spark, tmp_path):
     assert not os.path.exists(os.path.join(path, "_old_cell=2"))
 
 
-# --- streaming arrival path for the incremental dedup store (r15 item 2) ----
+# --- streaming arrival path for the incremental dedup store ----------------
 
 from pinterest_data_pipeline_spark.operators import dedup
 from pinterest_data_pipeline_spark.plans.extensions import load_documents
@@ -317,7 +318,7 @@ def test_stream_store_replay_idempotent(spark, tmp_path):
     assert state() == first
 
 
-# --- bucket-store compaction (VERDICT r15 item 5) ---------------------------
+# --- bucket-store compaction -----------------------------------------------
 
 
 def _bucket_store(spark, tmp_path, name="bucket_store"):
@@ -451,7 +452,7 @@ def test_bucket_compact_decisions_identical(spark, tmp_path):
 
 
 def test_bucket_store_meta_sidecar(spark, tmp_path):
-    """ADVICE r15: the probe's bh_part modulus must be the n_parts the
+    """The probe's bh_part modulus must be the n_parts the
     store was BUILT with — a mismatch silently drops candidates (no
     error, decisions just change). The _BUCKET_STORE_META sidecar makes
     the layout travel with the store: open_bucket_store returns it,
@@ -503,7 +504,7 @@ def test_bucket_store_meta_sidecar(spark, tmp_path):
         dedup.open_bucket_store(spark, path)
 
 
-# --- streaming arrival paths: IVF upsert + KMV merge (r15 item 2) ------------
+# --- streaming arrival paths: IVF upsert + KMV merge ----------------------
 
 
 def _replay_crash(work):
@@ -552,6 +553,26 @@ def test_ivf_stream_delta_equals_batch_assign(spark, tmp_path):
         ),
     )
     assert _rowset(spark.read.parquet(os.path.join(work, "delta"))) == first
+
+
+@pytest.mark.parametrize("shape", ["all_empty", "mixed"])
+def test_ivf_stream_delta_with_empty_batches(spark, tmp_path, shape):
+    """An empty arrival is an ordinary micro-batch: its delta directory
+    holds no parquet file, and the roundtrip still returns the batch
+    assignment of the union of the arrivals, with the same columns."""
+    corpus = _corpus(spark)
+    empty = corpus.limit(0)
+    arrivals = [empty, empty] if shape == "all_empty" else [empty, corpus, empty]
+    work = os.path.join(str(tmp_path), "ivf_stream_empty")
+    delta = streaming.availablenow_ivf_upsert_roundtrip(
+        spark, work, arrivals, ANCHORS
+    )
+    union = arrivals[0]
+    for arr in arrivals[1:]:
+        union = union.unionByName(arr)
+    expected = similarity.ivf_assign_cells(union, ANCHORS)
+    assert delta.columns == expected.columns
+    assert _rowset(delta) == _rowset(expected)
 
 
 def test_kmv_stream_versions_equal_sequential_merges(spark, tmp_path):
@@ -605,7 +626,7 @@ def test_kmv_stream_versions_equal_sequential_merges(spark, tmp_path):
 
 
 def test_store_surgery_queries_rerun_in_session(spark):
-    """Regression (caught by the r16 bench's pre-warm + timed pass): a
+    """Regression (caught by a benchmark's pre-warm + timed pass): a
     query that rebuilds its work dir with OS-level copytree/rename must
     run twice in the SAME session with identical results — Spark's
     shared file-listing cache otherwise serves the first run's deleted
@@ -622,9 +643,9 @@ def test_store_surgery_queries_rerun_in_session(spark):
 
 
 def test_stream_upsert_compact_retrain_lifecycle(spark, tmp_path):
-    """End-to-end lifecycle: a stream-fed delta (r16 arrival) folds into
-    the base index, compaction (r15) merges the fragments, and a drift
-    retrain (r16) migrates the result — after all three maintenance
+    """End-to-end lifecycle: a stream-fed delta folds into
+    the base index, compaction merges the fragments, and a drift
+    retrain migrates the result — after all three maintenance
     verbs the index rowset equals a from-scratch rebuild of the full
     corpus under the final centroids."""
     corpus = _corpus(spark)

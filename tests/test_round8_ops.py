@@ -1,4 +1,4 @@
-"""Round-8 operator semantics + plan contracts: Bloom prefilter, KMV
+"""Operator semantics + plan contracts: Bloom prefilter, KMV
 sketch, changelog application, streaks — planted-case tests proving the
 properties the oracle battery certifies on real tables, plus the plan
 shapes that make each honest at 100 TB.

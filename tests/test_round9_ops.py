@@ -1,5 +1,5 @@
-"""Round-9 operators: t-digest quantile sketch, per-group weighted draws,
-IVFADC recall sweep, and the ADVICE-r8 sampling NULL-weight contract.
+"""t-digest quantile sketch, per-group weighted draws, IVFADC recall
+sweep, and the sampling NULL-weight contract.
 
 The t-digest tests pin the three properties the certification query's
 bound oracle cannot distinguish from luck: the centroid budget, the
@@ -121,7 +121,7 @@ def test_tdigest_grouped_quantile_per_group_rank(spark):
 
 
 def test_weighted_sample_null_weights_are_sampleable(spark):
-    """ADVICE r8: under three-valued logic a bare when(w <= 0) passed NULL
+    """Under three-valued logic a bare when(w <= 0) passes NULL
     weights through to a NULL sort key, silently un-sampling those rows.
     The contract is NULL -> weight 1.0: a NULL-weight row must win a seat
     exactly as often as an explicit weight-1.0 row with the same id."""
@@ -194,7 +194,7 @@ def test_recall_sweep_overlaps_pinned(spark):
 
 
 def test_rolling_wau_has_no_nested_loop_join(spark):
-    """VERDICT r8 item 2: the 7-day WAU expansion must be the constant
+    """The 7-day WAU expansion must be the constant
     explode(sequence) fan-out, never a BroadcastNestedLoopJoin of anchors
     x pairs (which degrades with the day horizon)."""
     df = analytics.QUERIES["events_rolling_active_users"](spark, SF)
@@ -372,7 +372,7 @@ def test_winnowing_guarantee_detects_long_shared_run(spark):
 
 
 def test_ivf_pq_index_artifact_is_exactly_id_cell_codes(spark):
-    """ADVICE r8: the IVFADC index frame must be strictly (id, cell,
+    """The IVFADC index frame must be strictly (id, cell,
     codes) — a full-precision vector column riding the index would ship
     every candidate's embedding through the ADC broadcast join at scale."""
     from pinterest_data_pipeline_spark.operators import similarity
@@ -435,7 +435,7 @@ def test_rolling_wau_kmv_plan_is_two_window_group_limits(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-# --- hot-key stress (VERDICT r8 item 5) -------------------------------------
+# --- hot-key stress --------------------------------------------------------
 
 
 def test_user_streaks_hot_key_completes_with_correct_output(spark):

@@ -44,8 +44,8 @@ def _rows(df, key="ind"):
 def _state_rows_total(q) -> int:
     """Sum of ``stateOperators[*].numRowsTotal`` from the query's LAST
     progress event — the engine's own report of rows held in state stores
-    (VERDICT r8 item 6: assert state bounds directly, not via timing or
-    output size). Works on both dict- and object-shaped progress."""
+    (state bounds are asserted directly, not via timing or output
+    size). Works on both dict- and object-shaped progress."""
     p = q.lastProgress
     if p is None:
         return 0
@@ -801,7 +801,7 @@ def test_incremental_cms_equals_batch_sketch(spark, tmp_path):
 
 
 def test_cms_soak_twenty_drains_bounded_state_and_exact(spark, tmp_path):
-    """VERDICT r7 item 5 — soak for the deliberately-watermark-free CMS:
+    """Soak for the deliberately-watermark-free CMS:
     twenty genuinely separate availableNow drains (each sees only its new
     file through the shared checkpoint) maintain the sketch, and after
     EVERY drain the materialized cell table stays inside its depth*width
@@ -839,7 +839,7 @@ def test_cms_soak_twenty_drains_bounded_state_and_exact(spark, tmp_path):
         )
         q.awaitTermination()
         assert spark.read.parquet(table_dir).count() <= 4 * 256
-        # direct state bound (VERDICT r8 item 6): the streaming aggregate's
+        # direct state bound: the streaming aggregate's
         # OWN state store — not just the materialized table — must stay
         # inside the depth*width construction bound at every drain
         assert _state_rows_total(q) <= 4 * 256

@@ -1,4 +1,4 @@
-"""Round-6 vector-compression / retrieval / compaction operator tests."""
+"""Vector-compression / retrieval / compaction operator tests."""
 
 from __future__ import annotations
 

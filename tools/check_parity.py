@@ -1,4 +1,4 @@
-"""Local stand-in for the driver's correctness gate.
+"""Correctness gate: every registry query against its DuckDB dual.
 
 Runs every ``queries()`` entry via Spark and its ``oracle_sql()`` dual via
 DuckDB on the same parquet, then compares row count, column names, and an
@@ -8,14 +8,13 @@ order-insensitive value representation. Usage:
 
 Exit code 0 iff every checked query matches.
 
-Oracle results are CACHED (VERDICT r11 item 7): the sf0.1 full sweep was
-~55 min, DuckDB-bound on the exhaustive dedup duals, which made tri-SF
-sweeps a once-per-round cost. The cache key is
-sha256(query name | oracle SQL text | sf_dir | parquet mtimes+sizes) —
-any edit to the oracle, a different SF, or regenerated testdata misses;
-Spark results are NEVER cached (they are the thing under test). Disable
-with SPARK_GRAFT_PARITY_NO_CACHE=1; cache lives in .parity_cache/
-(gitignored).
+Oracle results are CACHED: an uncached sf0.1 full sweep took ~55 min,
+DuckDB-bound on the exhaustive dedup duals. The cache key is
+sha256(CACHE_VERSION | query name | oracle SQL text | sf_dir | parquet
+mtimes+sizes) — any edit to the oracle, a different SF, or regenerated
+testdata misses; Spark results are NEVER cached (they are the thing under
+test). The cache lives in .parity_cache/ (gitignored); delete that
+directory to force every dual to rerun.
 """
 
 from __future__ import annotations
@@ -23,7 +22,6 @@ from __future__ import annotations
 import hashlib
 import json
 import math
-import os
 import sys
 from datetime import date, datetime
 from pathlib import Path
@@ -60,7 +58,7 @@ def _rowset(cols, rows):
 
 CACHE_DIR = Path(__file__).resolve().parent.parent / ".parity_cache"
 
-# Bump whenever _norm/_rowset normalization changes (ADVICE r12): the
+# Bump whenever _norm/_rowset normalization changes: the
 # cached oracle rowsets are stored POST-normalization, so a normalization
 # change would otherwise compare fresh Spark rowsets against stale cached
 # oracle rowsets — false PASS/FAIL until .parity_cache/ is hand-deleted.
@@ -77,24 +75,22 @@ def _data_fingerprint(sf_dir: str) -> str:
 
 def _oracle_rowset(con, name: str, sql: str, sf_dir: str):
     """(cols, rowset, n_rows) for the DuckDB dual, cached on disk."""
-    use_cache = os.environ.get("SPARK_GRAFT_PARITY_NO_CACHE") != "1"
     key = hashlib.sha256(
         f"v{CACHE_VERSION}\x1f{name}\x1f{sql}\x1f{sf_dir}\x1f"
         f"{_data_fingerprint(sf_dir)}".encode()
     ).hexdigest()
     cache_file = CACHE_DIR / f"{key}.json"
-    if use_cache and cache_file.exists():
+    if cache_file.exists():
         d = json.loads(cache_file.read_text())
         return d["cols"], d["rowset"], d["n"]
     cur = con.execute(sql)
     dcols = [d[0] for d in cur.description]
     drows = cur.fetchall()
     dset = _rowset(dcols, drows)
-    if use_cache:
-        CACHE_DIR.mkdir(exist_ok=True)
-        cache_file.write_text(
-            json.dumps({"cols": dcols, "rowset": dset, "n": len(drows)})
-        )
+    CACHE_DIR.mkdir(exist_ok=True)
+    cache_file.write_text(
+        json.dumps({"cols": dcols, "rowset": dset, "n": len(drows)})
+    )
     return dcols, dset, len(drows)
 
 

@@ -7,8 +7,8 @@ Runs every oracle_sql() dual through check_parity's cached rowset
 helper so a later full `check_parity.py` sweep is Spark-bound. Safe to
 kill and rerun — completed oracles are cached as they finish. Run it in
 tmux for a cold sf0.1 warm: the exhaustive dedup duals are single-core
-in DuckDB and the three worst take ~15-30 min EACH (~85 min total,
-measured round 12)."""
+in DuckDB and the three worst took ~15-30 min EACH in one measured cold
+warm (~85 min total)."""
 
 from __future__ import annotations
 
