@@ -330,16 +330,18 @@ def write_bucket_store(
     ``_BUCKET_STORE_META`` sidecar (underscore prefix: parquet readers
     ignore it) and reading it back via :func:`open_bucket_store` makes
     the layout travel with the store instead of being re-guessed at
-    every call site."""
+    every call site. The schema travels the same way
+    (:func:`~..sources.layout.write_partitioned`), so a store built from
+    no documents still opens."""
     import json as _json
     import os as _os
 
-    (
-        band_bucket_store(sigs, id_col, k, bands, n_parts)
-        .repartition("band", "bh_part")
-        .write.mode("overwrite")
-        .partitionBy("band", "bh_part")
-        .parquet(path)
+    layout.write_partitioned(
+        band_bucket_store(sigs, id_col, k, bands, n_parts).repartition(
+            "band", "bh_part"
+        ),
+        path,
+        ["band", "bh_part"],
     )
     with open(_os.path.join(path, BUCKET_STORE_META), "w") as fh:
         _json.dump({"n_parts": n_parts, "k": k, "bands": bands}, fh)
@@ -660,13 +662,13 @@ def incremental_minhash_dedup(
 # --- near-dup clustering (connected components) -----------------------------
 
 
-def _arrow_union_find(edges: DataFrame) -> list[tuple[int, int]]:
-    """Driver-side min-label union-find over a bounded (id_a, id_b) frame.
+def _arrow_union_find(edges) -> list[tuple[int, int]]:
+    """Driver-side min-label union-find over a collected (id_a, id_b)
+    Arrow table: ``(member_id, cluster_id)`` rows.
 
-    The caller MUST have verified the frame is under its row cap (the
-    self-enforcing count-gate discipline) — the collect here arrives as
-    TWO ARROW INT64 COLUMNS (~16 MB at the 1M-pair cap),
-    never Row objects. Union always points the larger root at the
+    The caller bounds the table (the self-enforcing count-gate
+    discipline) — it arrives as TWO ARROW INT64 COLUMNS (~16 MB at the
+    1M-pair cap), never Row objects. Union always points the larger root at the
     smaller, so every final ``find`` is the component MINIMUM — exactly
     the converged min-diffusion label.
 
@@ -680,9 +682,8 @@ def _arrow_union_find(edges: DataFrame) -> list[tuple[int, int]]:
     (NULL, NULL) row iff any NULL endpoint was seen (``distinct`` over
     edge sources collapses all NULLs to one node there).
     """
-    tbl = edges.toArrow()
     labels, saw_null = _union_find_min(
-        tbl.column("id_a").to_pylist(), tbl.column("id_b").to_pylist()
+        edges.column("id_a").to_pylist(), edges.column("id_b").to_pylist()
     )
     out = list(labels.items())
     if saw_null:
@@ -874,15 +875,8 @@ def cluster_pairs(
         # the whole loop on exactly the largest graphs.
         limited = pairs.select("id_a", "id_b").limit(driver_cc_cap + 1).toArrow()
         if limited.num_rows <= driver_cc_cap:
-            labels, saw_null = _union_find_min(
-                limited.column("id_a").to_pylist(),
-                limited.column("id_b").to_pylist(),
-            )
-            out = list(labels.items())
-            if saw_null:
-                out.append((None, None))
             return pairs.sparkSession.createDataFrame(
-                out or [], "member_id long, cluster_id long"
+                _arrow_union_find(limited), "member_id long, cluster_id long"
             )
     if reliable:
         sc = pairs.sparkSession.sparkContext
@@ -1068,28 +1062,18 @@ def incremental_cluster_update(
         .filter(F.col("id_a") != F.col("id_b"))
         .distinct()
     )
-    spark = new_pairs.sparkSession
-    if n_pairs <= driver_cc_cap:
-        # driver-side union-find: the collect is bounded by the cap the
-        # count just verified (shared kernel: _arrow_union_find —
-        # min-label semantics match cluster_pairs)
-        labels = _arrow_union_find(contracted)
-        sub = spark.createDataFrame(
-            labels or [], "member_id long, cluster_id long"
-        )
-    else:
-        # distributed branch consumes the contracted graph repeatedly —
-        # persist it there only (the driver branch reads it exactly once).
-        # The caller's cap threads through: cluster_pairs re-gates on the
-        # ACTUAL contracted-edge count (<= n_pairs, the conservative bound
-        # that routed us here), so a contraction that shrinks the batch
-        # graph back under the cap still solves driver-side — and a
-        # caller that pinned driver_cc_cap=0 stays fully distributed.
-        sub = cluster_pairs(
+    # cluster_pairs re-gates on the ACTUAL contracted-edge count (<=
+    # n_pairs), so a contraction that shrinks the batch graph under the
+    # caller's cap solves driver-side, and a caller that pinned
+    # driver_cc_cap=0 stays fully distributed. Its distributed loop reads
+    # the contracted graph once per round, hence the persist.
+    sub = persist_scoped(
+        cluster_pairs(
             persist_scoped(contracted, "incr_cc_contracted"), max_iters,
             driver_cc_cap=driver_cc_cap,
-        )
-    sub = persist_scoped(sub, "incr_cc_sub")
+        ),
+        "incr_cc_sub",
+    )
     # old members remap through the root-change map (keyed on their old
     # label: only old ROOTS appear as keys — new ids can never collide
     # with an old label because ids are globally unique)

@@ -686,6 +686,8 @@ def align_centroids(
             f"{len(new)} new) — retrain with the same n_cells to migrate "
             "in place; changing cell count is a full rebuild"
         )
+    if not new:  # an empty corpus trains no cells
+        return []
     o = np.asarray(old, dtype=np.float64)
     nw = np.asarray(new, dtype=np.float64)
     d = ((o[:, None, :] - nw[None, :, :]) ** 2).sum(axis=2)

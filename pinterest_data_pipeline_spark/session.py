@@ -23,6 +23,9 @@ its arguments and session on every call:
   by the next call under that scope or dropped by ``release_scoped``.
 * ``plans.extensions._cached_store`` work directories: on disk, rebuilt when
   the source parquet's size/mtime fingerprint or the build parameters change.
+  A store several queries share has one owner, the only code that names its
+  work dir: ``_ivf_cell_index``, ``_incr_sig_store`` and ``_incr_kmv_store``.
+  Each other store is defined in the one query that uses it.
 * Generated classes, in Spark's ``CodeGenerator`` cache: one per JVM, so it
   survives ``spark.stop()`` and a rebuilt session; it evicts in LRU order
   once it holds ``CODEGEN_CACHE_ENTRIES`` classes. The size is a static

@@ -458,6 +458,31 @@ def compact_zorder_incremental(spark, path: str, delta: DataFrame) -> dict:
 # ===========================================================================
 
 
+def write_partitioned(df: DataFrame, path: str, part_cols: list[str]) -> None:
+    """Overwrite ``path`` with ``df`` partitioned by ``part_cols``, and
+    stamp the store's schema into a Parquet ``_common_metadata`` summary.
+
+    ``partitionBy`` writes no file at all for an empty frame, and Spark
+    infers a store's schema from its files, so every later read of an
+    empty store would fail with UNABLE_TO_INFER_SCHEMA. The summary is
+    the schema travelling with the store: Spark's Parquet reader consults
+    it first and never reads it as data, and a file-copy of the store
+    carries it. Its columns are in the order a plain read returns them —
+    data columns, then ``part_cols`` — so a non-empty store reads back
+    exactly as before."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    df.write.mode("overwrite").partitionBy(*part_cols).parquet(path)
+    fields = {f.name: f for f in df.schema.fields}
+    order = [c for c in fields if c not in part_cols] + list(part_cols)
+    pq.write_metadata(
+        to_arrow_schema(StructType([fields[c] for c in order])),
+        os.path.join(path, "_common_metadata"),
+    )
+
+
 def swap_dir(staged: str, live: str, aside: str) -> None:
     """Replace directory ``live`` with ``staged``: the aside-and-swap commit.
 

@@ -531,13 +531,23 @@ def _drive_append(
 
 
 def _start_foreach_batch(
-    stream: DataFrame, apply_batch, checkpoint_dir: str, available_now: bool
+    sink: str,
+    store: str,
+    stream: DataFrame,
+    apply_batch,
+    checkpoint_dir: str,
+    available_now: bool,
 ):
     """Start ``stream`` into ``apply_batch(batch_df, batch_id)`` with its
     offsets checkpointed at ``checkpoint_dir``: the one writer set-up of
-    the ``foreachBatch`` sinks."""
+    the ``foreachBatch`` sinks. The query is named ``<sink>:<store>``
+    (the sink function and the directory it maintains), so its progress
+    records say what it writes, and a second query on the same store
+    cannot start while the first is active in the session (the sinks'
+    single-writer contract)."""
     writer = (
         stream.writeStream.foreachBatch(apply_batch)
+        .queryName(f"{sink}:{store}")
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -646,7 +656,9 @@ def upsert_sink(
         merged.write.mode("overwrite").parquet(tmp)
         layout.swap_dir(tmp, table_dir, old_dir)
 
-    return _start_foreach_batch(stream, apply_batch, checkpoint_dir, available_now)
+    return _start_foreach_batch(
+        "upsert_sink", table_dir, stream, apply_batch, checkpoint_dir, available_now
+    )
 
 
 def availablenow_upsert_roundtrip(
@@ -1084,7 +1096,7 @@ def incremental_dedup_store_sink(
             decisions.unpersist()
 
     return _start_foreach_batch(
-        stream_docs, apply_batch,
+        "incremental_dedup_store_sink", work_dir, stream_docs, apply_batch,
         checkpoint_dir or os.path.join(work_dir, "_checkpoint"), available_now,
     )
 
@@ -1184,7 +1196,7 @@ def ivf_stream_upsert_sink(
         )
 
     return _start_foreach_batch(
-        stream_vecs, apply_batch,
+        "ivf_stream_upsert_sink", work_dir, stream_vecs, apply_batch,
         checkpoint_dir or os.path.join(work_dir, "_checkpoint"), available_now,
     )
 
@@ -1262,7 +1274,7 @@ def kmv_stream_merge_sink(
         )
 
     return _start_foreach_batch(
-        stream_docs, apply_batch,
+        "kmv_stream_merge_sink", work_dir, stream_docs, apply_batch,
         checkpoint_dir or os.path.join(work_dir, "_checkpoint"), available_now,
     )
 

@@ -323,8 +323,8 @@ def test_incremental_store_fingerprint_cache(spark, tmp_path):
     dst = os.path.join(sf, "documents.parquet")
     (shutil.copytree if os.path.isdir(src) else shutil.copy2)(src, dst)
 
-    store = ext._work_dir(sf, "_incr_sig_store")
     QUERIES["dedup_incremental_batch"](spark, sf).count()
+    store = ext._incr_sig_store(spark, sf).path
     fp_file = os.path.join(store, "_SOURCE_FINGERPRINT")
     assert os.path.exists(fp_file)
     built_at = max(
@@ -351,6 +351,41 @@ def test_incremental_store_fingerprint_cache(spark, tmp_path):
     )
     assert rebuilt > built_at, "store not rebuilt after source change"
     shutil.rmtree(store, ignore_errors=True)
+
+
+def test_each_prebuilt_store_has_one_owner():
+    """A prebuilt store's definition (split, build parameters, schema and
+    ``_cached_store`` key) lives in one function: every store name that
+    ``plans/extensions.py`` hands to ``_cached_store`` appears as a
+    literal in exactly one of its top-level functions, so two copies of
+    a definition cannot drift apart and serve each other's bytes."""
+    import ast
+    from pathlib import Path
+
+    from pinterest_data_pipeline_spark.plans import extensions as ext
+
+    tree = ast.parse(Path(ext.__file__).read_text())
+    calls = [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_cached_store"
+    ]
+    assert all(isinstance(c.args[2], ast.Constant) for c in calls)
+    stores = {c.args[2].value for c in calls}
+    assert {"_ivf_cell_index", "_incr_sig_store", "_incr_kmv_store"} <= stores
+    funcs = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+    owners = {
+        store: [
+            f.name
+            for f in funcs
+            if any(
+                isinstance(n, ast.Constant) and n.value == store
+                for n in ast.walk(f)
+            )
+        ]
+        for store in stores
+    }
+    assert {s: o for s, o in owners.items() if len(o) != 1} == {}
 
 
 # --- incremental IVF index upsert (the ANN incremental twin) ------------------
@@ -416,7 +451,7 @@ def test_ivf_upsert_index_scan_is_partition_pruned(spark):
     QUERIES["ann_ivf_incremental_upsert"](spark, SF001).collect()  # build index
     from pinterest_data_pipeline_spark.plans import extensions as ext
 
-    index_path = ext._work_dir(SF001, "_ivf_cell_index")
+    index_path = ext._ivf_cell_index(spark, SF001).path
     assert any(f.startswith("cell=") for f in os.listdir(index_path))
     df = QUERIES["ann_ivf_incremental_upsert"](spark, SF001)
     plan = df._jdf.queryExecution().executedPlan().toString()

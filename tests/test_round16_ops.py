@@ -303,6 +303,7 @@ def test_stream_store_replay_idempotent(spark, tmp_path):
     q = streaming.incremental_dedup_store_sink(
         stream, work, base_sigs, base_docs, available_now=True
     )
+    assert q.name == f"incremental_dedup_store_sink:{work}"
     q.awaitTermination()
     assert state() == first
     # clean restart: no new files, no new batches, nothing changes

@@ -364,6 +364,7 @@ def test_upsert_sink_latest_per_key_wins(spark, tmp_path):
             keys=["id"],
             available_now=True,
         )
+        assert q.name == f"upsert_sink:{table}"
         q.awaitTermination(120)
         return {r.id: r.val for r in spark.read.parquet(table).collect()}
 
